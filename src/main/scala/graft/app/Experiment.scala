@@ -23,7 +23,6 @@ object Experiment {
       fitness: FitnessConfig = FitnessConfig(),
       bbha: Bbha.Config = Bbha.Config(),
       numberOfWorkers: Int = 0, // 0 = use defaultParallelism
-      useBroadcast: Boolean = true,
       algorithm: Int = 1) // 0 = blind search (exhaustive), 1 = BBHA
 
   case class Result(

@@ -11,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   * resolve under DATASETS_PATH and results under RESULTS_PATH
   * (utils.py:7, core.py:140-147), defaulting to /var/data and
   * /var/results like the reference's Dockerfile.
+  *
+  * The expression matrix is always broadcast once per experiment, so the
+  * reference's `--use-broadcast` has no setting here; like any flag this
+  * parser does not know, it is accepted and ignored.
   */
 object Main {
 
@@ -58,7 +62,6 @@ object Main {
           case None => Some(0.6)
         }),
       numberOfWorkers = a.getOrElse("number-of-workers", "0").toInt,
-      useBroadcast = a.getOrElse("use-broadcast", "true") == "true",
       algorithm = a.getOrElse("algorithm", "1").toInt)
   }
 

@@ -14,9 +14,8 @@ import org.apache.spark.broadcast.Broadcast
   *  - Some(map): learned-load-balancer bin assignment
   *    (metaheuristics.py:156-166, 277-285 → dist.LoadBalancer here).
   *
-  * This is the one operator kept on the RDD API: the Dataset API exposes
-  * no user-defined partitioner, and the whole point is exact star→worker
-  * placement (SURVEY §4.2, §7.3).
+  * The whole point is exact star→worker placement (SURVEY §4.2, §7.3);
+  * `FitnessExecutor` applies it on the driver, before `parallelize`.
   */
 class StarPartitioner(numWorkers: Int, nStars: Int,
     assignment: Option[Map[Int, Int]]) extends Partitioner {
@@ -30,16 +29,23 @@ class StarPartitioner(numWorkers: Int, nStars: Int,
   }
 }
 
-/** Fans one population's fitness evaluation out across the cluster:
-  * `parallelize → partitionBy(StarPartitioner) → mapPartitions → collect`
-  * (/root/reference/scripts/metaheuristics.py:225-304).
+/** Fans one population's fitness evaluation out across the cluster
+  * (the reference's metaheuristics.py:225-304).
+  *
+  * Placement happens on the driver: each star goes to the group
+  * `StarPartitioner.getPartition(idx)`, and the `numWorkers` groups are
+  * parallelized in `numWorkers` slices, so group i is exactly partition
+  * i. The RDD API is kept because it pins each star to the partition the
+  * placement chose (the Dataset API exposes no partition choice); doing
+  * the placement before `parallelize` instead of with `partitionBy` makes
+  * each round one stage of `numWorkers` tasks with no shuffle.
   *
   * All of a partition's stars run serially inside one task so each
   * single-node kernel can use the worker's cores
   * (metaheuristics.py:292-299 note) — configured via `spark.task.cpus`
   * instead of the reference's FileLock (SURVEY §2.2: JVM needs no
-  * process isolation or lock file). Only (idx, mask) pairs move in the
-  * shuffle; the expression matrix ships once as a Broadcast.
+  * process isolation or lock file). Only (idx, mask) pairs ship with the
+  * tasks; the expression matrix ships once as a Broadcast.
   */
 class FitnessExecutor(sc: SparkContext, numWorkers: Int,
     fitness: (Array[Boolean], Int) => FitnessResult,
@@ -58,11 +64,13 @@ class FitnessExecutor(sc: SparkContext, numWorkers: Int,
       case None => (None, stars.map(s => s.idx -> -1.0).toMap)
     }
     val start = System.nanoTime()
-    val results = sc.parallelize(stars.map(s => (s.idx, s.mask)), numWorkers)
-      .partitionBy(new StarPartitioner(numWorkers, nStars, assignment))
-      .mapPartitions(iter => iter.map { case (idx, mask) =>
+    val partitioner = new StarPartitioner(numWorkers, nStars, assignment)
+    val groups = Array.fill(numWorkers)(Array.newBuilder[(Int, Array[Int])])
+    stars.foreach(s => groups(partitioner.getPartition(s.idx)) += s.idx -> s.mask)
+    val results = sc.parallelize(groups.map(_.result()).toSeq, numWorkers)
+      .mapPartitions(_.flatMap(_.iterator.map { case (idx, mask) =>
         (idx, fitnessFn(mask.map(_ == 1), TaskContext.getPartitionId()))
-      }, preservesPartitioning = true)
+      }))
       .collect()
     val totalTime = (System.nanoTime() - start) / 1e9
     // The reference indexes collected results positionally, which only

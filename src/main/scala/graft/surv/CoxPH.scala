@@ -23,7 +23,11 @@ object CoxPH {
   case class Fit(beta: Array[Double], logLik: Double, iterations: Int,
       converged: Boolean)
 
-  /** Newton–Raphson on the partial likelihood.
+  /** Newton–Raphson on the partial likelihood. The survival-time order
+    * depends only on `y`, so it is computed once per fit and shared by
+    * every gradient and line-search evaluation; the loops and their
+    * summation order are those of the public functions, so the fit is
+    * bit-identical to recomputing the order at each call.
     * @param x n×p covariate matrix
     * @param ties "efron" (lifelines default) | "breslow"
     */
@@ -32,18 +36,19 @@ object CoxPH {
     val n = x.length
     val p = if (n == 0) 0 else x(0).length
     val beta = new Array[Double](p)
-    var ll = logLikelihood(x, y, beta, ties)
+    val order = timeOrder(x, y)
+    var ll = logLikelihood(x, y, beta, ties, order)
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      val (grad, hess) = gradHess(x, y, beta, ties)
+      val (grad, hess) = gradHess(x, y, beta, ties, order)
       // solve hess * delta = grad  (hess is the negative Hessian, p.d.)
       val delta = solve(hess, grad)
       var step = 1.0
       var improved = false
       while (step > 1e-4 && !improved) { // halving line search (lifelines-style)
         val cand = Array.tabulate(p)(k => beta(k) + step * delta(k))
-        val candLl = logLikelihood(x, y, cand, ties)
+        val candLl = logLikelihood(x, y, cand, ties, order)
         // a full Newton step on a separation-prone fit overflows exp(eta)
         // → candLl NaN/-Inf; treat exactly like a likelihood decrease and
         // halve, so beta only ever moves to finite, non-worse points
@@ -69,10 +74,17 @@ object CoxPH {
     * where S₀ sums exp(η) over the risk set and T₀ over the tied events.
     */
   def logLikelihood(x: Array[Array[Double]], y: Array[Clinical],
-      beta: Array[Double], ties: String = "efron"): Double = {
+      beta: Array[Double], ties: String = "efron"): Double =
+    logLikelihood(x, y, beta, ties, timeOrder(x, y))
+
+  /** Sample indices by ascending time; stable, so tied times keep index order. */
+  private def timeOrder(x: Array[Array[Double]], y: Array[Clinical]): Array[Int] =
+    (0 until x.length).sortBy(i => y(i).time).toArray
+
+  private def logLikelihood(x: Array[Array[Double]], y: Array[Clinical],
+      beta: Array[Double], ties: String, order: Array[Int]): Double = {
     val n = x.length
     val eta = Array.tabulate(n)(i => dot(x(i), beta))
-    val order = (0 until n).sortBy(i => y(i).time).toArray
     var ll = 0.0
     var k = n - 1
     var riskSum = 0.0
@@ -116,11 +128,15 @@ object CoxPH {
     * every moment: Z_j = S − (j/d)·T, with per-j weighted means.
     */
   private[graft] def gradHess(x: Array[Array[Double]], y: Array[Clinical],
-      beta: Array[Double], ties: String): (Array[Double], Array[Array[Double]]) = {
+      beta: Array[Double], ties: String): (Array[Double], Array[Array[Double]]) =
+    gradHess(x, y, beta, ties, timeOrder(x, y))
+
+  private def gradHess(x: Array[Array[Double]], y: Array[Clinical],
+      beta: Array[Double], ties: String,
+      order: Array[Int]): (Array[Double], Array[Array[Double]]) = {
     val n = x.length
     val p = beta.length
     val eta = Array.tabulate(n)(i => dot(x(i), beta))
-    val order = (0 until n).sortBy(i => y(i).time).toArray
     val grad = new Array[Double](p)
     val hess = Array.ofDim[Double](p, p)
     var s0 = 0.0

@@ -139,6 +139,26 @@ class CoxPHSpec extends AnyFunSuite {
     assert(fit.beta.forall(b => !b.isNaN && !b.isInfinite), s"non-finite beta ${fit.beta.toSeq}")
     assert(fit.logLik >= CoxPH.logLikelihood(xs, ys, Array(0.0)))
   }
+
+  test("fit's log-likelihood is bit-identical to logLikelihood at its beta") {
+    def exact(xs: Array[Array[Double]], ys: Array[Clinical], ties: String): CoxPH.Fit = {
+      val fit = CoxPH.fit(xs, ys, ties = ties)
+      assert(fit.logLik == CoxPH.logLikelihood(xs, ys, fit.beta, ties), s"$ties fit $fit")
+      fit
+    }
+    exact(x, y, "efron") // untied
+    val tiedX = Array(0, 0, 0, 1, 1, 1, 0, 1).map(g => Array(g.toDouble))
+    val tiedY = Array(
+      Clinical(true, 5), Clinical(true, 5), Clinical(false, 8), Clinical(true, 2),
+      Clinical(true, 2), Clinical(true, 3), Clinical(true, 6), Clinical(false, 4))
+    exact(tiedX, tiedY, "efron")
+    exact(tiedX, tiedY, "breslow")
+    val n = 40 // the separation-prone case above
+    val sepX = Array.tabulate(n)(i => Array(i.toDouble))
+    val sepY = Array.tabulate(n)(i => Clinical(event = true, time = (n - i).toDouble))
+    val sep = exact(sepX, sepY, "efron")
+    assert(sep.iterations >= 10, s"separation fit ran only ${sep.iterations} iterations")
+  }
 }
 
 class KMeansLocalSpec extends AnyFunSuite {
