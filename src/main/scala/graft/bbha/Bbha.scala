@@ -14,6 +14,8 @@ case class Star(idx: Int, mask: Array[Int]) {
 
 /** Result of one fitness fan-out: per-star results (sorted by star index)
   * and the wall time of the distribute+compute+collect round.
+  * `predictedTimes` is empty from `FitnessExecutor`; a star without an
+  * entry reports −1.0, the reference's no-balancer value.
   */
 case class EvalRound(results: Array[(Int, FitnessResult)], totalTime: Double,
     predictedTimes: Map[Int, Double])
@@ -52,7 +54,10 @@ object Bbha {
       nIterations: Int = 30,
       moreIsBetter: Boolean = true,
       randomState: Option[Long] = None,
-      binaryThreshold: Option[Double] = Some(0.6))
+      binaryThreshold: Option[Double] = Some(0.6)) {
+    require(nStars >= 1, s"n-stars must be at least 1, got $nStars")
+    require(nIterations >= 0, s"bbha-iterations must be at least 0, got $nIterations")
+  }
 
   case class Outcome(bestMask: Array[Int], bestFitness: Double,
       bestData: FitnessResult, metrics: Map[String, Any])

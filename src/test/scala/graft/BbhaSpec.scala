@@ -1,7 +1,8 @@
 package graft
 
 import graft.bbha.{Bbha, EvalRound, Star}
-import graft.dist.{LoadBalancer, StarPartitioner}
+import graft.app.Main
+import graft.dist.FitnessExecutor
 import graft.fitness.{Fitness, FitnessConfig, FitnessResult}
 import graft.surv.Clinical
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,6 +76,17 @@ class BbhaSpec extends AnyFunSuite {
     assert(a.toSeq == b.toSeq)
   }
 
+  test("a bad n-stars or bbha-iterations fails in Main.buildConfig, named") {
+    val required = Map("app-name" -> "a", "molecules-dataset" -> "m.tsv",
+      "clinical-dataset" -> "c.tsv")
+    for ((key, value) <- Seq("n-stars" -> "0", "bbha-iterations" -> "-1")) {
+      val e = intercept[IllegalArgumentException] {
+        Main.buildConfig(required + (key -> value))
+      }
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
+  }
+
   test("mask distance is sqrt of hamming") {
     assert(Bbha.maskDistance(Array(1, 0, 1), Array(0, 0, 1)) == 1.0)
     assert(Bbha.maskDistance(Array(1, 1, 1), Array(0, 0, 0)) == math.sqrt(3))
@@ -138,26 +150,10 @@ class FitnessSpec extends AnyFunSuite {
 
 class PartitionerSpec extends AnyFunSuite {
   test("fallback partitioner matches key * W // n (contiguous blocks)") {
-    val p = new StarPartitioner(3, 30, None)
+    val p = (k: Int) => FitnessExecutor.partitionOf(k, 3, 30)
     for (k <- 0 until 30)
-      assert(p.getPartition(k) == k * 3 / 30)
-    assert((0 until 30).map(p.getPartition).distinct == Seq(0, 1, 2))
-  }
-
-  test("bin packing conserves stars and respects bin count") {
-    val times = (0 until 17).map(i => i -> (i % 5 + 1).toDouble).toMap
-    val assign = LoadBalancer.binPack(times, 4)
-    assert(assign.keySet == times.keySet)
-    assert(assign.values.forall(b => b >= 0 && b < 4))
-    // LPT balance: max load ≤ 4/3 OPT + small slack; here just sanity
-    val loads = assign.groupBy(_._2).view
-      .mapValues(_.keys.map(times).sum).toMap
-    assert(loads.values.max - loads.values.min <= 5.0)
-  }
-
-  test("balancer assignment partitioner uses the map") {
-    val p = new StarPartitioner(2, 4, Some(Map(0 -> 1, 1 -> 0, 2 -> 1, 3 -> 0)))
-    assert(p.getPartition(0) == 1 && p.getPartition(3) == 0)
+      assert(p(k) == k * 3 / 30)
+    assert((0 until 30).map(p).distinct == Seq(0, 1, 2))
   }
 }
 

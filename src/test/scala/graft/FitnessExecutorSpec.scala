@@ -1,7 +1,7 @@
 package graft
 
 import graft.bbha.Star
-import graft.dist.{FitnessExecutor, LoadBalancer, StarPartitioner}
+import graft.dist.FitnessExecutor
 import graft.fitness.FitnessResult
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
@@ -13,9 +13,9 @@ import scala.collection.mutable
 class FitnessExecutorSpec extends AnyFunSuite {
   lazy val sc: SparkContext = SparkTestSession.spark.sparkContext
   val numWorkers = 4
-  val nStars = 10
-  // reversed, so sorting the results by star index is not a no-op
-  val stars: Array[Star] = Array.tabulate(nStars)(i =>
+
+  /** `n` stars, reversed, so sorting the results by star index is not a no-op. */
+  def starsOf(n: Int): Array[Star] = Array.tabulate(n)(i =>
     Star(i, Array.tabulate(6)(j => if (j <= i % 6) 1 else 0))).reverse
 
   /** Echoes the task's partition id and the mask's feature count. */
@@ -54,8 +54,12 @@ class FitnessExecutorSpec extends AnyFunSuite {
     }
   }
 
-  private def checkRound(executor: FitnessExecutor, tag: String,
-      expectedPartition: Int => Int): Unit = {
+  /** Runs one round over `stars`, tagged `tag`, and checks that every
+    * star's result comes from partition `idx * W / n` and that the round is
+    * one job of one stage with one task per worker and no shuffle.
+    */
+  private def checkRound(stars: Array[Star], tag: String): Unit = {
+    val executor = new FitnessExecutor(sc, numWorkers, echo)
     val listener = new RoundListener(tag)
     sc.addSparkListener(listener)
     sc.setLocalProperty(RoundKey, tag)
@@ -65,9 +69,11 @@ class FitnessExecutorSpec extends AnyFunSuite {
     listener.awaitJobsEnded()
     sc.removeSparkListener(listener)
 
+    val nStars = stars.length
     assert(round.results.map(_._1).toSeq == (0 until nStars))
     round.results.foreach { case (idx, r) =>
-      assert(r.partitionId == expectedPartition(idx), s"star $idx")
+      assert(r.partitionId == FitnessExecutor.partitionOf(idx, numWorkers, nStars),
+        s"star $idx")
       assert(r.nFeatures == stars.find(_.idx == idx).get.nSelected)
     }
     listener.synchronized {
@@ -81,23 +87,12 @@ class FitnessExecutorSpec extends AnyFunSuite {
   }
 
   test("fallback placement: contiguous blocks, one stage, no shuffle") {
-    val placement = new StarPartitioner(numWorkers, nStars, None)
-    checkRound(new FitnessExecutor(sc, numWorkers, echo), "fallback",
-      idx => placement.getPartition(idx))
+    checkRound(starsOf(10), "fallback")
   }
 
-  test("balancer placement with an empty bin: exact bins, one task per worker") {
-    // LPT: star 5 → bin 0, star 2 → bin 1, every zero-time star → bin 2,
-    // so bin 3 stays empty
-    val times = stars.map(s => s.idx -> (s.idx match {
-      case 5 => 3.0
-      case 2 => 2.0
-      case _ => 0.0
-    })).toMap
-    val bins = LoadBalancer.binPack(times, numWorkers)
-    assert(!bins.values.toSet.contains(3), s"bins $bins")
-    val placement = new StarPartitioner(numWorkers, nStars, Some(bins))
-    checkRound(new FitnessExecutor(sc, numWorkers, echo, Some(_ => times)), "balancer",
-      idx => placement.getPartition(idx))
+  test("fewer stars than workers: the empty partition still runs as a task") {
+    // 3 stars on 4 workers land on partitions 0, 1 and 2; partition 3 is empty
+    assert((0 until 3).map(FitnessExecutor.partitionOf(_, numWorkers, 3)) == Seq(0, 1, 2))
+    checkRound(starsOf(3), "empty-partition")
   }
 }
