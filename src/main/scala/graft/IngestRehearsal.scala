@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ingest-decontamination rehearsal (r15 verdict, directives 1–2):
@@ -36,8 +36,9 @@ import org.apache.spark.sql.functions._
   *    the SET, only for verdict equivalence, which StreamingSpec
   *    pins).
   *
-  * Args: dataDir k [outFile] [shufflePartitions=32] [stream=0]
-  * [store=lc]
+  * Args: dataDir k [outFile] [shufflePartitions=cpus] [stream=0]
+  * [store=lc], where `cpus` is `SPARK_GRAFT_CPUS` (default 32); the
+  * session is [[Measure.session]].
   *
   * Build-order caveat (r16 ADVICE): leg 1 (snapshot build) runs cold
   * and leg 2 (maintainer build) reads the same standing parquet
@@ -84,35 +85,16 @@ import org.apache.spark.sql.functions._
 object IngestRehearsal {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
-      "usage: IngestRehearsal dataDir k [outFile] [shuffleParts] [stream] [store]")
+      "usage: IngestRehearsal dataDir k [outFile] [shufflePartitions] " +
+        "[stream] [store]")
     val dataDir = args(0)
     val k = args(1).toInt
-    val shuffleParts = if (args.length > 3) args(3).toInt else 32
     val streamMode = if (args.length > 4) args(4).toInt else 0
     val storeMode = if (args.length > 5) args(5) else "lc"
     require(storeMode == "lc" || storeMode == "bucketed",
       s"store must be lc|bucketed, got $storeMode")
-    val codec = sys.env.get("SPARK_GRAFT_CODEC")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-    codec.foreach(c => builder.config("spark.io.compression.codec", c))
-    val spark = builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.suppressBoundedWindowWarning()
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val spark = Measure.session(args.lift(3).map(_.toInt))
+    import Measure.{obj, r3, timed}
 
     val docs = Tables.documents(spark, dataDir)
       .select(col("doc_id"), col("text"))
@@ -164,10 +146,6 @@ object IngestRehearsal {
     }
     require(mismatches == 0L,
       s"maintained train-fp set diverged from from-scratch: $mismatches fps")
-
-    def seriesJson(name: Int => String, v: Seq[(Int, Double)]): String =
-      v.map { case (i, s) => "\"" + name(i) + "\":" + r3(s) }
-        .mkString("{", ",", "}")
 
     // the snapshot operator's own per-trigger cost: the real streaming
     // query, one timed processAllAvailable per shard
@@ -239,15 +217,12 @@ object IngestRehearsal {
         s"stream verdicts $nStream != maintainer verdicts $nVerdicts")
       s""","stream_harness":${if (streamMode == 1) "\"memory\"" else "\"files\""},""" +
         s""""stream_snapshot_build_s":${r3(snapS2)},""" +
-        s""""stream_triggers":${seriesJson(i => s"trig$i", triggers)},""" +
+        s""""stream_triggers":${obj(triggers.map { case (i, s) => s"trig$i" -> s })},""" +
         s""""stream_flush_s":${r3(flushS)},"n_stream_verdicts":$nStream"""
     }
-    val dropsJson = seriesJson(i => s"drop$i",
-      dropRows.map(r => (r._1, r._2)))
-    val probesJson = seriesJson(i => s"probe$i",
-      dropRows.map(r => (r._1, r._3)))
-    val normJson = seriesJson(i => s"norm$i",
-      dropRows.map(r => (r._1, r._2 / r._3)))
+    val dropsJson = obj(dropRows.map(r => s"drop${r._1}" -> r._2))
+    val probesJson = obj(dropRows.map(r => s"probe${r._1}" -> r._3))
+    val normJson = obj(dropRows.map(r => s"norm${r._1}" -> r._2 / r._3))
     val rowsJson = dropRows
       .map { case (i, _, _, n) => s""""rows$i":$n""" }
       .mkString("{", ",", "}")
@@ -260,10 +235,7 @@ object IngestRehearsal {
       s""""drop_rows":$rowsJson,"n_verdicts":$nVerdicts,""" +
       s""""verify_fp_mismatches":$mismatches,""" +
       s""""verify_s":${r3(verifyS)}$streamJson}"""
-    if (args.length > 2)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(args(2)), out + "\n")
-    println(out)
+    Measure.emit(out, args.lift(2))
     spark.stop()
   }
 }

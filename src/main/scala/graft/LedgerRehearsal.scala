@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multi-drop ledger rehearsal (r15, round-14 verdict directive 4):
@@ -18,8 +17,9 @@ import org.apache.spark.sql.functions._
   *    algebra, executed at rehearsal scale via the maintainer's
   *    audit-edge log).
   *
-  * Args: dataDir k [outFile] [shufflePartitions=32] [audit=1]
-  * [store=lc] [nBuckets=64] [dropDocs=0]
+  * Args: dataDir k [outFile] [shufflePartitions=cpus] [audit=1]
+  * [store=lc] [nBuckets=64] [dropDocs=0], where `cpus` is
+  * `SPARK_GRAFT_CPUS` (default 32); the session is [[Measure.session]].
   *
   * With `store=bucketed` (r16 verdict, directive 1) the maintainer's
   * capped postings live as an fp-hash-bucketed parquet table under a
@@ -66,37 +66,18 @@ import org.apache.spark.sql.functions._
   */
 object LedgerRehearsal {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: LedgerRehearsal dataDir k [outFile] [shuffleParts] [audit] [store]")
+    require(args.length >= 2, "usage: LedgerRehearsal dataDir k [outFile] " +
+      "[shufflePartitions] [audit] [store] [nBuckets] [dropDocs]")
     val dataDir = args(0)
     val k = args(1).toInt
-    val shuffleParts = if (args.length > 3) args(3).toInt else 32
     val audit = if (args.length > 4) args(4) != "0" else true
     val storeMode = if (args.length > 5) args(5) else "lc"
     require(storeMode == "lc" || storeMode == "bucketed",
       s"store must be lc|bucketed, got $storeMode")
     val nBuckets = if (args.length > 6) args(6).toInt else 64
     val dropDocs = if (args.length > 7) args(7).toLong else 0L
-    val codec = sys.env.get("SPARK_GRAFT_CODEC")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-    codec.foreach(c => builder.config("spark.io.compression.codec", c))
-    val spark = builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.suppressBoundedWindowWarning()
-
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val spark = Measure.session(args.lift(3).map(_.toInt))
+    import Measure.{obj, r3, timed}
 
     val docs = Tables.documents(spark, dataDir)
       .select(col("doc_id"), col("text"))
@@ -159,15 +140,9 @@ object LedgerRehearsal {
         s""","verify_mismatches":$mismatches,"verify_s":${r3(vs)}"""
       }
 
-    val dropsJson = dropRows
-      .map { case (i, s, _) => "\"drop" + i + "\":" + r3(s) }
-      .mkString("{", ",", "}")
-    val probesJson = dropRows
-      .map { case (i, _, p) => "\"probe" + i + "\":" + r3(p) }
-      .mkString("{", ",", "}")
-    val normJson = dropRows
-      .map { case (i, s, p) => "\"norm" + i + "\":" + r3(s / p) }
-      .mkString("{", ",", "}")
+    val dropsJson = obj(dropRows.map { case (i, s, _) => s"drop$i" -> s })
+    val probesJson = obj(dropRows.map { case (i, _, p) => s"probe$i" -> p })
+    val normJson = obj(dropRows.map { case (i, s, p) => s"norm$i" -> s / p })
     // audit runs carry the edge-log checkpoint INSIDE each timed drop
     // (the log re-materializes per merge), so their drop numbers are
     // audit-shape, not production-shape — run audit=0 for the flatness
@@ -179,10 +154,7 @@ object LedgerRehearsal {
       s""""audit":$audit,"standing_build_s":${r3(buildS)},""" +
       s""""drops":$dropsJson,"probes":$probesJson,""" +
       s""""drops_norm":$normJson,"n_ledger_rows":$nLedger$verify}"""
-    if (args.length > 2)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(args(2)), out + "\n")
-    println(out)
+    Measure.emit(out, args.lift(2))
     spark.stop()
   }
 }

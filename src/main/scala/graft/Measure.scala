@@ -1,0 +1,67 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one session builder for the measurement mains ([[ScaleBench]],
+  * [[PlanDump]], [[ScaleUp]], [[IngestRehearsal]], [[LedgerRehearsal]])
+  * and their shared timing helpers. The session matches [[Bench]]'s:
+  * `local[cpus]` with `cpus` from `SPARK_GRAFT_CPUS` (default 32), AQE
+  * with partition coalescing, UTC, no UI — so an sf1/sf10 rehearsal
+  * runs on the same core count as the bench it is compared to.
+  *
+  * `SPARK_GRAFT_CODEC` sets the spill/shuffle codec for disk-bound
+  * rehearsals: the sf1000 pair-join shuffle is ~3.5B slim long rows —
+  * zstd compresses them ~2× over lz4 and is the difference between
+  * fitting the box's free disk and not. On a cluster the same conf
+  * trades shuffle CPU for network/disk bytes; the round bench keeps lz4
+  * (Spark default) so BENCH_r{N} numbers stay comparable.
+  */
+object Measure {
+  /** The builder's settings as data, so a spec can pin them without
+    * `getOrCreate` (which returns whatever session the JVM already has).
+    * Shuffle partitions default to `cpus`.
+    */
+  def settings(cpus: Int, shufflePartitions: Option[Int],
+      codec: Option[String]): Seq[(String, String)] =
+    Seq(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" ->
+        shufflePartitions.getOrElse(cpus).toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false") ++
+      codec.map("spark.io.compression.codec" -> _)
+
+  def session(shufflePartitions: Option[Int] = None): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = settings(cpus, shufflePartitions,
+        sys.env.get("SPARK_GRAFT_CODEC"))
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    Bench.suppressBoundedWindowWarning()
+    spark
+  }
+
+  def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** 3 decimal places; Locale.ROOT: never a decimal comma. */
+  def r3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** A JSON object of numbers at [[r3]] grain. */
+  def obj(kv: Seq[(String, Double)]): String =
+    kv.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+
+  /** Print the result line and write it to `outFile`, if given. */
+  def emit(json: String, outFile: Option[String]): Unit = {
+    outFile.foreach(f =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(f), json + "\n"))
+    println(json)
+  }
+}

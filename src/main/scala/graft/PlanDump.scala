@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round instrumentation: dump `.explain("formatted")` for
@@ -9,29 +8,19 @@ import java.nio.file.{Files, Paths}
   * (optimization guide §1: capture the plan shape — Exchange count, join
   * strategy, PushedFilters/ReadSchema — before and after each change).
   *
-  * Args: dataDir namesCsv outDir suffix. Session config mirrors
-  * [[Bench]] (same shuffle partitions, AQE) so the dumped plan is the
-  * plan the bench actually runs. Queries whose body runs driver-side
-  * actions (asset builds, iterative fixpoints) execute them here too —
-  * the dump is the FINAL returned frame's plan, which is what the timed
-  * `.count()` consumes.
+  * Args: dataDir namesCsv outDir suffix. The session is
+  * [[Measure.session]], which mirrors [[Bench]] (same shuffle
+  * partitions, AQE), so the dumped plan is the plan the bench runs.
+  * Queries whose body runs driver-side actions (asset builds, iterative
+  * fixpoints) execute them here too — the dump is the FINAL returned
+  * frame's plan, which is what the timed `.count()` consumes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: PlanDump dataDir namesCsv outDir suffix")
     val Array(dataDir, namesCsv, outDir, suffix) = args.take(4)
     val names = namesCsv.split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.suppressBoundedWindowWarning()
+    val spark = Measure.session()
     Files.createDirectories(Paths.get(outDir))
     val missing = names.toSet -- SparkEntry.queries.keySet
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")

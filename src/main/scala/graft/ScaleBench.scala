@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-rehearsal bench: times a NAMED SUBSET of the registered
   * queries against an arbitrary data directory (usually the
   * [[ScaleUp]]-derived 10× set) with the same measurement discipline
@@ -9,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * honesty — so sf0.1 → sf1 per-query scaling exponents in SCALE.md
   * are apples-to-apples with the round bench.
   *
-  * Args: dataDir namesCsv [timedPasses=3] [outFile] [shufflePartitions=32]
-  * [assetsCsv].
+  * Args: dataDir namesCsv [timedPasses=3] [outFile]
+  * [shufflePartitions=cpus] [assetsCsv], where `cpus` is
+  * `SPARK_GRAFT_CPUS` (default 32); the session is [[Measure.session]].
   *
   * `assetsCsv` (r13 verdict, directive 5) names [[Assets]] registry
   * entries to FORCE-BUILD — timed individually, dependency order —
@@ -31,30 +30,12 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleBench {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ScaleBench dataDir namesCsv [passes] [outFile] [shufflePartitions]")
+    require(args.length >= 2, "usage: ScaleBench dataDir namesCsv " +
+      "[passes] [outFile] [shufflePartitions] [assetsCsv]")
     val dataDir = args(0)
     val names = args(1).split(",").toSet
     val passes = if (args.length > 2) args(2).toInt else 3
-    val shuffleParts = if (args.length > 4) args(4).toInt else 32
-    // Spill-codec knob for disk-bound rehearsals: the sf1000 pair-join
-    // shuffle is ~3.5B slim long rows — zstd compresses them ~2× over
-    // lz4 and is the difference between fitting this box's free disk
-    // and not. On a cluster the same conf trades shuffle CPU for
-    // network/disk bytes; the round bench keeps lz4 (Spark default)
-    // so BENCH_r{N} numbers stay comparable.
-    val codec = sys.env.get("SPARK_GRAFT_CODEC")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-    codec.foreach(c => builder.config("spark.io.compression.codec", c))
-    val spark = builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.suppressBoundedWindowWarning()
+    val spark = Measure.session(args.lift(4).map(_.toInt))
 
     val missing = names -- SparkEntry.queries.keySet
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
@@ -62,19 +43,12 @@ object ScaleBench {
       if (args.length > 5 && args(5).nonEmpty) args(5).split(",").toSet
       else Set.empty
     val assetRows = Assets.buildTimed(spark, dataDir, assetNames)
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val assetJson = assetRows
-      .map { case (n, t) => "\"" + n + "\":" + r3(t) }
-      .mkString("{", ",", "}")
+    val assetJson = Measure.obj(assetRows)
     val out = Bench.runBench(spark, dataDir,
       SparkEntry.queries.view.filterKeys(names).toMap, timedPasses = passes)
     // asset_builds rides the same JSON object as the query rows
     val full = out.full.stripSuffix("}") + s""","asset_builds":$assetJson}"""
-    if (args.length > 3)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(args(3)), full + "\n")
-    println(full)
+    Measure.emit(full, args.lift(3))
     spark.stop()
     if (out.errors.nonEmpty) sys.exit(1)
   }

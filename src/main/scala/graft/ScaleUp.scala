@@ -263,13 +263,7 @@ object ScaleUp {
     val boilerPct = if (args.length > 4) args(4).toInt else 0
     require((tables -- AllTables).isEmpty,
       s"unknown tables: ${(tables -- AllTables).mkString(",")}")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     build(spark, srcDir, outDir, factor, tables, boilerPct)
     println(s"""{"scaled":"$outDir","factor":$factor,"src":"$srcDir",""" +
       s""""tables":${tables.size},"boilerPct":$boilerPct}""")

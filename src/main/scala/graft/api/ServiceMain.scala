@@ -1,7 +1,6 @@
 package graft.api
 
 import graft.app.{Experiment, Main}
-import org.apache.spark.sql.SparkSession
 
 /** Standalone job-service process: REST lifecycle over a selectable
   * execution backend — the stand-in for the reference's Flask +
@@ -18,13 +17,7 @@ import org.apache.spark.sql.SparkSession
 object ServiceMain {
   def main(args: Array[String]): Unit = {
     val port = sys.env.getOrElse("PORT", "8591").toInt
-    lazy val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-job-service")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    lazy val spark = Main.session("graft-job-service")
 
     val backend: JobService.JobBackend =
       sys.env.getOrElse("JOB_BACKEND", "inprocess") match {

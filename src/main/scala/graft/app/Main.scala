@@ -65,15 +65,20 @@ object Main {
       algorithm = a.getOrElse("algorithm", "1").toInt)
   }
 
+  /** The app's and the job service's session; its master is a
+    * deployment setting, so it is not [[graft.Measure.session]].
+    */
+  def session(appName: String): SparkSession = SparkSession.builder()
+    .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+    .appName(appName)
+    .config("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     val cfg = buildConfig(parseArgs(args))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName(cfg.appName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cfg.appName)
     spark.sparkContext.setLogLevel("WARN")
     try {
       val result = Experiment.run(spark, cfg)

@@ -686,30 +686,20 @@ object Embeddings {
     // legs' values are unchanged — same frame definition, same book),
     // and the exact-truth materialization runs CONCURRENTLY with the
     // emb+codebook build (guide §2.6 — independent eager legs must not
-    // serialize the driver). Pool-thread holds are adopted back into
-    // this thread's scope (cache hygiene, the e15 pattern).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fExact = Future {
-      QueryScope.collectHolds {
+    // serialize the driver). [[QueryScope.concurrently]] adopts the
+    // legs' holds into this scope, so they release even if one leg fails.
+    val (exact3, (emb, book)) = QueryScope.concurrently(
+      {
         val e = s1CosineTopK(spark, dir).filter(col("rk") <= 3)
           .select(col("q_id"), col("vec_id")).held()
         e.count() // feeds both hit joins
         e
-      }
-    }
-    val fBook = Future {
-      QueryScope.collectHolds {
+      },
+      {
         val emb = pqEmbFrame(Tables.embeddings(spark, dir))
         emb.count()
         (emb, pqCodebookLocal(emb))
-      }
-    }
-    val (exact3, hE) = Await.result(fExact, Duration.Inf)
-    QueryScope.adopt(hE)
-    val ((emb, book), hB) = Await.result(fBook, Duration.Inf)
-    QueryScope.adopt(hB)
+      })
     val base = exact3.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
     def hits(ann: DataFrame, name: String): DataFrame =
       ann.select(col("q_id"), col("vec_id"))

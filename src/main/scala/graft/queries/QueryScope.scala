@@ -1,7 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.Executors
 import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** Cache hygiene for the gated query layer (r15, round-14 verdict
   * directive 2).
@@ -135,16 +138,42 @@ object QueryScope {
     }
   }
 
-  /** Run one leg of a query on a WORKER thread (guide §2.6 concurrent
-    * jobs) without losing cache hygiene: the scope stack is
-    * thread-local, so a `.held()` on a pool thread would degrade to a
-    * bare `persist()` that nothing ever releases. `collectHolds` gives
-    * the leg its own scope and RETURNS the held frames instead of
-    * parking them; the submitting thread passes them to [[adopt]] so
-    * they join ITS scope and release on the normal schedule. On failure
-    * the leg's holds unpersist immediately (nothing to adopt).
+  /** Run a query's independent driver legs concurrently (guide §2.6:
+    * independent eager legs must not serialize the driver) without
+    * losing cache hygiene. The scope stack is thread-local, so a
+    * `.held()` on a pool thread would degrade to a bare `persist()`
+    * that nothing releases; instead each leg runs in its own scope on
+    * [[legPool]] and returns its holds. The caller waits for EVERY
+    * leg, adopts the holds of each leg that succeeded into its own
+    * scope, and only then rethrows the first failure — so a surviving
+    * sibling's frames release with the enclosing [[scoped]] block on
+    * the failure path too (a failed leg's own holds unpersist at once).
     */
-  def collectHolds[A](body: => A): (A, Seq[DataFrame]) = {
+  def concurrently[A](legs: Seq[() => A]): Seq[A] = {
+    val running = legs.map(leg => Future(collectHolds(leg()))(legPool))
+    val done = running.map(f => Await.ready(f, Duration.Inf).value.get)
+    done.foreach(_.foreach { case (_, holds) => adopt(holds) })
+    done.map(_.get._1) // rethrows the first failure, in leg order
+  }
+
+  /** Two legs of different result types; see the `Seq` form. */
+  def concurrently[A, B](a: => A, b: => B): (A, B) =
+    concurrently(Seq(() => Left(a), () => Right(b))) match {
+      case Seq(Left(x), Right(y)) => (x, y)
+    }
+
+  /** Named daemon threads, created on demand: legs block on Spark jobs,
+    * so a fixed cap could only starve a leg that itself runs legs.
+    */
+  private val legPool = ExecutionContext.fromExecutorService(
+    Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "graft-query-leg"); t.setDaemon(true); t
+    })
+
+  /** Run `body` in its own scope and RETURN its holds instead of
+    * parking them; on failure they unpersist immediately.
+    */
+  private def collectHolds[A](body: => A): (A, Seq[DataFrame]) = {
     val held = new ArrayBuffer[DataFrame]()
     stack.set(held :: stack.get())
     var ok = false
@@ -158,11 +187,10 @@ object QueryScope {
     }
   }
 
-  /** Register already-persisted frames (from [[collectHolds]] on a
-    * worker thread) with the current thread's scope; outside any scope
-    * they park directly so [[releaseAll]] still frees them.
+  /** Register already-persisted frames with the current thread's scope;
+    * outside any scope they park directly so [[releaseAll]] frees them.
     */
-  def adopt(dfs: Seq[DataFrame]): Unit = stack.get() match {
+  private def adopt(dfs: Seq[DataFrame]): Unit = stack.get() match {
     case h :: _ => h ++= dfs
     case Nil    => dfs.foreach(parked.add)
   }

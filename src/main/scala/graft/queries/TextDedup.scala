@@ -1280,7 +1280,11 @@ object TextDedup {
     // the ContextCleaner once unreferenced.)
     val spark = edges.sparkSession
     val driverMax = spark.conf.getOption("spark.graft.star.driverMaxEdges")
-      .map(_.toLong).getOrElse(StarDriverMaxEdges)
+      .map { v =>
+        require(v.toLongOption.exists(_ >= 0L), "spark.graft.star." +
+          s"driverMaxEdges must be a non-negative edge count, got '$v'")
+        v.toLong
+      }.getOrElse(StarDriverMaxEdges)
     var cur = canon(edges).localCheckpoint(true)
     var curCnt = cur.count()
     var rounds = 0
@@ -4992,39 +4996,30 @@ object TextDedup {
     // r18 (guide §2.6): the three width legs ran as SEQUENTIAL
     // driver-synchronous actions (cap window → self-join → agg, 3×) —
     // wall = Σ legs while each leg's tail idled the box. The legs are
-    // independent, so their unchanged per-leg jobs now submit from a
-    // small pool and back-fill each other (FIFO): wall ≈ max(leg).
+    // independent, so their unchanged per-leg jobs now submit together
+    // ([[QueryScope.concurrently]]) and back-fill each other (FIFO):
+    // wall ≈ max(leg).
     // (A single union job keyed by w was built and MEASURED FIRST: d33
     // 23.8→25.6 s at sf10 and 5.0→5.8 s at sf1 — tripling the window
     // sort's and pair join's per-partition rows costs more than the
     // removed barriers; rejected, recorded here.) No holds are created
     // on the pool threads (the legs read the already-cached sel/truth).
-    val legFuts = {
-      import scala.concurrent.{ExecutionContext, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      sorted.map { w =>
-        w -> Future {
-          val fp = sel.select(col("doc_id"), explode(col(s"fps$w")).as("fp"))
-          // nPairs and nHits from ONE action: truth pairs are unique
-          // (id_a, id_b) keys — enforced above — so the left join
-          // preserves pair cardinality and count(h) counts exactly the
-          // inner-join hits (r17)
-          val cnt = winnowPairsCapped(fp, fpCap)
-            .join(truth.withColumn("h", lit(1)), Seq("id_a", "id_b"), "left")
-            .agg(count(lit(1)).as("np"), count(col("h")).as("nh")).head
-          (cnt.getLong(0), cnt.getLong(1))
-        }
-      }.toMap
-    }
-    val rows = sorted.zipWithIndex.map { case (w, wi) =>
-      val nFp = sizeRow.getLong(1 + wi)
-      val (nPairs, nHits) = {
-        import scala.concurrent.Await
-        import scala.concurrent.duration.Duration
-        Await.result(legFuts(w), Duration.Inf)
-      }
-      (w, nPostings, nFp, halfUp(nFp, nPostings).map(Double.box).orNull,
-        nPairs, nTrue, nHits, halfUp(nHits, nTrue).map(Double.box).orNull)
+    val legs = QueryScope.concurrently(sorted.map { w => () =>
+      val fp = sel.select(col("doc_id"), explode(col(s"fps$w")).as("fp"))
+      // nPairs and nHits from ONE action: truth pairs are unique
+      // (id_a, id_b) keys — enforced above — so the left join
+      // preserves pair cardinality and count(h) counts exactly the
+      // inner-join hits (r17)
+      val cnt = winnowPairsCapped(fp, fpCap)
+        .join(truth.withColumn("h", lit(1)), Seq("id_a", "id_b"), "left")
+        .agg(count(lit(1)).as("np"), count(col("h")).as("nh")).head
+      (cnt.getLong(0), cnt.getLong(1))
+    })
+    val rows = sorted.zip(legs).zipWithIndex.map {
+      case ((w, (nPairs, nHits)), wi) =>
+        val nFp = sizeRow.getLong(1 + wi)
+        (w, nPostings, nFp, halfUp(nFp, nPostings).map(Double.box).orNull,
+          nPairs, nTrue, nHits, halfUp(nHits, nTrue).map(Double.box).orNull)
     }
     sel.unpersist() // rows are driver-side: the shared pass is done
     truth.unpersist()

@@ -62,6 +62,29 @@ class CacheHygieneSpec extends AnyFunSuite {
       "entry-release + failure-path unpersist must leave the cache empty")
   }
 
+  test("sibling failure: a leg's holds release when the other leg " +
+      "throws, even if the failure comes first") {
+    import graft.queries.QueryScope
+    spark.catalog.clearCache()
+    val failed = new java.util.concurrent.CountDownLatch(1)
+    val e = intercept[IllegalStateException](QueryScope.scoped {
+      QueryScope.concurrently[org.apache.spark.sql.DataFrame, Long](
+        {
+          failed.await() // hold only after the sibling has thrown
+          val h = QueryScope.hold(spark.range(30).toDF())
+          h.count()
+          h
+        },
+        {
+          failed.countDown()
+          throw new IllegalStateException("leg failed")
+        })._1
+    })
+    assert(e.getMessage == "leg failed")
+    assert(PlanBridge.cacheIsEmpty(spark),
+      "the surviving leg's hold must be released with the failing scope")
+  }
+
   test("concurrent-caller contract: in-flight holds survive a " +
       "concurrent releaseAll; a parked generation does not " +
       "(r15 verdict, directive 4)") {

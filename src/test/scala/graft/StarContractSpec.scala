@@ -84,6 +84,22 @@ class StarContractSpec extends AnyFunSuite {
     assert(e.getMessage.contains("did not converge"), e.getMessage)
   }
 
+  test("a malformed or negative driverMaxEdges conf fails naming the key") {
+    import spark.implicits._
+    val nodes = Seq(0L, 1L).toDF("id")
+    val edges = Seq((0L, 1L)).toDF("src", "dst")
+    for (bad <- Seq("2M", "-1")) {
+      spark.conf.set("spark.graft.star.driverMaxEdges", bad)
+      val e =
+        try intercept[IllegalArgumentException] {
+          TextDedup.starContractComponents(nodes, edges)
+        }
+        finally spark.conf.unset("spark.graft.star.driverMaxEdges")
+      assert(e.getMessage.contains("driverMaxEdges") &&
+        e.getMessage.contains(bad), e.getMessage)
+    }
+  }
+
   test("empty edge set: every node is its own component in zero rounds") {
     import spark.implicits._
     val nodes = Seq(5L, 7L).toDF("id")
