@@ -28,7 +28,12 @@ object Main {
     val resultsPath = sys.env.getOrElse("RESULTS_PATH", "/var/results")
     def path(p: String) =
       if (p.startsWith("/")) p else s"$datasetsPath/$p"
-    val randomState = a.get("random-state").map(_.toLong)
+    // every numeric flag parses here, so a bad value fails naming its flag
+    def number[A](key: String)(parse: String => Option[A]): Option[A] =
+      a.get(key).map(v => parse(v).getOrElse(throw new IllegalArgumentException(
+        s"--$key must be a number, got '$v'")))
+    def int(key: String, default: Int): Int = number(key)(_.toIntOption).getOrElse(default)
+    val randomState = number("random-state")(_.toLongOption)
     Experiment.Config(
       appName = a.getOrElse("app-name",
         sys.error("--app-name is required")),
@@ -42,27 +47,25 @@ object Main {
         clusteringAlgorithm = a.getOrElse("clustering-algorithm", "k_means"),
         clusteringScoringMethod =
           a.getOrElse("clustering-scoring-method", "log_likelihood"),
-        numberOfClusters = a.getOrElse("number-of-clusters", "2").toInt,
-        cvFolds = a.getOrElse("cv-folds", "10").toInt,
-        rfNEstimators = a.getOrElse("rf-n-estimators", "10").toInt,
-        rfTreeNJobs = a.getOrElse("tree-n-jobs", "1").toInt,
+        numberOfClusters = int("number-of-clusters", 2),
+        cvFolds = int("cv-folds", 10),
+        rfNEstimators = int("rf-n-estimators", 10),
+        rfTreeNJobs = int("tree-n-jobs", 1),
         svmKernel = a.getOrElse("svm-kernel", "linear"),
         svmOptimizer = a.getOrElse("svm-optimizer", "avltree"),
-        svmMaxIterations = a.getOrElse("svm-max-iterations", "1000").toInt,
+        svmMaxIterations = int("svm-max-iterations", 1000),
         svmIsRegression = a.getOrElse("svm-is-regression", "true") == "true",
         randomState = randomState,
         returnTrainScores = a.getOrElse("return-train-scores", "false") == "true"),
       bbha = Bbha.Config(
-        nStars = a.getOrElse("n-stars", "30").toInt,
-        nIterations = a.getOrElse("bbha-iterations", "30").toInt,
+        nStars = int("n-stars", 30),
+        nIterations = int("bbha-iterations", 30),
         randomState = randomState,
-        binaryThreshold = a.get("binary-threshold") match {
-          case Some("none") => None
-          case Some(v) => Some(v.toDouble)
-          case None => Some(0.6)
-        }),
-      numberOfWorkers = a.getOrElse("number-of-workers", "0").toInt,
-      algorithm = a.getOrElse("algorithm", "1").toInt)
+        binaryThreshold =
+          if (a.get("binary-threshold").contains("none")) None
+          else number("binary-threshold")(_.toDoubleOption).orElse(Some(0.6))),
+      numberOfWorkers = int("number-of-workers", 0),
+      algorithm = int("algorithm", 1))
   }
 
   /** The app's and the job service's session; its master is a

@@ -1,6 +1,6 @@
 package graft.fitness
 
-import graft.surv.{CIndex, Clinical, CoxPH, KMeansLocal}
+import graft.surv.{CIndex, Clinical, CoxPH, KMeansLocal, RandomSurvivalForest, SpectralLocal, SurvivalSVM}
 
 /** The 11-field fitness-result contract
   * (`CrossValidationSparkResult`, /root/reference/scripts/metaheuristics.py:20-26;
@@ -60,6 +60,11 @@ case class FitnessConfig(
     svmIsRegression: Boolean = true,
     randomState: Option[Long] = None,
     returnTrainScores: Boolean = false) {
+  // scikit-learn's KFold rejects fewer than 2 splits; with 1 or 0 every
+  // fitness call would fail into the error sentinel
+  require(model == "clustering" || cvFolds >= 2,
+    s"cv-folds must be at least 2 for model $model, got $cvFolds")
+
   /** All current models maximize (C-index; log-likelihood per the
     * lifelines recommendation — /root/reference/scripts/main.py:55-58).
     */
@@ -109,14 +114,9 @@ object Fitness {
   def clusteringFitness(cfg: FitnessConfig, subset: Array[Array[Double]],
       y: Array[Clinical], partitionId: Int): FitnessResult = {
     val start = System.nanoTime()
-    val labels = cfg.clusteringAlgorithm match {
-      case "k_means" =>
-        KMeansLocal.fit(subset, cfg.numberOfClusters,
-          seed = cfg.randomState.getOrElse(0L)).labels
-      case "spectral" =>
-        graft.surv.SpectralLocal.fit(subset, cfg.numberOfClusters,
-          seed = cfg.randomState.getOrElse(0L))
-      case other => throw new IllegalArgumentException(s"unknown clustering $other")
+    val labels = train(cfg, subset, y) match {
+      case kMeans: KMeansLocal.Result => kMeans.labels
+      case spectral: Array[Int] => spectral
     }
     // {E, T, group}: group enters the Cox model as ONE numeric covariate,
     // exactly like lifelines treats the int column (main.py:88-98)
@@ -160,17 +160,7 @@ object Fitness {
       val xTr = trainIdx.map(subset)
       val yTr = trainIdx.map(y)
       val fitStart = System.nanoTime()
-      val model: SurvivalEstimator = cfg.model match {
-        case "rf" => graft.surv.RandomSurvivalForest.fit(xTr, yTr,
-          nEstimators = cfg.rfNEstimators,
-          seed = cfg.randomState.getOrElse(0L),
-          treeNJobs = cfg.rfTreeNJobs)
-        case "svm" => graft.surv.SurvivalSVM.fit(xTr, yTr,
-          kernel = cfg.svmKernel, maxIter = cfg.svmMaxIterations,
-          isRegression = cfg.svmIsRegression,
-          seed = cfg.randomState.getOrElse(0L),
-          optimizer = cfg.svmOptimizer)
-      }
+      val model = train(cfg, xTr, yTr).asInstanceOf[SurvivalEstimator]
       val fitSecs = (System.nanoTime() - fitStart) / 1e9
       val t0 = System.nanoTime()
       testScores(f) = CIndex.concordance(testIdx.map(y),
@@ -205,23 +195,28 @@ object Fitness {
     * black hole's model comes from this single targeted refit.
     */
   def fitModel(cfg: FitnessConfig, x: Array[Array[Double]],
-      y: Array[Clinical], mask: Array[Boolean]): java.io.Serializable = {
-    val subset = maskColumns(x, mask)
+      y: Array[Clinical], mask: Array[Boolean]): java.io.Serializable =
+    train(cfg, maskColumns(x, mask), y)
+
+  /** The one model switch, shared by the search and [[fitModel]]: the
+    * k-means result or the spectral labels for `clustering`, the fitted
+    * [[SurvivalEstimator]] for `rf` and `svm`.
+    */
+  private def train(cfg: FitnessConfig, x: Array[Array[Double]],
+      y: Array[Clinical]): java.io.Serializable = {
+    val seed = cfg.randomState.getOrElse(0L)
     cfg.model match {
       case "clustering" => cfg.clusteringAlgorithm match {
-        case "k_means" =>
-          KMeansLocal.fit(subset, cfg.numberOfClusters,
-            seed = cfg.randomState.getOrElse(0L))
-        case "spectral" =>
-          graft.surv.SpectralLocal.fit(subset, cfg.numberOfClusters,
-            seed = cfg.randomState.getOrElse(0L))
+        case "k_means" => KMeansLocal.fit(x, cfg.numberOfClusters, seed = seed)
+        case "spectral" => SpectralLocal.fit(x, cfg.numberOfClusters, seed = seed)
+        case other => throw new IllegalArgumentException(s"unknown clustering $other")
       }
-      case "rf" => graft.surv.RandomSurvivalForest.fit(subset, y,
-        nEstimators = cfg.rfNEstimators, seed = cfg.randomState.getOrElse(0L),
-        treeNJobs = cfg.rfTreeNJobs)
-      case "svm" => graft.surv.SurvivalSVM.fit(subset, y,
-        kernel = cfg.svmKernel, maxIter = cfg.svmMaxIterations,
-        isRegression = cfg.svmIsRegression, seed = cfg.randomState.getOrElse(0L))
+      case "rf" => RandomSurvivalForest.fit(x, y, nEstimators = cfg.rfNEstimators,
+        seed = seed, treeNJobs = cfg.rfTreeNJobs)
+      case "svm" => SurvivalSVM.fit(x, y, kernel = cfg.svmKernel,
+        maxIter = cfg.svmMaxIterations, isRegression = cfg.svmIsRegression,
+        seed = seed, optimizer = cfg.svmOptimizer)
+      case other => throw new IllegalArgumentException(s"unknown model $other")
     }
   }
 

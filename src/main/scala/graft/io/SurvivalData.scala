@@ -1,6 +1,11 @@
 package graft.io
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
 import graft.surv.Clinical
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,9 +35,11 @@ case class SurvivalDataset(
   * is an explicit inner join on sample id, and samples dropped by
   * cleaning drop their clinical rows too.
   *
-  * The matrix is collected dense on the driver because every fitness
-  * call consumes the whole matrix via Broadcast regardless
-  * (/root/reference/scripts/core.py:166-169) — the distributed ingest
+  * Both files are decoded on the driver by [[readTsv]], with no Spark
+  * job, as the reference reads them with `pd.read_csv(sep='\t')`: the
+  * matrix has to be dense on the driver anyway, because every fitness
+  * call consumes the whole matrix via Broadcast (the reference's
+  * scripts/core.py:166-169). The distributed ingest
   * path for matrices too wide for one TSV read is
   * [[SurvivalClean.cleanDistributed]] over a parquet/Delta matrix table.
   */
@@ -47,20 +54,62 @@ object SurvivalData {
       case v => try v.toDouble catch { case _: NumberFormatException => Double.NaN }
     }
 
-  /** Reads the feature-major molecules TSV and the clinical TSV, applies
-    * the cleaning pipeline, returns the aligned dense dataset.
+  /** Decodes one tab-separated input file, read on the driver through
+    * Hadoop `FileSystem` so a path resolves as a Spark read would
+    * resolve it (schemes, `fs.defaultFS`). Returns the header and the
+    * body rows, each row padded with `null` to the header's width.
+    *
+    * Rules:
+    *  - the header's first cell names the index; the other cells name
+    *    the columns (for the molecules file, the sample ids) and must be
+    *    non-empty and distinct;
+    *  - lines end at `\n`, `\r\n` or `\r`, so CRLF files read the same;
+    *    blank lines are skipped;
+    *  - a cell wrapped in double quotes is read without them (a tab or a
+    *    line break inside quotes is not supported);
+    *  - a row shorter than the header reads its missing cells as `null`,
+    *    which [[parseDouble]] reads as NaN;
+    *  - a row longer than the header fails, naming the file and line.
+    *
+    * Holds no state between calls; safe to call from several threads.
+    */
+  def readTsv(hadoopConf: Configuration, path: String): (Array[String], Array[Array[String]]) = {
+    def unquote(c: String) =
+      if (c.length >= 2 && c.head == '"' && c.last == '"') c.substring(1, c.length - 1) else c
+    val file = new Path(path)
+    val in = new BufferedReader(new InputStreamReader(
+      file.getFileSystem(hadoopConf).open(file), StandardCharsets.UTF_8))
+    try {
+      val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
+        .zipWithIndex.filter(_._1.nonEmpty)
+      require(lines.hasNext, s"$path is empty")
+      val header = lines.next()._1.split("\t", -1).map(unquote)
+      val names = header.tail
+      require(!names.contains(""), s"$path: empty column name in the header")
+      val dup = names.diff(names.distinct)
+      require(dup.isEmpty, s"$path: duplicate column name '${dup.head}' in the header")
+      val rows = lines.map { case (line, i) =>
+        val cells = line.split("\t", -1)
+        require(cells.length <= header.length,
+          s"$path line ${i + 1} has ${cells.length} cells, more than the header's ${header.length}")
+        Array.tabulate(header.length)(c => if (c < cells.length) unquote(cells(c)) else null)
+      }.toArray
+      (header, rows)
+    } finally in.close()
+  }
+
+  /** Reads the feature-major molecules TSV and the clinical TSV with
+    * [[readTsv]], applies the cleaning pipeline, returns the aligned
+    * dense dataset.
     */
   def read(spark: SparkSession, moleculesPath: String,
       clinicalPath: String): SurvivalDataset = {
+    val conf = spark.sparkContext.hadoopConfiguration
     // molecules: rows = molecules, first column = molecule name,
     // remaining columns = samples
-    val mol = spark.read
-      .option("sep", "\t").option("header", "true")
-      .csv(moleculesPath)
-    val header = mol.columns
+    val (header, molRows) = readTsv(conf, moleculesPath)
     val sampleIdsAll = header.drop(1)
-    val molRows = mol.collect() // feature-major; transposed below
-    val featureNamesAll = molRows.map(_.getString(0))
+    val featureNamesAll = molRows.map(_(0))
     // transpose: x(sample)(feature)
     val nS = sampleIdsAll.length
     val nF = featureNamesAll.length
@@ -69,7 +118,7 @@ object SurvivalData {
     while (f < nF) {
       val row = molRows(f)
       var s = 0
-      while (s < nS) { xAll(s)(f) = parseDouble(row.getString(s + 1)); s += 1 }
+      while (s < nS) { xAll(s)(f) = parseDouble(row(s + 1)); s += 1 }
       f += 1
     }
     // step 2: drop feature columns containing any NaN (NaN only)
@@ -79,15 +128,13 @@ object SurvivalData {
 
     // clinical: index, event, time (positional after the index —
     // utils.py:59-61)
-    val clin = spark.read
-      .option("sep", "\t").option("header", "true")
-      .csv(clinicalPath)
-    require(clin.columns.length == 3,
-      s"clinical TSV must be (index, event, time); got ${clin.columns.mkString(",")}")
-    val clinical: Map[String, Clinical] = clin.collect().map { r =>
-      val ev = Option(r.getString(1)).getOrElse("")
+    val (clinHeader, clinRows) = readTsv(conf, clinicalPath)
+    require(clinHeader.length == 3,
+      s"clinical TSV must be (index, event, time); got ${clinHeader.mkString(",")}")
+    val clinical: Map[String, Clinical] = clinRows.map { r =>
+      val ev = Option(r(1)).getOrElse("")
       val event = ev == "1" || ev.equalsIgnoreCase("true")
-      r.getString(0) -> Clinical(event, parseDouble(r.getString(2)))
+      r(0) -> Clinical(event, parseDouble(r(2)))
     }.toMap
 
     // explicit alignment join (inner) on sample id

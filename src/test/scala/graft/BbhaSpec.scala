@@ -79,9 +79,12 @@ class BbhaSpec extends AnyFunSuite {
   test("a bad n-stars or bbha-iterations fails in Main.buildConfig, named") {
     val required = Map("app-name" -> "a", "molecules-dataset" -> "m.tsv",
       "clinical-dataset" -> "c.tsv")
-    for ((key, value) <- Seq("n-stars" -> "0", "bbha-iterations" -> "-1")) {
+    for ((key, value, extra) <- Seq[(String, String, Map[String, String])](
+        ("n-stars", "0", Map()), ("bbha-iterations", "-1", Map()),
+        ("n-stars", "abc", Map()), ("random-state", "x", Map()),
+        ("cv-folds", "0", Map("model" -> "svm")))) {
       val e = intercept[IllegalArgumentException] {
-        Main.buildConfig(required + (key -> value))
+        Main.buildConfig(required ++ extra + (key -> value))
       }
       assert(e.getMessage.contains(key), e.getMessage)
     }

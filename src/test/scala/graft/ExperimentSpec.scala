@@ -3,7 +3,7 @@ package graft
 import graft.app.Experiment
 import graft.bbha.Bbha
 import graft.fitness.FitnessConfig
-import graft.io.{SurvivalClean, SurvivalData}
+import graft.io.{SurvivalClean, SurvivalData, SurvivalDataset}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,24 +25,35 @@ class SurvivalDataSpec extends AnyFunSuite {
   /** FIXTURES.md §1.1: EGFR column (NaN) dropped by the column rule,
     * then TCGA-03 row (inf from MYC) dropped by the row rule.
     */
-  private def writeFixture(): (String, String) = {
+  private val fixtureMol =
+    """molecule	TCGA-01	TCGA-02	TCGA-03	TCGA-04
+      |BRCA1	2.31	1.07	3.92	0.55
+      |TP53	0.12	4.40	2.21	1.90
+      |EGFR	NaN	1.33	0.87	2.02
+      |MYC	1.75	2.60	inf	0.44""".stripMargin
+  private val fixtureClin =
+    """sample	event	time
+      |TCGA-01	1	1250.0
+      |TCGA-02	0	2301.5
+      |TCGA-03	1	402.0
+      |TCGA-04	0	3650.0""".stripMargin
+
+  private def write(mol: String, clin: String = fixtureClin): (String, String) = {
     val dir = Files.createTempDirectory("surv").toString
-    val mol =
-      """molecule	TCGA-01	TCGA-02	TCGA-03	TCGA-04
-        |BRCA1	2.31	1.07	3.92	0.55
-        |TP53	0.12	4.40	2.21	1.90
-        |EGFR	NaN	1.33	0.87	2.02
-        |MYC	1.75	2.60	inf	0.44""".stripMargin
-    val clin =
-      """sample	event	time
-        |TCGA-01	1	1250.0
-        |TCGA-02	0	2301.5
-        |TCGA-03	1	402.0
-        |TCGA-04	0	3650.0""".stripMargin
     Files.writeString(java.nio.file.Paths.get(dir, "molecules.tsv"), mol)
     Files.writeString(java.nio.file.Paths.get(dir, "clinical.tsv"), clin)
     (s"$dir/molecules.tsv", s"$dir/clinical.tsv")
   }
+
+  private def writeFixture(): (String, String) = write(fixtureMol)
+
+  private def read(files: (String, String)) =
+    SurvivalData.read(spark, files._1, files._2)
+
+  /** Every field as comparable sequences; doubles compare bit for bit. */
+  private def fields(ds: SurvivalDataset) = (ds.sampleIds.toSeq,
+    ds.featureNames.toSeq, ds.x.map(r => r.map(java.lang.Double.doubleToLongBits).toSeq).toSeq,
+    ds.y.toSeq)
 
   test("cleaning order: transpose, drop NaN columns, drop NaN/Inf rows") {
     val (molPath, clinPath) = writeFixture()
@@ -57,6 +68,34 @@ class SurvivalDataSpec extends AnyFunSuite {
     assert(ds.y.map(_.time).toSeq == Seq(1250.0, 2301.5, 3650.0))
     // values are the transposed matrix
     assert(ds.x(0).toSeq == Seq(2.31, 0.12, 1.75))
+  }
+
+  test("CRLF line ends, blank lines and quoted cells read as the plain fixture") {
+    val plain = fields(read(writeFixture()))
+    val crlf = write(fixtureMol.replace("\n", "\r\n") + "\r\n\r\n",
+      fixtureClin.replace("\n", "\r\n") + "\r\n")
+    assert(fields(read(crlf)) == plain)
+    val quoted = write(fixtureMol
+      .replace("\tTCGA-02\t", "\t\"TCGA-02\"\t")
+      .replace("\t1.07\t", "\t\"1.07\"\t"))
+    assert(fields(read(quoted)) == plain)
+  }
+
+  test("a short row reads as NaN, so its molecule is dropped") {
+    val ds = read(write(fixtureMol.replace("\t1.90", "")))
+    assert(ds.featureNames.toSeq == Seq("BRCA1", "MYC"))
+    assert(ds.sampleIds.toSeq == Seq("TCGA-01", "TCGA-02", "TCGA-04"))
+  }
+
+  test("a long row fails naming its line; a duplicate sample id fails naming the id") {
+    val long = intercept[IllegalArgumentException] {
+      read(write(fixtureMol.replace("\t3.92\t0.55", "\t3.92\t0.55\t9.99")))
+    }
+    assert(long.getMessage.contains("molecules.tsv line 2"), long.getMessage)
+    val dup = intercept[IllegalArgumentException] {
+      read(write(fixtureMol.replace("TCGA-03", "TCGA-02")))
+    }
+    assert(dup.getMessage.contains("'TCGA-02'"), dup.getMessage)
   }
 
   test("distributed cleaning twin applies the same column-then-row rule") {

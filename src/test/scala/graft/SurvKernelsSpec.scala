@@ -1,5 +1,6 @@
 package graft
 
+import graft.fitness.{Fitness, FitnessConfig}
 import graft.surv._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -300,6 +301,20 @@ class SurvivalSVMSpec extends AnyFunSuite {
     // scoring: the precomputed model takes rows of K(x_test, X_train)
     x.indices.foreach { i =>
       assert(lin.risk(x(i)) == pre.risk(gram(i)), s"row $i")
+    }
+  }
+
+  test("Fitness.fitModel fits the SVM the search fits, optimizer included; a bad clustering is a bad argument") {
+    val cfg = FitnessConfig(model = "svm", svmIsRegression = false,
+      svmOptimizer = "direct", svmMaxIterations = 200, randomState = Some(3L))
+    val refit = Fitness.fitModel(cfg, x, y, Array(true, true, true))
+      .asInstanceOf[SurvivalSVM.Model]
+    val direct = SurvivalSVM.fit(x, y, isRegression = false, maxIter = 200,
+      seed = 3L, optimizer = "direct")
+    assert(x.map(refit.risk).toSeq == x.map(direct.risk).toSeq)
+    intercept[IllegalArgumentException] {
+      Fitness.fitModel(FitnessConfig(clusteringAlgorithm = "dbscan"), x, y,
+        Array(true, true, true))
     }
   }
 
