@@ -64,7 +64,14 @@ object Events {
     * codegen (`get_json_object`), no UDF.
     */
   def e3JsonExtract(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    jsonExtractFrame(Tables.events(spark, dir)).orderBy(col("event_type"))
+
+  /** e3's aggregate, shared verbatim with its streaming twin: run on a
+    * stream, JSON property extraction stays codegen and the per-type
+    * min/max/sum state is O(1) per key.
+    */
+  private[graft] def jsonExtractFrame(events: DataFrame): DataFrame =
+    events
       .select(col("event_type"),
         get_json_object(col("props"), "$.k").cast("long").as("k"))
       .groupBy(col("event_type"))
@@ -72,7 +79,6 @@ object Events {
         sum(col("k")).as("sum_k"),
         min(col("k")).as("min_k"),
         max(col("k")).as("max_k"))
-      .orderBy(col("event_type"))
 
   /** Top-5 busiest users per event type by event count — grouped agg
     * feeding a two-phase salted top-k ([[TopK.saltedTopK]]): with only a
@@ -115,7 +121,16 @@ object Events {
     * ordering predicates. The standard product-analytics funnel shape.
     */
   def e5Funnel(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    funnelFrame(Tables.events(spark, dir)).orderBy(col("user_id"))
+
+  /** e5's per-user funnel, shared verbatim with its streaming twin: on a
+    * stream the per-user state is three conditional-min timestamps, an
+    * ordinary streaming aggregate (O(1) state per user), with the
+    * ordering predicates projected after the aggregation exactly as in
+    * batch.
+    */
+  private[graft] def funnelFrame(events: DataFrame): DataFrame =
+    events
       .groupBy(col("user_id"))
       .agg(
         min(when(col("event_type") === "view", unix_micros(col("ts"))))
@@ -132,7 +147,6 @@ object Events {
           col("first_view").isNotNull &&
           col("first_click") > col("first_view") &&
           col("first_purchase") > col("first_click")).as("full_funnel"))
-      .orderBy(col("user_id"))
 
   /** As-of join: each purchase matched to the user's most recent view at
     * or before it. Composed from existing operators (the preference-order
@@ -586,11 +600,12 @@ object Events {
     rfmFromProfiles(rfmProfileFrame(Tables.events(spark, dir)))
 
   /** Per-user RFM profile — the incremental half of e15, shared verbatim
-    * with the streaming twin ([[graft.streaming.EventStreams.rfmProfiles]]
-    * runs this exact plan on the stream): max/count/sum are all
-    * mergeable, so the standing profile state is O(1) per user and the
-    * streamed asset equals the batch aggregate over the same rows at any
-    * arrival order.
+    * with the streaming twin (which runs this exact plan on the stream):
+    * max/count/sum are all mergeable, so the standing profile state is
+    * O(1) per user and the streamed asset equals the batch aggregate
+    * over the same rows at any arrival order. On a stream it is a
+    * standing-profile state (no watermark), the same trade as
+    * [[funnelFrame]]; [[rfmFromProfiles]] is the bounded finish.
     */
   private[graft] def rfmProfileFrame(events: DataFrame): DataFrame =
     events
@@ -866,7 +881,10 @@ object Events {
   /** Per-user recency profile — e20's incremental half, shared verbatim
     * with the streaming twin (count/max are mergeable, so the standing
     * state is O(1) per user and arrival-order-free — the e15 profile
-    * split).
+    * split). Streamed, it is a standing asset that
+    * [[churnFromProfiles]] finishes at read time, so recency degrades
+    * correctly BETWEEN arrivals: the profile stores only last_us, and
+    * the horizon is re-derived per read.
     */
   private[graft] def churnProfileFrame(events: DataFrame): DataFrame =
     events

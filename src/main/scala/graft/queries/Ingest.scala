@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
 object Ingest {
 
   import graft.functions.FastMd5.fastMd5
-
-  private def toks: Column = split(trim(lower(col("text"))), "\\s+")
+  import TextDedup.{contentHash, toks}
 
   // `filter` collides with DataFrame.filter inside select contexts
   private def filter_(c: Column, f: Column => Column): Column =
@@ -136,9 +135,11 @@ object Ingest {
       .orderBy(col("doc_id"))
       .limit(2000)
 
-  /** The scrub itself over a (`doc_id`, `text`) frame — shared verbatim
-    * by the batch query and the streaming twin
-    * ([[graft.streaming.CorpusStreams.piiScrub]]). Each class counts on
+  /** The scrub itself over a (`doc_id`, `text`) frame — the batch query
+    * and its streaming twin are this one plan. On a stream it is a
+    * stateless map pass, so PII never crosses the ingest boundary (the
+    * batch query additionally injects its deterministic test PII; the
+    * stream scrubs whatever arrives). Each class counts on
     * the PREVIOUS stage's redacted text (emails on raw, IPs after email
     * redaction, phones after both), so the counts are exactly the
     * replacements the scrub performed: a phone-shaped digit run inside
@@ -236,7 +237,7 @@ object Ingest {
   private[graft] def bloomDedupOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftfn.GraftExpressions.{bloomAgg, bloomMightContain}
     val hashes = docs.select(col("doc_id"), col("is_new"),
-      fastMd5(regexp_replace(trim(lower(col("text"))), "\\s+", " ")).as("h"))
+      contentHash.as("h"))
     val standing = hashes.filter(!col("is_new"))
       .select(col("h")).distinct().held()
     val n = standing.count() // also freezes the frame for both consumers
@@ -264,7 +265,7 @@ object Ingest {
   private[graft] def incrementalDedupOf(docs: DataFrame,
       maxShingleDf: Option[Long] = None): DataFrame = {
     val hashes = docs.select(col("doc_id"), col("is_new"),
-      fastMd5(regexp_replace(trim(lower(col("text"))), "\\s+", " ")).as("h"))
+      contentHash.as("h"))
     val existingH = hashes.filter(!col("is_new"))
       .select(col("h")).distinct().withColumn("hit", lit(true))
     val exact = hashes.filter(col("is_new"))

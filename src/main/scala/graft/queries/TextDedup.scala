@@ -21,8 +21,35 @@ object TextDedup {
 
   import graft.functions.FastMd5.fastMd5
 
-  /** Tokens of normalized text: lowercase, trimmed, split on whitespace. */
-  private def toks: Column = split(trim(lower(col("text"))), "\\s+")
+  // ------------------------------------------------- corpus text rules
+  // Each rule is spelled once, here; the batch queries, the ingest
+  // operators and the streaming twins all call these columns, so the
+  // batch and streaming answers cannot drift apart.
+
+  /** Tokens of normalized text: lowercase, trimmed, split on whitespace.
+    * SQL `trim` strips spaces only, and `split` keeps a trailing empty
+    * token, so a document ending in a tab or newline has one more
+    * token (and one more shingle) than its space-stripped form.
+    */
+  private[graft] def toks: Column = split(trim(lower(col("text"))), "\\s+")
+
+  /** Whitespace-normalized text: lowercase, trimmed, every whitespace
+    * run collapsed to one space.
+    */
+  private[graft] def normText: Column =
+    regexp_replace(trim(lower(col("text"))), "\\s+", " ")
+
+  /** The d1 content hash: md5 of [[normText]]. Exact dedup, the t9
+    * split and every ingest hash gate key on it.
+    */
+  private[graft] def contentHash: Column = fastMd5(normText)
+
+  /** Per-document distinct word-3-gram shingle array (the codegen'd
+    * [[org.apache.spark.sql.graftfn.GraftExpressions.distinctShingles]]
+    * kernel over [[toks]]).
+    */
+  private def shingleKernel: Column =
+    org.apache.spark.sql.graftfn.GraftExpressions.distinctShingles(toks)
 
   /** Distinct (doc_id, shingle) word-3-gram pairs — the inverted-index
     * input, built per-row by the codegen'd
@@ -38,8 +65,29 @@ object TextDedup {
     */
   private[graft] def shingleIndex(df: DataFrame): DataFrame =
     shingleRepartition(df).select(col("doc_id"),
-      explode(org.apache.spark.sql.graftfn.GraftExpressions
-        .distinctShingles(toks)).as("shingle"))
+      explode(shingleKernel).as("shingle"))
+
+  /** `(doc_id, carry…, n_shingles, shingle)` — the [[shingleIndex]]
+    * kernel without its doc_id exchange, so it runs on a stream (the
+    * near-dup ingest twins) exactly as in batch. The kernel runs once
+    * per document in a projection below the explode; `carry` columns
+    * and `n_shingles` are computed there too and ride through the
+    * explode as plain attributes, while the shingle array itself is
+    * dropped at the explode (the generator select-list rule,
+    * SCALE.md).
+    */
+  private[graft] def docShingles(docs: DataFrame,
+      carry: String*): DataFrame = {
+    val keep = ("doc_id" +: carry).map(col)
+    // explode_outer + a null filter, not explode: a plain explode of an
+    // attribute makes Catalyst infer `size(sh) > 0` below the generator
+    // and push it through the projection — a second kernel run per doc
+    docs.select(keep :+ shingleKernel.as("sh"): _*)
+      .select(keep :+ size(col("sh")).as("n_shingles") :+ col("sh"): _*)
+      .select(keep :+ col("n_shingles") :+
+        explode_outer(col("sh")).as("shingle"): _*)
+      .filter(col("shingle").isNotNull)
+  }
 
   /** The doc_id exchange in front of the shingle kernel — the same
     * exchange position as the window spelling (whose corpus-wide
@@ -90,7 +138,7 @@ object TextDedup {
   def d1ExactDedup(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        fastMd5(regexp_replace(trim(lower(col("text"))), "\\s+", " ")).as("text_hash"))
+        contentHash.as("text_hash"))
       .groupBy(col("text_hash"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_docs"))
       .orderBy(col("canonical_id"))
@@ -781,11 +829,12 @@ object TextDedup {
   /** Distinct (doc_id, fp) NARROW (4-hex) winnow selections — since r13
     * this is only the [[d30WinnowingNarrow]] saturation-audit base; the
     * gated d30 contract, every at-scale consumer, and (since r14) the
-    * streaming ingest twin ([[graft.streaming.CorpusStreams
-    * .winnowStream]]) all select in the wide 36-bit space
+    * streaming ingest twins (which run [[winnowLocalSelect]]'s kernels
+    * on the stream) all select in the wide 36-bit space
     * ([[winnowSelectionAsset]] / [[winnowLocalSelect]] with
-    * [[WinnowWideHex]]). `StreamingSpec` keeps a narrow parity pin so
-    * the audit leg's selection rule can't drift either.
+    * [[WinnowWideHex]]). `WinnowLocalParitySpec` pins the narrow array
+    * build against this window build at w = 4 too, so the audit leg's
+    * selection rule can't drift either.
     */
   private[graft] def winnowFingerprints(docs: DataFrame,
       w: Int = WinnowW): DataFrame =
@@ -879,11 +928,17 @@ object TextDedup {
     * `t2 IS NOT NULL` / `cnt = w` gates.
     */
   private[graft] def winnowLocalSelect(docs: DataFrame, w: Int,
-      hexChars: Int): DataFrame = {
+      hexChars: Int): DataFrame =
+    docs.select(col("doc_id"), explode(winnowSelection(w, hexChars)).as("fp"))
+
+  /** One document's distinct winnow selections as an array column — the
+    * kernel pair [[winnowLocalSelect]] explodes, exposed so a streaming
+    * twin can gate or extend the array before its own explode.
+    */
+  private[graft] def winnowSelection(w: Int, hexChars: Int): Column = {
     import org.apache.spark.sql.graftfn.GraftExpressions.{winnowEk, winnowMinSelect}
-    docs.select(col("doc_id"),
-      explode(winnowMinSelect(winnowEk(toks, hexChars, WinnowPosField),
-        w, WinnowPosField)).as("fp"))
+    winnowMinSelect(winnowEk(toks, hexChars, WinnowPosField), w,
+      WinnowPosField)
   }
 
   /** Fixed-cost probe unit for the rehearsal mains (r15 verdict,
@@ -1367,8 +1422,7 @@ object TextDedup {
   def t1TokenStats(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " ").as("norm"),
-        toks.as("toks"))
+        normText.as("norm"), toks.as("toks"))
       .select(col("doc_id"), col("lang"),
         size(col("toks")).as("n_tokens"),
         size(array_distinct(col("toks"))).as("n_uniq"),
@@ -1524,7 +1578,7 @@ object TextDedup {
   def t7RollingFingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " ").as("norm"))
+        normText.as("norm"))
       .select(col("doc_id"),
         org.apache.spark.sql.graftfn.GraftExpressions
           .rollingHash(col("norm")).as("rhash"),
@@ -1671,8 +1725,7 @@ object TextDedup {
     // one exchange fewer, guide §2.4)
     val withSplit = shingleRepartition(docs)
       .select(col("doc_id"), split.as("split"),
-        explode(org.apache.spark.sql.graftfn.GraftExpressions
-          .distinctShingles(toks)).as("shingle"))
+        explode(shingleKernel).as("shingle"))
       .select(col("doc_id"), col("shingle"), col("split"))
       .held()
     withSplit.count() // eager materialization (see d3)
@@ -1835,9 +1888,7 @@ object TextDedup {
     * t9 and the p1 manifest.
     */
   private[graft] def splitCols: (Column, Column) = {
-    val bucket = conv(substring(fastMd5(
-        regexp_replace(trim(lower(col("text"))), "\\s+", " ")), 1, 4),
-      16, 10).cast("long") % 100
+    val bucket = conv(substring(contentHash, 1, 4), 16, 10).cast("long") % 100
     val split = when(bucket < 80, "train")
       .when(bucket < 90, "val").otherwise("test")
     (bucket, split)
@@ -2092,9 +2143,8 @@ object TextDedup {
   }
 
   def p2CorpusMixing(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = conv(substring(fastMd5(concat(lit("mix:"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " "))), 1, 4),
-      16, 10).cast("long") % 1000
+    val bucket = conv(substring(fastMd5(concat(lit("mix:"), normText)),
+      1, 4), 16, 10).cast("long") % 1000
     val rate = MixRates.foldLeft(lit(MixDefaultRate)) {
       case (els, (l, r)) => when(col("lang") === l, r).otherwise(els)
     }
@@ -2127,9 +2177,8 @@ object TextDedup {
   private[graft] def langRebalanceOf(docs: DataFrame): DataFrame = {
     val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
     val total = docs.agg(count(lit(1)).as("n_total"))
-    val bucket = conv(substring(fastMd5(concat(lit("bal:"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " "))), 1, 4),
-      16, 10).cast("long") % 1000
+    val bucket = conv(substring(fastMd5(concat(lit("bal:"), normText)),
+      1, 4), 16, 10).cast("long") % 1000
     docs
       .select(col("doc_id"), col("lang"), bucket.as("bucket"))
       .join(broadcast(counts), Seq("lang"))
@@ -2162,9 +2211,8 @@ object TextDedup {
   private[graft] def tempRebalanceOf(docs: DataFrame): DataFrame = {
     val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
     val nMin = counts.agg(min(col("n_lang")).as("n_min"))
-    val bucket = conv(substring(fastMd5(concat(lit("tmp:"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " "))), 1, 4),
-      16, 10).cast("long") % 1000
+    val bucket = conv(substring(fastMd5(concat(lit("tmp:"), normText)),
+      1, 4), 16, 10).cast("long") % 1000
     docs
       .select(col("doc_id"), col("lang"), bucket.as("bucket"))
       .join(broadcast(counts), Seq("lang"))
@@ -2196,9 +2244,8 @@ object TextDedup {
     val docs = Tables.documents(spark, dir)
     val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
     val nMin = counts.agg(min(col("n_lang")).as("n_min"))
-    val bucket = conv(substring(fastMd5(concat(lit("tmp:"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " "))), 1, 4),
-      16, 10).cast("long") % 1000
+    val bucket = conv(substring(fastMd5(concat(lit("tmp:"), normText)),
+      1, 4), 16, 10).cast("long") % 1000
     val x = col("n_min").cast("double") / col("n_lang")
     docs
       .select(col("lang"), bucket.as("bucket"))
@@ -2574,7 +2621,7 @@ object TextDedup {
     import org.apache.spark.sql.graftfn.GraftExpressions.intDiv
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
-        size(split(trim(lower(col("text"))), "\\s+")).as("n_toks"))
+        size(toks).as("n_toks"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
       .withColumn("ln_micro",
@@ -2618,7 +2665,7 @@ object TextDedup {
     import org.apache.spark.sql.graftfn.GraftExpressions.intDiv
     val docs = Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"),
-        size(split(trim(lower(col("text"))), "\\s+")).cast("long").as("nt"))
+        size(toks).cast("long").as("nt"))
       .select(col("source"), col("doc_id"),
         least(col("nt"), lit(PackC)).as("t"), (col("nt") > PackC).as("tr"))
       .as[(String, Long, Long, Boolean)]
@@ -2945,11 +2992,11 @@ object TextDedup {
       .limit(2000)
   }
 
-  /** The encoding scan over a (`doc_id`, `t`) frame — shared verbatim
-    * with the streaming ingest twin
-    * ([[graft.streaming.CorpusStreams.encodingGate]]): entirely
+  /** The encoding scan over a (`doc_id`, `t`) frame — entirely
     * stateless per-row expressions, so the batch plan IS the stream
-    * plan.
+    * plan: run on a streaming frame it is the t20 ingest gate, and
+    * mojibake is caught before a corrupt decode ever reaches the
+    * standing corpus (`StreamingSpec` pins stream ≡ batch).
     */
   private[graft] def encodingSanityOf(noisy: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftfn.GraftExpressions.intDiv
@@ -2995,9 +3042,8 @@ object TextDedup {
     * never funnels its rows into one task.
     */
   def p14StratifiedSample(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = conv(substring(fastMd5(concat(lit("strat:"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " "))), 1, 4),
-      16, 10).cast("long")
+    val bucket = conv(substring(fastMd5(concat(lit("strat:"), normText)),
+      1, 4), 16, 10).cast("long")
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), bucket.as("bucket"))
     val strata = curriculumFrame(spark, dir)
@@ -3022,9 +3068,8 @@ object TextDedup {
     * global sort. Output: decile, rate, bucket, and the keep bit.
     */
   def p11AnnealMix(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = conv(substring(fastMd5(concat(lit("ann:"),
-        regexp_replace(trim(lower(col("text"))), "\\s+", " "))), 1, 4),
-      16, 10).cast("long") % 1000
+    val bucket = conv(substring(fastMd5(concat(lit("ann:"), normText)),
+      1, 4), 16, 10).cast("long") % 1000
     val buckets = Tables.documents(spark, dir)
       .select(col("doc_id"), bucket.as("bucket"))
     curriculumFrame(spark, dir)
@@ -4056,7 +4101,7 @@ object TextDedup {
     val q = Ingest.admissionSignals(docs)
       .select(col("doc_id"), col("quality"))
     val h = docs.select(col("doc_id"),
-      fastMd5(regexp_replace(trim(lower(col("text"))), "\\s+", " ")).as("h"))
+      contentHash.as("h"))
     val dup = h
       .join(h.groupBy(col("h")).agg(count(lit(1)).as("cnt")), Seq("h"))
       .select(col("doc_id"), (col("cnt") > 1).as("is_dup"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.queries.TextDedup
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -17,9 +18,9 @@ object CorpusStreams {
   /** Ingest-time exact dedup — the streaming twin of d1's decision: a
     * document is admitted iff its normalized-content hash was never seen
     * before (`dropDuplicates` keyed on the d1 hash — the same
-    * `fast_md5(regexp_replace(trim(lower(text))))` normalization, so the
-    * streaming filter and the batch canonical-set agree on what "same
-    * document" means). Across micro-batches the earlier arrival always
+    * [[graft.queries.TextDedup.contentHash]] column, so the streaming
+    * filter and the batch canonical-set agree on what "same document"
+    * means). Across micro-batches the earlier arrival always
     * wins (keyed state); within one micro-batch the survivor among
     * simultaneous duplicates is arbitrary — at ingest that tie is
     * meaningless (the copies are identical by construction). State is
@@ -30,13 +31,9 @@ object CorpusStreams {
     * trades completeness for GC — the same completeness/state dial as
     * the batch d6b/d9b caps.
     */
-  def ingestDedup(docs: DataFrame): DataFrame = {
-    import graft.functions.FastMd5.fastMd5
-    docs.select(col("doc_id"),
-        fastMd5(regexp_replace(trim(lower(col("text"))), "\\s+", " "))
-          .as("text_hash"))
+  def ingestDedup(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextDedup.contentHash.as("text_hash"))
       .dropDuplicates("text_hash")
-  }
 
   /** Ingest-time quality admission — the streaming twin of p4's filter.
     * The batch operator is stateless per-row math, so the twin IS the
@@ -52,28 +49,6 @@ object CorpusStreams {
     graft.queries.Ingest.admissionDecision(
       graft.queries.Ingest.admissionSignals(docs))
 
-  /** Ingest-time PII scrub — the streaming twin of t14's redaction
-    * layer, sharing [[graft.queries.Ingest.piiScrubOf]] verbatim (the
-    * batch query additionally injects its deterministic test PII; the
-    * stream scrubs whatever arrives). Stateless map pass like
-    * [[qualityAdmission]] — PII never crosses the ingest boundary, the
-    * posture a production pipeline wants (scrubbing a 100 TB corpus
-    * after the fact still leaves the raw crawl on disk). Together the
-    * three CorpusStreams operators are the full ingest trio: admit
-    * (quality), scrub (PII), dedup (content hash).
-    */
-  def piiScrub(docs: DataFrame): DataFrame =
-    graft.queries.Ingest.piiScrubOf(docs)
-
-  /** Streaming twin of the t20 encoding gate — the batch expressions
-    * verbatim ([[graft.queries.TextDedup.encodingSanityOf]] is entirely
-    * stateless per-row math), so mojibake is caught AT ingest, before a
-    * corrupt decode ever reaches the standing corpus. Expects a
-    * (`doc_id`, `t`) frame like the batch side.
-    */
-  def encodingGate(docs: DataFrame): DataFrame =
-    graft.queries.TextDedup.encodingSanityOf(docs)
-
   /** Running (source, token, c) counts of a streaming corpus — the
     * standing term-frequency table an ingest pipeline maintains so
     * vocabulary-level diagnostics never re-scan the corpus; t32's
@@ -84,141 +59,9 @@ object CorpusStreams {
     */
   def tokenCounts(docs: DataFrame): DataFrame =
     docs.select(col("source"),
-        explode(split(trim(lower(col("text"))), "\\s+")).as("token"))
+        explode(TextDedup.toks).as("token"))
       .groupBy(col("source"), col("token"))
       .agg(count(lit(1)).as("c"))
-
-  /** Distinct (doc_id, shingle, n_shingles) triples of a STREAMING
-    * document frame. The batch `TextDedup.shingleIndex` derives shingles
-    * with a `lead` window — unavailable on streams — so this twin uses a
-    * compiled `flatMap` closure (each document's shingles depend only on
-    * its own row, so the map-side closure is exactly as distributed as
-    * the window form, minus the per-doc sort). `StreamingSpec` pins the
-    * shingle space identical to the batch index row-for-row.
-    */
-  private[graft] def streamShingles(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val distinct = shingleSetOf(text)
-        distinct.iterator.map(s => (id, s, distinct.size))
-      }
-      .toDF("doc_id", "shingle", "n_shingles")
-  }
-
-  /** The ONE normalization+shingling closure both streaming shingle
-    * forms share — extracted so a trim/locale fix can never land on one
-    * flatMap and miss the other (that drift would silently break the
-    * spec-pinned batch ≡ stream shingle identity).
-    *
-    * Locale.ROOT: Scala's bare toLowerCase is default-locale sensitive
-    * (Turkish dotless-ı would diverge from Spark SQL's
-    * locale-independent lower()). Space-only trim: Java's String.trim
-    * strips every char <= U+0020 (tabs, newlines) but the batch index
-    * and every oracle use SQL trim (U+0020 only) — a leading tab must
-    * produce the same leading empty token here.
-    */
-  private[graft] def shingleSetOf(text: String): Set[String] = {
-    val toks = text.replaceAll("^ +| +$", "")
-      .toLowerCase(java.util.Locale.ROOT).split("\\s+")
-    if (toks.length < 3) Set.empty
-    else toks.sliding(3).map(_.mkString(" ")).toSet
-  }
-
-  /** Per-document winnow fingerprints of a STREAMING document frame —
-    * d30's selection rule re-expressed as a compiled per-doc flatMap
-    * closure, the [[streamShingles]] precedent one level up the dedup
-    * stack: the batch form needs two window functions (lead + windowed
-    * min), both unavailable on streams, but every selection depends only
-    * on the document's own token sequence, so the map-side closure is
-    * exactly as distributed — an ingest-time near-dup probe joins these
-    * against a standing fingerprint index the way [[imageDedupAgainst]]
-    * probes phashes.
-    *
-    * Since r14 the stream selects in the WIDE 36-bit space
-    * ([[graft.queries.TextDedup.WinnowWideHex]]) — the space the gated
-    * d30 contract and every at-scale consumer have lived in since r13
-    * (the shared `winnowSelectionAsset`). An ingest probe selecting in
-    * the demoted 16-bit narrow space would pick DIFFERENT fingerprints
-    * than the standing index it probes, breaking the batch/ingest seam
-    * the engine guarantees everywhere else (r13 verdict, wrong #1).
-    * `StreamingSpec` pins the selected (doc_id, fp) set row-identical
-    * to the batch wide selection (`winnowLocalSelect(…, WinnowWideHex)`,
-    * the selection asset's uncapped base — the cap is standing-side,
-    * like imageDedupAgainst's band probe); a narrow pin remains for the
-    * [[graft.queries.TextDedup.d30WinnowingNarrow]] audit leg.
-    */
-  def winnowStream(docs: DataFrame,
-      hexChars: Int = graft.queries.TextDedup.WinnowWideHex): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        winnowFingerprintSetOf(text, hexChars).iterator.map(fp => (id, fp))
-      }
-      .toDF("doc_id", "fp")
-  }
-
-  /** The winnow-selection closure: `hexChars`-nibble md5-prefix hashes
-    * of the word-3-grams (the [[shingleSetOf]] tokenizer, positions
-    * kept), each 4-window selecting (min hash, rightmost pos) through
-    * the same composite h·F+(F−1−pos) integer key (F = WinnowPosField =
-    * 2²⁴, wide enough for 10⁷-token documents) as the batch SQL — kept
-    * in ONE place so a tokenizer or hash-width change can't drift
-    * between the surfaces. The nibble walk mirrors the batch
-    * `conv(substring(md5(...), 1, hexChars), 16, 10)` exactly: the
-    * first `hexChars` hex digits of the digest, high nibble first.
-    */
-  private[graft] def winnowFingerprintSetOf(text: String,
-      hexChars: Int = graft.queries.TextDedup.WinnowWideHex): Set[Long] = {
-    val toks = text.replaceAll("^ +| +$", "")
-      .toLowerCase(java.util.Locale.ROOT).split("\\s+")
-    if (toks.length < 3) return Set.empty
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hashes = toks.sliding(3).map { sh =>
-      md.reset()
-      val d = md.digest(sh.mkString(" ").getBytes("UTF-8"))
-      var h = 0L
-      var k = 0
-      while (k < hexChars) {
-        val b = d(k / 2) & 0xff
-        h = (h << 4) | (if (k % 2 == 0) b >>> 4 else b & 0xf)
-        k += 1
-      }
-      h
-    }.toArray
-    val w = graft.queries.TextDedup.WinnowW
-    if (hashes.length < w) Set.empty
-    else (0 to hashes.length - w).map { i =>
-      val f = graft.queries.TextDedup.WinnowPosField
-      // position clamps at the field boundary like the batch side
-      (i until i + w).map(j =>
-        hashes(j) * f + (f - 1L - math.min(j.toLong, f - 1L))).min / f
-    }.toSet
-  }
-
-  /** [[streamShingles]] with the document's arrival timestamp carried
-    * through the flatMap — every shingle of a document shares its
-    * arrival instant, which is what lets the watermarked alert
-    * aggregation below group by event-time window without splitting a
-    * document's shingles across state keys. Input columns
-    * `(doc_id, text, arrival_ts)`.
-    */
-  private[graft] def streamShinglesTs(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text"),
-        col("arrival_ts").cast("timestamp"))
-      .as[(Long, String, java.sql.Timestamp)]
-      .flatMap { case (id, text, ts) =>
-        val distinct = shingleSetOf(text)
-        distinct.iterator.map(s => (id, ts, s, distinct.size))
-      }
-      .toDF("doc_id", "arrival_ts", "shingle", "n_shingles")
-  }
 
   /** The admitted-corpus SINK: quality admission → keep-filter →
     * parquet file sink with a checkpoint. This is the write half of the
@@ -284,7 +127,7 @@ object CorpusStreams {
   def lmXentAlerts(newDocs: DataFrame, standing: DataFrame,
       watermarkDelay: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
-    val toks = split(trim(lower(col("text"))), "\\s+")
+    import TextDedup.toks
     val n = size(col("toks"))
     def bigrams = explode(zip_with(slice(col("toks"), lit(1), n - 1),
       slice(col("toks"), lit(2), n - 1),
@@ -348,7 +191,7 @@ object CorpusStreams {
   def perplexityBucketAlerts(newDocs: DataFrame, standing: DataFrame,
       watermarkDelay: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
-    val toks = split(trim(lower(col("text"))), "\\s+")
+    import TextDedup.toks
     // OFFLINE assets (persist: the static side of a stream-static join
     // re-evaluates per micro-batch; the LM and cutpoints must pin, both
     // for cost and because the cutpoint derivation runs the full batch
@@ -544,7 +387,7 @@ object CorpusStreams {
       bitsPerKey: Long = 20L): DataFrame = {
     import graft.functions.FastMd5.fastMd5
     import org.apache.spark.sql.graftfn.GraftExpressions
-    val K = graft.queries.TextDedup.DupSpanLen
+    val K = TextDedup.DupSpanLen
     val distinctW = graft.queries.TextDedup.windowHashes(standing)
       .select(col("whash")).distinct().persist()
     val n = distinctW.count()
@@ -553,8 +396,7 @@ object CorpusStreams {
       .head().getAs[Array[Byte]](0)
     distinctW.unpersist()
     newDocs
-      .select(col("doc_id"),
-        split(trim(lower(col("text"))), "\\s+").as("toks"))
+      .select(col("doc_id"), TextDedup.toks.as("toks"))
       .select(col("doc_id"),
         transform(
           sequence(lit(0), greatest(size(col("toks")) - K, lit(0))),
@@ -633,10 +475,8 @@ object CorpusStreams {
     * release; arriving shards join it map-side.
     */
   def ingestDedupAgainst(newDocs: DataFrame, standing: DataFrame): DataFrame = {
-    import graft.functions.FastMd5.fastMd5
-    val standingHashes = standing.select(
-      fastMd5(regexp_replace(trim(lower(col("text"))), "\\s+", " "))
-        .as("text_hash")).distinct()
+    val standingHashes =
+      standing.select(TextDedup.contentHash.as("text_hash")).distinct()
     ingestDedup(newDocs).join(standingHashes, Seq("text_hash"), "left_anti")
   }
 
@@ -660,21 +500,8 @@ object CorpusStreams {
     * timestamp, state evicts at the watermark, and alerts emit once in
     * append mode.
     */
-  def nearDupAlerts(newDocs: DataFrame, standing: DataFrame): DataFrame = {
-    val sIdx = graft.queries.TextDedup.shingleIndex(standing)
-    val sSizes = sIdx.groupBy(col("doc_id")).agg(count(lit(1)).as("n_old"))
-    val sFull = sIdx.join(sSizes, Seq("doc_id"))
-      .select(col("doc_id").as("old_id"), col("shingle"), col("n_old"))
-    streamShingles(newDocs)
-      .join(sFull, Seq("shingle")) // stream-static inner join
-      .groupBy(col("doc_id").as("new_id"), col("old_id"))
-      .agg(count(lit(1)).as("shared"),
-        max(col("n_shingles")).as("n_new"), max(col("n_old")).as("n_o"))
-      .select(col("new_id"), col("old_id"),
-        round(col("shared").cast("double")
-          / (col("n_new") + col("n_o") - col("shared")), 6).as("jaccard"))
-      .filter(col("jaccard") >= 0.8)
-  }
+  def nearDupAlerts(newDocs: DataFrame, standing: DataFrame): DataFrame =
+    nearDupAlertsOf(newDocs, standing, clock = None)
 
   /** Ingest-time UNIFIED curation — p9's streaming half: per arriving
     * document, the one keep bit a training pipeline consumes, decided
@@ -703,11 +530,9 @@ object CorpusStreams {
       standingEmb: DataFrame,
       watermarkDelay: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
-    import graft.functions.FastMd5.fastMd5
     import org.apache.spark.sql.graftfn.GraftExpressions.floatVecDot
     val standingHashes = standingDocs.select(
-        fastMd5(regexp_replace(trim(lower(col("text"))), "\\s+", " "))
-          .as("text_hash"))
+        TextDedup.contentHash.as("text_hash"))
       .distinct().withColumn("lex_hit", lit(true)).persist()
     standingHashes.count()
     val cells = standingEmb.select(col("label"),
@@ -715,14 +540,13 @@ object CorpusStreams {
         sqrt(floatVecDot(col("embedding"), col("embedding"))).as("s_nrm"))
       .persist()
     cells.count()
-    val (_, split) = graft.queries.TextDedup.splitCols
+    val (_, split) = TextDedup.splitCols
     graft.queries.Ingest.admissionDecision(
         graft.queries.Ingest.admissionSignals(newDocs,
           keep = Seq("text", "arrival_ts", "label", "embedding")))
       .withColumnRenamed("keep", "q_keep")
       .withColumn("split", split)
-      .withColumn("text_hash",
-        fastMd5(regexp_replace(trim(lower(col("text"))), "\\s+", " ")))
+      .withColumn("text_hash", TextDedup.contentHash)
       .withColumn("nrm", sqrt(floatVecDot(col("embedding"), col("embedding"))))
       .drop("text")
       .withWatermark("arrival_ts", watermarkDelay)
@@ -758,16 +582,33 @@ object CorpusStreams {
     */
   def nearDupAlertsWatermarked(newDocs: DataFrame, standing: DataFrame,
       watermarkDelay: String = "10 minutes",
-      windowDur: String = "10 minutes"): DataFrame = {
-    val sIdx = graft.queries.TextDedup.shingleIndex(standing)
+      windowDur: String = "10 minutes"): DataFrame =
+    nearDupAlertsOf(newDocs, standing, Some((watermarkDelay, windowDur)))
+
+  /** The one body of both near-dup twins: the arrivals' shingles (the
+    * batch index kernel, [[graft.queries.TextDedup.docShingles]]) join
+    * the standing inverted index with its per-doc sizes, and the
+    * shared-shingle count per (new, standing) pair scores Jaccard.
+    * `clock = Some((watermarkDelay, windowDur))` watermarks the
+    * arrivals on `arrival_ts` and adds the event-time window to the
+    * pair key; `None` is the unbounded-state form.
+    */
+  private def nearDupAlertsOf(newDocs: DataFrame, standing: DataFrame,
+      clock: Option[(String, String)]): DataFrame = {
+    val sIdx = TextDedup.shingleIndex(standing)
     val sSizes = sIdx.groupBy(col("doc_id")).agg(count(lit(1)).as("n_old"))
     val sFull = sIdx.join(sSizes, Seq("doc_id"))
       .select(col("doc_id").as("old_id"), col("shingle"), col("n_old"))
-    streamShinglesTs(newDocs)
-      .withWatermark("arrival_ts", watermarkDelay)
-      .join(sFull, Seq("shingle")) // stream-static inner join
-      .groupBy(window(col("arrival_ts"), windowDur),
-        col("doc_id").as("new_id"), col("old_id"))
+    val arrivals = clock match {
+      case None => TextDedup.docShingles(newDocs)
+      case Some((delay, _)) => TextDedup.docShingles(newDocs.withColumn(
+          "arrival_ts", col("arrival_ts").cast("timestamp")), "arrival_ts")
+        .withWatermark("arrival_ts", delay)
+    }
+    val windowKey =
+      clock.map { case (_, dur) => window(col("arrival_ts"), dur) }.toSeq
+    arrivals.join(sFull, Seq("shingle")) // stream-static inner join
+      .groupBy(windowKey :+ col("doc_id").as("new_id") :+ col("old_id"): _*)
       .agg(count(lit(1)).as("shared"),
         max(col("n_shingles")).as("n_new"), max(col("n_old")).as("n_o"))
       .select(col("new_id"), col("old_id"),
@@ -802,8 +643,8 @@ object CorpusStreams {
     * probe is set-shaped). `StreamingSpec` pins the twin against batch
     * [[graft.queries.TextDedup.d34IncrementalComponents]].
     */
-  final class ComponentLedgerMaintainer(standingDocs: DataFrame) {
-    import graft.queries.TextDedup
+  final class ComponentLedgerMaintainer(standingDocs: DataFrame)
+      extends ReplayGuardedMerge {
     private def ck(df: DataFrame): DataFrame = df.localCheckpoint(true)
     private var postings: DataFrame =
       ck(TextDedup.shingleIndex(standingDocs))
@@ -841,18 +682,27 @@ object CorpusStreams {
 
     /** The live (id, component) table after all merges so far. */
     def currentLedger: DataFrame = synchronized(ledger)
+  }
+
+  /** The replay-guarded `attach` of the three foreachBatch maintainers
+    * ([[ComponentLedgerMaintainer]], [[WinnowLedgerMaintainer]],
+    * [[TrainFpMaintainer]]), written once.
+    */
+  private[streaming] sealed trait ReplayGuardedMerge {
+    def mergeBatch(batch: DataFrame): Unit
 
     private var lastBatchId = -1L
     private var wasAttached = false
 
-    /** Attach to a streaming (doc_id, text) frame: one ledger merge per
-      * micro-batch. foreachBatch is at-least-once; replayed batch ids
-      * skip (a re-merged shard would duplicate node and posting rows —
-      * the merge is NOT naturally idempotent). The guard is per
-      * maintainer lifetime, so attach fails fast on re-attach unless
-      * `resume = true` — a NEW query's ids restart at 0 and would be
-      * silently dropped; re-attach is only valid for a restarted query
-      * re-delivering the same batches (r16 ADVICE).
+    /** Attach to a streaming (doc_id, text) frame: one [[mergeBatch]]
+      * per micro-batch. foreachBatch is at-least-once, and no
+      * maintainer's merge is naturally idempotent (a re-merged shard
+      * would duplicate node, posting or verdict rows), so replayed
+      * batch ids skip. The guard is per maintainer lifetime, so attach
+      * fails fast on re-attach unless `resume = true` — a NEW query's
+      * ids restart at 0 and would be silently dropped; re-attach is
+      * only valid for a restarted query re-delivering the same batches
+      * (r16 ADVICE).
       */
     def attach(docs: DataFrame, resume: Boolean = false)
         : org.apache.spark.sql.streaming.StreamingQuery = synchronized {
@@ -915,8 +765,7 @@ object CorpusStreams {
       cap: Int = graft.queries.TextDedup.WinnowSweepCap,
       auditEdges: Boolean = false,
       bucketDir: Option[String] = None,
-      nBuckets: Int = 64) {
-    import graft.queries.TextDedup
+      nBuckets: Int = 64) extends ReplayGuardedMerge {
     import TextDedup.{WinnowW, WinnowWideHex}
     private val spark = standingDocs.sparkSession
     private def ck(df: DataFrame): DataFrame = df.localCheckpoint(true)
@@ -1047,31 +896,6 @@ object CorpusStreams {
       require(edgeLog != null, "construct with auditEdges = true")
       TextDedup.starContractComponents(nodes, edgeLog)._1
     }
-
-    private var lastBatchId = -1L
-    private var wasAttached = false
-
-    /** Attach to a streaming (doc_id, text) frame: one ledger merge per
-      * micro-batch. foreachBatch is at-least-once; replayed batch ids
-      * skip (re-merging a shard would duplicate node and capped-posting
-      * rows — the merge is NOT naturally idempotent). Fails fast on
-      * re-attach unless `resume = true` (see
-      * [[ComponentLedgerMaintainer.attach]] — r16 ADVICE).
-      */
-    def attach(docs: DataFrame, resume: Boolean = false)
-        : org.apache.spark.sql.streaming.StreamingQuery = synchronized {
-      require(!wasAttached || resume,
-        "maintainer already attached: a new query's batch ids restart " +
-        "at 0 and the replay guard would silently drop its first " +
-        "batches; pass resume = true only when re-attaching a " +
-        "restarted query that re-delivers the same batches")
-      wasAttached = true
-      docs.writeStream.outputMode("update")
-        .foreachBatch((b: DataFrame, id: Long) => synchronized {
-          if (id > lastBatchId) { mergeBatch(b); lastBatchId = id }
-        })
-        .start()
-    }
   }
 
   /** Per-document (doc_id, source, n) token counts — the stateless
@@ -1082,7 +906,7 @@ object CorpusStreams {
     */
   def docTokenCounts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("source"),
-      size(split(trim(lower(col("text"))), "\\s+")).cast("long").as("n"))
+      size(TextDedup.toks).cast("long").as("n"))
 
   /** p34's dedup dividend as a read-time finisher over a live component
     * ledger (a [[WinnowLedgerMaintainer]]'s `currentLedger`) joined to
@@ -1099,7 +923,7 @@ object CorpusStreams {
   /** Ingest-time eval-set decontamination against a standing corpus —
     * d12w's streaming half, closing the LAST open batch/ingest seam
     * (r14 verdict, directive 1): exact dups (d1/d13), near-dups
-    * (winnowStream / nearDupAlerts), semantic dups (s9), image/audio/
+    * (winnow selections / nearDupAlerts), semantic dups (s9), image/audio/
     * video dups (m6/m14/m15) and quality/PII/LM gates all run at
     * ingest, but an arriving EVAL document could previously only be
     * checked for train-set leakage at the next batch release audit — a
@@ -1119,14 +943,16 @@ object CorpusStreams {
     * point-in-time by construction; a stream whose train set must
     * ADVANCE as train docs arrive uses [[TrainFpMaintainer]] instead
     * (r15 verdict, directive 1).
-    * Each ARRIVING document computes its per-doc wide selections via
-    * [[winnowFingerprintSetOf]] (the winnowStream closure — per-doc-
-    * local, map-side, UNCAPPED like batch d12w's probe: the rank cap
-    * exists to bound pair emission and no pairs are emitted here), with
-    * its split and arrival instant carried through the flatMap as
-    * per-DOC fields — never computed on the exploded frame (the r14
-    * generator-select-list lesson: a doc-scale expression evaluated
-    * per selection row is the measured 17× blowup). Val/test arrivals
+    * Each ARRIVING document computes its per-doc wide selections with
+    * the batch kernels ([[graft.queries.TextDedup.winnowSelection]],
+    * the array [[graft.queries.TextDedup.winnowLocalSelect]] explodes —
+    * per-doc-local, map-side, UNCAPPED like batch d12w's probe: the
+    * rank cap exists to bound pair emission and no pairs are emitted
+    * here). Its split and arrival instant are computed in a projection
+    * below the explode and ride through it as per-DOC attributes —
+    * never computed on the exploded frame (the r14 generator-select-
+    * list lesson: a doc-scale expression evaluated per selection row is
+    * the measured 17× blowup). Val/test arrivals
     * left-join the standing fingerprint set on the slim fp key and
     * aggregate per (event-time window, doc) — state evicts at the
     * watermark and each verdict emits EXACTLY ONCE in append mode,
@@ -1144,9 +970,7 @@ object CorpusStreams {
       standing: TrainFpSnapshot,
       watermarkDelay: String = "10 minutes",
       windowDur: String = "10 minutes"): DataFrame = {
-    val spark = standing.fps.sparkSession
-    import spark.implicits._
-    val (_, split) = graft.queries.TextDedup.splitCols
+    val (_, split) = TextDedup.splitCols
     val trainFps = standing.fps.withColumn("seen", lit(true))
     // EVERY arrival emits one null-fp CLOCK-CARRIER row; only eval
     // arrivals additionally emit their selections. The carrier is the
@@ -1161,19 +985,17 @@ object CorpusStreams {
     // watermark and every pending verdict stalled). With the carrier,
     // a train-heavy ingest lull (~80% of a real stream) still drives
     // the clock, and train docs cost ONE slim row each — their
-    // selections are never computed, never join, and their state
-    // evicts at the watermark like everything else.
+    // selections are never computed (the CASE runs the kernel only
+    // for eval arrivals), never join, and their state evicts at the
+    // watermark like everything else.
+    val selections = when(col("split") === "train", typedLit(Seq.empty[Long]))
+      .otherwise(TextDedup.winnowSelection(TextDedup.WinnowW,
+        TextDedup.WinnowWideHex))
     val sel = newDocs
-      .select(col("doc_id").cast("long"), col("text"),
-        col("arrival_ts").cast("timestamp"), split.as("split"))
-      .as[(Long, String, java.sql.Timestamp, String)]
-      .flatMap { case (id, text, ts, sp) =>
-        val carrier = Iterator((id, ts, sp, Option.empty[Long]))
-        if (sp == "train") carrier
-        else carrier ++ winnowFingerprintSetOf(text).iterator
-          .map(fp => (id, ts, sp, Some(fp)))
-      }
-      .toDF("doc_id", "arrival_ts", "split", "fp")
+      .select(col("doc_id"), col("arrival_ts").cast("timestamp")
+        .as("arrival_ts"), split.as("split"), col("text"))
+      .select(col("doc_id"), col("arrival_ts"), col("split"),
+        explode(concat(array(lit(null).cast("long")), selections)).as("fp"))
     // the eval cut lives ABOVE the aggregation as a HAVING on an
     // AGGREGATE expression (max over a group-key predicate): a
     // predicate on an aggregate function cannot push below the
@@ -1214,7 +1036,6 @@ object CorpusStreams {
     * set against this from-scratch build at scale.
     */
   private[graft] def trainFpsOf(docs: DataFrame): DataFrame = {
-    import graft.queries.TextDedup
     val (_, split) = TextDedup.splitCols
     TextDedup.winnowLocalSelect(
         docs.select(col("doc_id"), col("text"), split.as("split"))
@@ -1366,8 +1187,7 @@ object CorpusStreams {
       compactEvery: Int = 64,
       bucketDir: Option[String] = None,
       nBuckets: Int = 64,
-      maxFilesPerBucket: Int = 64) {
-    import graft.queries.TextDedup
+      maxFilesPerBucket: Int = 64) extends ReplayGuardedMerge {
     private val spark = standingDocs.sparkSession
     private def ck(df: DataFrame): DataFrame = df.localCheckpoint(true)
     private def bucketed = bucketDir.isDefined
@@ -1442,8 +1262,6 @@ object CorpusStreams {
     private val verdictBatches =
       scala.collection.mutable.ArrayBuffer[DataFrame]()
     private var seq = 0L
-    private var lastBatchId = -1L
-    private var wasAttached = false
 
     /** The d12w verdict columns + the `rev` sequence for `sel` rows
       * (doc_id, split, fp) against the CURRENT post-merge set.
@@ -1603,29 +1421,6 @@ object CorpusStreams {
     def drainTo(dir: String): Unit = {
       val out = drain()
       if (!out.isEmpty) out.write.mode("append").parquet(dir)
-    }
-
-    /** Attach to a streaming (doc_id, text) frame: one merge per
-      * micro-batch, replayed batch ids skipped (foreachBatch is
-      * at-least-once). Fails fast on re-attach unless `resume = true`:
-      * the batch-id guard is per maintainer lifetime, so a NEW query's
-      * ids (restarting at 0) would be silently dropped — re-attach is
-      * only valid for a restarted query re-delivering the same batches
-      * (r16 ADVICE).
-      */
-    def attach(docs: DataFrame, resume: Boolean = false)
-        : org.apache.spark.sql.streaming.StreamingQuery = synchronized {
-      require(!wasAttached || resume,
-        "maintainer already attached: a new query's batch ids restart " +
-        "at 0 and the replay guard would silently drop its first " +
-        "batches; pass resume = true only when re-attaching a " +
-        "restarted query that re-delivers the same batches")
-      wasAttached = true
-      docs.writeStream.outputMode("update")
-        .foreachBatch((b: DataFrame, id: Long) => synchronized {
-          if (id > lastBatchId) { mergeBatch(b); lastBatchId = id }
-        })
-        .start()
     }
   }
 }

@@ -87,7 +87,10 @@ object EventStreams {
     * immutable), and the leaderboard is a read-time re-weighting of
     * them ([[graft.queries.Events.decayedFromPartials]]) — raw events
     * are never revisited when the decay anchor advances. Type-agnostic
-    * twin of [[windowedUserCounts]].
+    * twin of [[windowedUserCounts]]. It is also e21's streamed partials:
+    * the heatmap finisher (`Events.heatmapOfPartials`) accepts this
+    * per-(hour, user) asset directly, so the dashboard grid is a bounded
+    * read over closed windows (the e13/e17 split).
     */
   def hourlyUserActivity(events: DataFrame): DataFrame =
     events.withWatermark("ts", "2 hours")
@@ -95,16 +98,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").cast("timestamp_ntz").as("hour"),
         col("user_id"), col("n"))
-
-  /** Streaming twin of Events.e21ActivityHeatmap's partials half: the
-    * hour-grain counts the heatmap finisher reads are exactly
-    * [[hourlyUserActivity]] rolled up over users — the finisher
-    * (`Events.heatmapOfPartials`) accepts the per-(hour, user) asset
-    * directly, so the dashboard grid is a bounded read over closed
-    * windows and raw events are never revisited (the e13/e17 split).
-    */
-  def heatmapPartials(events: DataFrame): DataFrame =
-    hourlyUserActivity(events)
 
   /** Streaming twin of Events.e22NativeSessions: the SAME native
     * `session_window` aggregation ([[graft.queries.Events.sessionFrame]]
@@ -142,42 +135,6 @@ object EventStreams {
       .agg(approx_count_distinct(col("user_id"), 0.02).as("approx_users"),
         count(lit(1)).as("n_events"))
 
-  /** Streaming twin of Events.e3JsonExtract: JSON property extraction
-    * stays codegen (`get_json_object`) on the stream side too; the
-    * per-type min/max/sum state is O(1) per key.
-    */
-  def jsonExtractStream(events: DataFrame): DataFrame =
-    events
-      .select(col("event_type"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-        min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-
-  /** Streaming twin of Events.e5Funnel: the per-user funnel state is
-    * three conditional-min timestamps — an ordinary streaming aggregate
-    * (O(1) state per user), with the ordering predicates projected after
-    * the aggregation exactly as in batch.
-    */
-  def funnelStream(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "view", unix_micros(col("ts"))))
-          .as("first_view"),
-        min(when(col("event_type") === "click", unix_micros(col("ts"))))
-          .as("first_click"),
-        min(when(col("event_type") === "purchase", unix_micros(col("ts"))))
-          .as("first_purchase"))
-      .select(col("user_id"),
-        col("first_view").isNotNull.as("viewed"),
-        (col("first_click").isNotNull && col("first_view").isNotNull &&
-          col("first_click") > col("first_view")).as("clicked_after_view"),
-        (col("first_purchase").isNotNull && col("first_click").isNotNull &&
-          col("first_view").isNotNull &&
-          col("first_click") > col("first_view") &&
-          col("first_purchase") > col("first_click")).as("full_funnel"))
-
   case class PairOut(user_id: Long, click_id: Long, view_id: Long,
       gap_sec: Double)
 
@@ -206,14 +163,12 @@ object EventStreams {
             state.remove()
             Iterator.empty
           } else {
-            def us(ts: java.sql.Timestamp): Long =
-              ts.getTime * 1000 + (ts.getNanos / 1000) % 1000
-            val sorted = rows.toSeq.sortBy(e => (us(e.ts), e.event_id))
+            val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
             var views = state.getOption.map(_.views).getOrElse(Nil)
             val out = Seq.newBuilder[PairOut]
             var newest = views.headOption.map(_._2).getOrElse(Long.MinValue)
             sorted.foreach { e =>
-              val t = us(e.ts)
+              val t = micros(e.ts)
               newest = math.max(newest, t)
               e.event_type match {
                 case "view" => views = (e.event_id, t) :: views
@@ -511,8 +466,6 @@ object EventStreams {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (userId: Long, rows: Iterator[RangeIn],
             state: GroupState[TimedFunnelState]) =>
-          def us(ts: java.sql.Timestamp): Long =
-            ts.getTime * 1000 + (ts.getNanos / 1000) % 1000
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
@@ -533,7 +486,7 @@ object EventStreams {
               .getOrElse(TimedFunnelState(Long.MaxValue, Nil, Nil))
             var newest = Long.MinValue
             rows.foreach { e =>
-              val t = us(e.ts)
+              val t = micros(e.ts)
               newest = math.max(newest, t)
               e.event_type match {
                 case "view" => if (t < s.fv) s = s.copy(fv = t)
@@ -592,14 +545,12 @@ object EventStreams {
             state.remove()
             Iterator.empty
           } else {
-            def us(ts: java.sql.Timestamp): Long =
-              ts.getTime * 1000 + (ts.getNanos / 1000) % 1000
-            val sorted = rows.toSeq.sortBy(e => (us(e.ts), e.event_id))
+            val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
             var views = state.getOption.map(_.viewUs).getOrElse(Nil)
             val out = Seq.newBuilder[RangeOut]
             var newest = views.headOption.getOrElse(Long.MinValue)
             sorted.foreach { e =>
-              val t = us(e.ts)
+              val t = micros(e.ts)
               newest = math.max(newest, t)
               e.event_type match {
                 case "view" => views = t :: views
@@ -765,31 +716,6 @@ object EventStreams {
       .select(timestamp_micros(col("cohort_us")).cast("timestamp_ntz")
           .as("cohort_hour"),
         col("n_users"), col("ret_1h"), col("ret_24h"))
-
-  /** Streaming half of the e15 twin: the per-user RFM profile
-    * (last-active day, event count, purchase cents) maintained as an
-    * ordinary streaming aggregate — max/count/sum are all mergeable, so
-    * state is O(1) per user and the streamed table equals the batch
-    * aggregate over the same rows at ANY arrival order. This runs the
-    * batch side's exact plan ([[graft.queries.Events.rfmProfileFrame]]),
-    * so stream ≡ batch is by construction, not by parallel maintenance.
-    * Standing-profile state (no watermark) — the same trade as
-    * [[funnelStream]]; the quintile scoring is the bounded finish
-    * ([[graft.queries.Events.rfmFromProfiles]] over one row per user),
-    * the same streaming-pre-agg / serving-finish split as e4/e10/e13.
-    */
-  def rfmProfiles(events: DataFrame): DataFrame =
-    graft.queries.Events.rfmProfileFrame(events)
-
-  /** Streaming half of the e20 churn audit: the per-user recency profile
-    * (count + max event µs — both mergeable, O(1) state per user) as a
-    * standing asset; [[graft.queries.Events.churnFromProfiles]] finishes
-    * verdicts at read time, so recency degrades correctly BETWEEN
-    * arrivals — the profile only stores last_us, and the horizon is
-    * re-derived per read.
-    */
-  def churnProfiles(events: DataFrame): DataFrame =
-    graft.queries.Events.churnProfileFrame(events)
 
   case class StreakDay(user_id: Long, day: Long)
   /** Merged, sorted, non-adjacent runs of consecutive active days —

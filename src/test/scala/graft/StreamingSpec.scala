@@ -89,7 +89,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming JSON extraction equals the batch twin (e3)") {
     import spark.implicits._
     val stream = EventStreams.readEvents(spark, streamDir)
-    val q = EventStreams.jsonExtractStream(stream)
+    val q = Events.jsonExtractFrame(stream)
       .writeStream.outputMode("complete").format("memory")
       .queryName("json_extract")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -158,7 +158,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming funnel equals the batch twin (e5)") {
     import spark.implicits._
     val stream = EventStreams.readEvents(spark, streamDir)
-    val q = EventStreams.funnelStream(stream)
+    val q = Events.funnelFrame(stream)
       .writeStream.outputMode("complete").format("memory")
       .queryName("funnel")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -548,8 +548,8 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "double a@b.co c@d.org trailing"))
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val q = graft.streaming.CorpusStreams
-      .piiScrub(mem.toDS().toDF("doc_id", "text"))
+    val q = graft.queries.Ingest
+      .piiScrubOf(mem.toDS().toDF("doc_id", "text"))
       .writeStream.outputMode("append").format("memory")
       .queryName("pii_scrub").start()
     try {
@@ -582,7 +582,9 @@ class StreamingSpec extends AnyFunSuite {
       (10L, base),                                   // exact copy of 1
       (11L, base + " tail"),                         // near dup of 1 (38/39)
       (12L, (1 to 20).map("q" + _).mkString(" ")),   // unique
-      (13L, base))                                   // within-stream copy of 10
+      (13L, base),                                   // within-stream copy of 10
+      (14L, base + "\t"),                            // trailing tab: 38/39
+      (15L, "alpha beta gamma delta five six seven eight nine ten\n")) // 8/9
     // exact admission: stream-static anti join + within-stream state
     val memA = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
@@ -601,7 +603,7 @@ class StreamingSpec extends AnyFunSuite {
     // 10 exact-dups standing doc 1 → rejected; 13 loses to 10's
     // within-stream state even though 10 itself was rejected (the hash
     // is what's seen, matching d1's normalization space)
-    assert(admitted == Set(11L, 12L), s"admitted=$admitted")
+    assert(admitted == Set(11L, 12L, 14L, 15L), s"admitted=$admitted")
 
     // near-dup alerts: stream-static shingle join + streaming agg
     val memB = org.apache.spark.sql.execution.streaming.runtime
@@ -632,10 +634,13 @@ class StreamingSpec extends AnyFunSuite {
     // carried exactly (38 shared / 39 union)
     assert(alerts.contains((11L, 1L, 0.974359)), s"alerts=$alerts")
     assert(alerts.contains((10L, 1L, 1.0)))
+    // a trailing tab or newline is one more (empty) token, as in batch
+    assert(alerts.contains((14L, 1L, 0.974359)), s"alerts=$alerts")
+    assert(alerts.contains((15L, 2L, 0.888889)), s"alerts=$alerts")
 
     // the streaming shingle space IS the batch index's
-    val streamed = graft.streaming.CorpusStreams
-      .streamShingles(arrivals.toDF("doc_id", "text"))
+    val streamed = graft.queries.TextDedup
+      .docShingles(arrivals.toDF("doc_id", "text"))
       .select(col("doc_id"), col("shingle"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val batchIdx = graft.queries.TextDedup
@@ -648,16 +653,21 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
-    // real corpus texts + crafted edges: too-short doc, leading tab
+    // real corpus texts + crafted edges: too-short doc, leading tab,
+    // trailing tab and newline (one more, empty, token)
     val corpus = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text")).limit(40)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val arrivals = corpus ++ Seq(
-      (9001L, "one two"), (9002L, "\tlead tab one two three four five six"))
+      (9001L, "one two"), (9002L, "\tlead tab one two three four five six"),
+      (9003L, "tab ends this document with several more words\t"),
+      (9004L, "newline ends this document with several more words\n"))
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val q = graft.streaming.CorpusStreams
-      .winnowStream(mem.toDS().toDF("doc_id", "text"))
+    val q = graft.queries.TextDedup
+      .winnowLocalSelect(mem.toDS().toDF("doc_id", "text"),
+        graft.queries.TextDedup.WinnowW,
+        graft.queries.TextDedup.WinnowWideHex)
       .writeStream.outputMode("append").format("memory")
       .queryName("winnow_stream").start()
     try {
@@ -680,18 +690,6 @@ class StreamingSpec extends AnyFunSuite {
       s"diff=${(streamed diff batch).take(3)} / ${(batch diff streamed).take(3)}")
     assert(streamed.map(_._1).contains(corpus.head._1))
     assert(!streamed.map(_._1).contains(9001L), "sub-window doc must emit nothing")
-
-    // the narrow (16-bit) closure stays pinned to the d30WinnowingNarrow
-    // audit leg's batch selection — the demoted space keeps its parity
-    // proof without any at-scale consumer
-    val narrowClosure = arrivals.flatMap { case (id, text) =>
-      graft.streaming.CorpusStreams.winnowFingerprintSetOf(text, 4)
-        .iterator.map(fp => (id, fp))
-    }.toSet
-    val narrowBatch = graft.queries.TextDedup
-      .winnowFingerprints(arrivals.toDF("doc_id", "text"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(narrowClosure == narrowBatch)
   }
 
   test("watermarked near-dup alerts emit once in append mode and equal the unwatermarked verdicts") {
@@ -1238,7 +1236,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming RFM profiles finish to the batch e15 segmentation (e15 twin)") {
     import org.apache.spark.sql.functions._
     val stream = EventStreams.readEvents(spark, streamDir)
-    val q = EventStreams.rfmProfiles(stream)
+    val q = Events.rfmProfileFrame(stream)
       .writeStream.outputMode("complete").format("memory")
       .queryName("rfm_profiles")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1260,7 +1258,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming churn profiles finish to the batch e20 verdicts (e20 twin)") {
     val stream = EventStreams.readEvents(spark, streamDir)
-    val q = EventStreams.churnProfiles(stream)
+    val q = Events.churnProfileFrame(stream)
       .writeStream.outputMode("complete").format("memory")
       .queryName("churn_profiles")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1327,7 +1325,7 @@ class StreamingSpec extends AnyFunSuite {
       (5L, "digits 123 and spaces\tand\nlines"))
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val q = graft.streaming.CorpusStreams.encodingGate(
+    val q = graft.queries.TextDedup.encodingSanityOf(
         mem.toDS().toDF("doc_id", "t"))
       .writeStream.outputMode("append").format("memory")
       .queryName("enc_gate").start()
@@ -1368,7 +1366,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming hourly partials finish to the batch heatmap grid (e21 twin)") {
     val stream = EventStreams.readEvents(spark, streamDir)
-    val q = EventStreams.heatmapPartials(stream)
+    val q = EventStreams.hourlyUserActivity(stream)
       .writeStream.outputMode("complete").format("memory")
       .queryName("e21_partials")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

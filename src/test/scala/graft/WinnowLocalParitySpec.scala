@@ -35,7 +35,7 @@ class WinnowLocalParitySpec extends AnyFunSuite {
 
   test("array build ≡ window build at narrow hash and other widths") {
     val docs = Tables.documents(spark, dir).limit(60)
-    for (w <- Seq(2, 8); hex <- Seq(4, 9)) {
+    for (w <- Seq(2, 4, 8); hex <- Seq(4, 9)) {
       val win = rows(TextDedup.winnowSelect(
         TextDedup.winnowHashed(docs, hexChars = hex), w))
       val arr = rows(TextDedup.winnowLocalSelect(docs, w, hex))
