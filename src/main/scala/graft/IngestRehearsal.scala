@@ -36,9 +36,11 @@ import org.apache.spark.sql.functions._
   *    the SET, only for verdict equivalence, which StreamingSpec
   *    pins).
   *
-  * Args: dataDir k [outFile] [shufflePartitions=cpus] [stream=0]
-  * [store=lc], where `cpus` is `SPARK_GRAFT_CPUS` (default 32); the
-  * session is [[Measure.session]].
+  * Args: dataDir k [outFile] [shufflePartitions=cpus] [stream=0],
+  * where `cpus` is `SPARK_GRAFT_CPUS` (default 32); the session is
+  * [[Measure.session]]. More arguments than these, or a non-integer
+  * `k`, `shufflePartitions` or `stream`, fail with the usage line
+  * before any session starts.
   *
   * Build-order caveat (r16 ADVICE): leg 1 (snapshot build) runs cold
   * and leg 2 (maintainer build) reads the same standing parquet
@@ -47,14 +49,6 @@ import org.apache.spark.sql.functions._
   * cross-build comparisons from separate runs (as SCALE.md's rows do)
   * or read them as a warm bound. The per-drop series is unaffected —
   * every drop runs equally warm behind both builds.
-  *
-  * With `store=bucketed`, the maintainer runs in its fp-bucketed
-  * parquet mode (r16 verdict, directive 1): the standing set lands as
-  * a `pmod(hash(fp), nBuckets)` directory-partitioned table under a
-  * run-scoped tmp dir, each drop APPENDS its novel fps to only the
-  * buckets they hash into, and the per-drop series prices the lake
-  * shape directly — against the localCheckpoint mode's documented
-  * full-rewrite floor on the same k-drop series.
   *
   * With `stream=1`, a final leg drives the ACTUAL
   * `contaminationAtIngest` streaming query (watermark, stream-static
@@ -84,16 +78,13 @@ import org.apache.spark.sql.functions._
   */
 object IngestRehearsal {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: IngestRehearsal dataDir k [outFile] [shufflePartitions] " +
-        "[stream] [store]")
+    val a = new Measure.Args("IngestRehearsal dataDir k [outFile] " +
+      "[shufflePartitions] [stream]", args)
     val dataDir = args(0)
-    val k = args(1).toInt
-    val streamMode = if (args.length > 4) args(4).toInt else 0
-    val storeMode = if (args.length > 5) args(5) else "lc"
-    require(storeMode == "lc" || storeMode == "bucketed",
-      s"store must be lc|bucketed, got $storeMode")
-    val spark = Measure.session(args.lift(3).map(_.toInt))
+    val k = a.int(1).get
+    val shufflePartitions = a.int(3)
+    val streamMode = a.int(4).getOrElse(0)
+    val spark = Measure.session(shufflePartitions)
     import Measure.{obj, r3, timed}
 
     val docs = Tables.documents(spark, dataDir)
@@ -116,14 +107,8 @@ object IngestRehearsal {
     // leg 2: the maintained set's standing build (note: reads the
     // standing parquet page-cache-warm behind leg 1 — see the
     // build-order caveat in the scaladoc)
-    val bucketDir =
-      if (storeMode == "bucketed") Some(RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-fpstore-" +
-        java.util.UUID.randomUUID().toString))
-      else None
     val (m, buildS) = timed(
-      new graft.streaming.CorpusStreams.TrainFpMaintainer(standing,
-        bucketDir = bucketDir))
+      new graft.streaming.CorpusStreams.TrainFpMaintainer(standing))
 
     probe() // discard: warm the probe's own path AFTER the timed
             // builds (a self-warming unit reads as per-drop growth)
@@ -228,7 +213,6 @@ object IngestRehearsal {
       .mkString("{", ",", "}")
 
     val out = s"""{"metric":"ingest_rehearsal","sf":"$dataDir","k":$k,""" +
-      s""""store":"$storeMode",""" +
       s""""n_arrivals":$nArrivals,"snapshot_build_s":${r3(snapS)},""" +
       s""""maintainer_build_s":${r3(buildS)},"drops":$dropsJson,""" +
       s""""probes":$probesJson,"drops_norm":$normJson,""" +

@@ -18,27 +18,17 @@ import org.apache.spark.sql.functions._
   *    audit-edge log).
   *
   * Args: dataDir k [outFile] [shufflePartitions=cpus] [audit=1]
-  * [store=lc] [nBuckets=64] [dropDocs=0], where `cpus` is
-  * `SPARK_GRAFT_CPUS` (default 32); the session is [[Measure.session]].
-  *
-  * With `store=bucketed` (r16 verdict, directive 1) the maintainer's
-  * capped postings live as an fp-hash-bucketed parquet table under a
-  * run-scoped tmp dir: per merge only the increment's touched buckets
-  * are read and rewritten (dynamic partition overwrite), pricing the
-  * lake's bucket-local sorted-run merge directly against the
-  * localCheckpoint full-rewrite floor the r16 k = 12 series measured
-  * (+1.33 ± 1.19 s/drop at sf100).
+  * [dropDocs=0], where `cpus` is `SPARK_GRAFT_CPUS` (default 32); the
+  * session is [[Measure.session]]. More arguments than these, or a
+  * non-integer `k`, `shufflePartitions` or `dropDocs`, fail with the
+  * usage line before any session starts.
   *
   * `dropDocs > 0` caps the arrival universe to its first `dropDocs`
   * documents (still sharded round-robin into k drops) — the
-  * SMALL-increment regime where bucket locality actually bites: a
-  * ~10-doc drop carries a few hundred distinct fps, so with nBuckets
-  * well above that only a sliver of the index's directories is
-  * touched, while the localCheckpoint mode still rewrites the WHOLE
-  * standing index per merge regardless of increment size. Large drops
-  * (the default) touch every bucket and the two stores converge by
-  * construction — the r17 sf100 k = 12 parity row; the small-drop row
-  * is where O(touched buckets) separates from O(index).
+  * SMALL-increment regime: a ~10-doc drop carries a few hundred
+  * distinct fps, yet the maintainer's `localCheckpoint` advance still
+  * rewrites the WHOLE standing postings index per merge, so this row
+  * prices the per-drop floor that does not shrink with the increment.
   *
   * The increment universe is d34w's own arrival split (doc_id ≡ 0
   * mod 5); drops are round-robin slices of it ((doc_id / 5) % k), so
@@ -66,17 +56,14 @@ import org.apache.spark.sql.functions._
   */
 object LedgerRehearsal {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: LedgerRehearsal dataDir k [outFile] " +
-      "[shufflePartitions] [audit] [store] [nBuckets] [dropDocs]")
+    val a = new Measure.Args("LedgerRehearsal dataDir k [outFile] " +
+      "[shufflePartitions] [audit] [dropDocs]", args)
     val dataDir = args(0)
-    val k = args(1).toInt
-    val audit = if (args.length > 4) args(4) != "0" else true
-    val storeMode = if (args.length > 5) args(5) else "lc"
-    require(storeMode == "lc" || storeMode == "bucketed",
-      s"store must be lc|bucketed, got $storeMode")
-    val nBuckets = if (args.length > 6) args(6).toInt else 64
-    val dropDocs = if (args.length > 7) args(7).toLong else 0L
-    val spark = Measure.session(args.lift(3).map(_.toInt))
+    val k = a.int(1).get
+    val shufflePartitions = a.int(3)
+    val audit = a.get(4).forall(_ != "0")
+    val dropDocs = a.int(5).getOrElse(0)
+    val spark = Measure.session(shufflePartitions)
     import Measure.{obj, r3, timed}
 
     val docs = Tables.documents(spark, dataDir)
@@ -97,15 +84,9 @@ object LedgerRehearsal {
     def probe(): Double = timed(probeUnit())._2
 
     // the once-per-corpus standing build (constructor state is eager)
-    val bucketDir =
-      if (storeMode == "bucketed") Some(RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-ledgerstore-" +
-        java.util.UUID.randomUUID().toString))
-      else None
     val (m, buildS) = timed(
       new graft.streaming.CorpusStreams.WinnowLedgerMaintainer(
-        standing, auditEdges = audit, bucketDir = bucketDir,
-        nBuckets = nBuckets))
+        standing, auditEdges = audit))
 
     // warm the probe's own page-cache/codegen path before it is used
     // as a unit: the first sf10 regen showed the probe getting FASTER
@@ -149,7 +130,6 @@ object LedgerRehearsal {
     // measurement and audit=1 for the merge-k ≡ recompute gate, and
     // let the artifact say which it was.
     val out = s"""{"metric":"ledger_rehearsal","sf":"$dataDir","k":$k,""" +
-      s""""store":"$storeMode","n_buckets":$nBuckets,""" +
       s""""drop_docs":$dropDocs,""" +
       s""""audit":$audit,"standing_build_s":${r3(buildS)},""" +
       s""""drops":$dropsJson,"probes":$probesJson,""" +

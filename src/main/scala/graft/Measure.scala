@@ -44,6 +44,26 @@ object Measure {
     spark
   }
 
+  /** A measurement main's positional arguments, checked before its
+    * session is built. `usage` is the main's name followed by its
+    * argument names, optional ones in brackets. A list shorter than the
+    * required names or longer than all of them fails with the usage
+    * line (so a stale invocation is never misread), and an integer
+    * argument that does not parse fails naming the argument.
+    */
+  final class Args(usage: String, args: Array[String]) {
+    private val line = s"usage: $usage"
+    private val words = usage.split(" ").toSeq.tail
+    private val names = words.map(_.stripPrefix("[").stripSuffix("]"))
+    require(args.length >= words.count(!_.startsWith("["))
+      && args.length <= names.length, line)
+
+    def get(i: Int): Option[String] = args.lift(i)
+    def int(i: Int): Option[Int] =
+      get(i).map(v => v.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"${names(i)} must be an integer, got '$v'; $line")))
+  }
+
   def timed[A](body: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = body

@@ -1719,12 +1719,16 @@ object TextDedup {
     // distinct and the eval-side scoring join — persist once (the d6
     // eager-materialization discipline) or each consumer re-runs the
     // shingle derivation. The split tag is a per-row function of the
-    // same document row the shingles come from, so it projects in the
-    // SAME kernel pass — the former doc_id join existed only because
-    // the window spelling had already exploded the document away (r17:
-    // one exchange fewer, guide §2.4)
+    // same document row the shingles come from, so it is computed in a
+    // projection BELOW the explode and rides through it as a per-doc
+    // attribute, while `text` is dropped at the generator — beside the
+    // generator it would run once per shingle row (the generator
+    // select-list rule, SCALE.md). The former doc_id join existed only
+    // because the window spelling had already exploded the document
+    // away (r17: one exchange fewer, guide §2.4)
     val withSplit = shingleRepartition(docs)
-      .select(col("doc_id"), split.as("split"),
+      .select(col("doc_id"), split.as("split"), col("text"))
+      .select(col("doc_id"), col("split"),
         explode(shingleKernel).as("shingle"))
       .select(col("doc_id"), col("shingle"), col("split"))
       .held()
@@ -4172,8 +4176,13 @@ object TextDedup {
     val base = Tables.documents(spark, dir)
       .select(col("source"), toks.as("toks"))
     val n = size(col("toks"))
+    // explode_outer + a null filter, not explode: a plain explode of the
+    // `toks` attribute makes Catalyst infer `size(toks) > 0` below the
+    // generator and push it through the projection — a second
+    // tokenization per document (see docShingles)
     val uni = base.select(col("source"), lit(1).as("n"),
-      explode(col("toks")).as("gram"))
+        explode_outer(col("toks")).as("gram"))
+      .filter(col("gram").isNotNull)
     val bi = base.select(col("source"), lit(2).as("n"),
       explode(zip_with(
         slice(col("toks"), lit(1), greatest(n - 1, lit(0))),

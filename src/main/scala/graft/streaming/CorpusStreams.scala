@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.queries.TextDedup
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
@@ -213,11 +213,16 @@ object CorpusStreams {
         max(when(col("bucket") === "middle", col("cut"))).as("cut_mid"))
       .persist()
     cuts.count()
+    // explode_outer + a null filter, not explode: a plain explode of the
+    // `toks` attribute makes Catalyst infer `size(toks) > 0` below the
+    // generator and push it through the projection — a second
+    // tokenization per arrival
     newDocs
       .select(col("doc_id").cast("long"), col("lang"),
         col("arrival_ts").cast("timestamp"), toks.as("toks"))
       .select(col("doc_id"), col("lang"), col("arrival_ts"),
-        explode(col("toks")).as("token"))
+        explode_outer(col("toks")).as("token"))
+      .filter(col("token").isNotNull)
       .withWatermark("arrival_ts", watermarkDelay)
       .join(vocab.select(col("token"), col("lnc_micro")), Seq("token"), "left")
       .groupBy(window(col("arrival_ts"), windowDur),
@@ -742,56 +747,26 @@ object CorpusStreams {
     * over all arrivals, and [[dividendFromLedger]] over it reproduces
     * batch p34's rows.
     *
-    * STORE (r16 verdict, directive 1, second act): with
-    * `bucketDir = Some(dir)` the capped postings live as an
-    * fp-hash-bucketed parquet table instead of a localCheckpoint that
-    * rewrites whole per merge. Per merge only the buckets the
-    * increment's fps hash into are READ (one checkpointed slice feeds
-    * both the probe join and the min-k re-rank — the same rows by the
-    * touched-fp argument: a posting outside a touched bucket can
-    * neither match the probe nor change rank) and only those bucket
-    * directories are REWRITTEN (dynamic partition overwrite; min-k can
-    * evict, so unlike the distinct fp set this is a genuine bucket-
-    * local rewrite, the lake's sorted-run merge stand-in made real).
-    * Untouched buckets cost nothing — per-merge IO is O(touched-bucket
-    * content), the claim the scaladoc previously made about the lake
-    * and the box now executes. `StreamingSpec` pins bucketed ≡ plain
-    * ledger label-for-label and capped-postings row-for-row;
-    * `LedgerRehearsal` prices both modes on the same k-drop series
-    * against r16's localCheckpoint floor (+1.33 ± 1.19 s/drop at
-    * sf100).
+    * State advances by `localCheckpoint(eager)`: the capped postings,
+    * node set and star ledger are each re-checkpointed per merge, so a
+    * `mergeBatch` call is the whole merge cost and no lineage grows
+    * with history. The per-merge re-rank touches only the increment's
+    * fps (see [[mergeBatch]]); the checkpoint still rewrites every
+    * posting row, the per-drop floor SCALE.md measures. `Round15OpsSpec`
+    * pins the postings row-for-row against the from-scratch capped
+    * index where the cap binds.
     */
   final class WinnowLedgerMaintainer(standingDocs: DataFrame,
       cap: Int = graft.queries.TextDedup.WinnowSweepCap,
-      auditEdges: Boolean = false,
-      bucketDir: Option[String] = None,
-      nBuckets: Int = 64) extends ReplayGuardedMerge {
+      auditEdges: Boolean = false) extends ReplayGuardedMerge {
     import TextDedup.{WinnowW, WinnowWideHex}
-    private val spark = standingDocs.sparkSession
     private def ck(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    private def bucketed = bucketDir.isDefined
-    private var postingsCk: DataFrame = _ // localCheckpoint mode only
-    if (bucketed) {
-      clearDir(spark, bucketDir.get) // fresh store
-      withFpBucket(TextDedup.winnowCapped(
-          TextDedup.winnowLocalSelect(standingDocs, WinnowW, WinnowWideHex),
-          cap), nBuckets)
-        .repartition(nBuckets, col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(bucketDir.get)
-    } else postingsCk = ck(TextDedup.winnowCapped(
+    private var postingsCk: DataFrame = ck(TextDedup.winnowCapped(
       TextDedup.winnowLocalSelect(standingDocs, WinnowW, WinnowWideHex),
       cap))
-    /** The full capped postings index — a parquet read in bucketed
-      * mode (used by init and audits; the merge path reads only its
-      * touched-bucket slice).
-      */
-    private def postings: DataFrame =
-      if (bucketed) spark.read.parquet(bucketDir.get)
-        .select(col("doc_id"), col("fp"))
-      else postingsCk
     private var nodes: DataFrame =
       ck(standingDocs.select(col("doc_id").as("id")))
-    private def standingEdges: DataFrame = TextDedup.winnowPairsOf(postings)
+    private def standingEdges: DataFrame = TextDedup.winnowPairsOf(postingsCk)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     // the RAW accumulated edge set (standing pairs ∪ every drop's probe
     // ∪ self edges) — the audit ledger behind [[recomputedLedger]].
@@ -810,24 +785,8 @@ object CorpusStreams {
       val b = batch.select(col("doc_id"), col("text"))
       if (!b.isEmpty) {
         val bSel = ck(TextDedup.winnowLocalSelect(b, WinnowW, WinnowWideHex))
-        // the standing rows this merge can SEE: only postings whose fp
-        // the increment carries can match the probe, and only those can
-        // change under the min-k re-rank — in bucketed mode that is the
-        // touched-bucket slice, read ONCE (checkpointed, so the
-        // dynamic overwrite below never reads the directories it
-        // replaces) and shared by probe + re-rank; untouched buckets
-        // are neither read nor written
-        val touchedBuckets: Seq[Int] =
-          if (bucketed) bucketsIn(withFpBucket(
-            bSel.select(col("fp")).distinct(), nBuckets))
-          else Nil
-        val standingSlice: DataFrame =
-          if (bucketed) ck(spark.read.parquet(bucketDir.get)
-            .filter(col("bucket").isin(touchedBuckets: _*))
-            .select(col("doc_id"), col("fp")))
-          else postingsCk
         val probe = bSel.as("i")
-          .join(standingSlice.as("s"), col("i.fp") === col("s.fp"))
+          .join(postingsCk.as("s"), col("i.fp") === col("s.fp"))
           .groupBy(col("i.doc_id").as("src"), col("s.doc_id").as("dst"))
           .agg(count(lit(1)).as("ns")).filter(col("ns") >= 2)
           .select(col("src"), col("dst"))
@@ -850,35 +809,24 @@ object CorpusStreams {
         // for fps the increment actually carries, so only those
         // postings enter the rank window (semi-join side); untouched
         // fps pass through as-is (anti-join side). Exact by the same
-        // min-k argument, per-fp. In localCheckpoint mode the
-        // checkpoint still rewrites every row — the box stand-in; in
-        // bucketed mode the rewrite touches ONLY the increment's
-        // bucket directories (the anti-join side shrinks to
-        // cold-within-touched-buckets, which must rewrite anyway
-        // because they share those directories).
+        // min-k argument, per-fp. The checkpoint still rewrites every
+        // row — the box stand-in for the lake's sorted-run merge.
         val touched = bSel.select(col("fp")).distinct()
-        val hot = standingSlice.join(touched, Seq("fp"), "leftsemi")
+        val hot = postingsCk.join(touched, Seq("fp"), "leftsemi")
           .unionByName(bSel)
-        val cold = standingSlice.join(touched, Seq("fp"), "leftanti")
-        val merged = TextDedup.winnowCapped(hot, cap).unionByName(cold)
-        if (bucketed)
-          withFpBucket(merged, nBuckets)
-            .repartition(math.max(1, touchedBuckets.size), col("bucket"))
-            .write.partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(bucketDir.get)
-        else postingsCk = ck(merged)
+        val cold = postingsCk.join(touched, Seq("fp"), "leftanti")
+        postingsCk = ck(TextDedup.winnowCapped(hot, cap).unionByName(cold))
       }
     }
 
     /** The live (id, component) table after all merges so far. */
     def currentLedger: DataFrame = synchronized(ledger)
 
-    /** The live capped postings index — exposed so the spec and the
-      * rehearsal can verify the bucketed store row-for-row against the
-      * localCheckpoint one (min-k maintenance must agree exactly).
+    /** The live capped postings index — exposed so `Round15OpsSpec` can
+      * check min-k maintenance row-for-row against the from-scratch
+      * capped index.
       */
-    private[graft] def currentPostings: DataFrame = synchronized(postings)
+    private[graft] def currentPostings: DataFrame = synchronized(postingsCk)
 
     /** The FROM-SCRATCH one-shot closure over the raw accumulated edge
       * set (requires `auditEdges = true`) — the Round14OpsSpec algebra
@@ -1056,30 +1004,6 @@ object CorpusStreams {
     new TrainFpSnapshot(fps)
   }
 
-  /** fp-hash bucket column for the bucketed maintainer stores — the
-    * ONE spelling of the lake layout's partitioning rule (directory
-    * partitions `bucket=pmod(hash(fp), n)`), shared by the fp-set and
-    * capped-postings stores so their bucket pruning agrees by
-    * construction.
-    */
-  private def withFpBucket(df: DataFrame, n: Int): DataFrame =
-    df.withColumn("bucket", pmod(hash(col("fp")), lit(n)))
-
-  /** The distinct buckets present in a [[withFpBucket]]-tagged frame —
-    * a bounded collect (≤ n rows), the partition-pruning key for
-    * bucket-local reads and writes.
-    */
-  private def bucketsIn(withB: DataFrame): Seq[Int] =
-    withB.select(col("bucket")).distinct().collect()
-      .map(_.getInt(0)).toSeq
-
-  private def clearDir(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(p, true)
-    ()
-  }
-
   /** MAINTAINED standing train-fingerprint set (r15 verdict,
     * directive 1; r16 verdict, directives 1–3) — the seam
     * [[contaminationAtIngest]]'s snapshot left ajar: against a
@@ -1107,8 +1031,9 @@ object CorpusStreams {
     *     judged-eval postings table (doc_id, split, fp — the doc's own
     *     selection rows, retained at first judgment), probed on fp by
     *     the novel increment; steady-state drops with no contamination
-    *     hits pay only the bucket-pruned phase-1 probe, and the full
-    *     postings fetch runs only when a revision actually fires.
+    *     hits pay only the phase-1 probe (a semi-join of the postings
+    *     on the novel fps), and the full postings fetch runs only when
+    *     a revision actually fires.
     *  3. JUDGE — the batch's eval (val/test) arrivals compute their
     *     uncapped wide selections (per-doc-local, map-side; the split
     *     attaches by doc-scale JOIN, never riding the generator select
@@ -1121,25 +1046,10 @@ object CorpusStreams {
     *     never duplicates postings; the small judged-id set keys the
     *     dedup so the postings table itself is never re-read for it).
     *
-    * STORE (r16 verdict, directive 1 — the lake shape made real):
-    * with `bucketDir = None` the fp set and postings advance by
-    * `localCheckpoint(eager)` — the full set rewrites per merge, the
-    * box stand-in whose per-drop cost floor SCALE.md documents. With
-    * `bucketDir = Some(dir)` both live as fp-hash-bucketed parquet
-    * tables (`pmod(hash(fp), nBuckets)` directory partitions): the
-    * standing build writes every bucket once; each merge APPENDS the
-    * increment's novel fps to only the buckets they hash into (novel
-    * sets are disjoint from standing by the anti-join, so a distinct
-    * set's merge-into degenerates to a pure bucket-local append —
-    * per-trigger write IO is O(increment), not O(set)); the anti-join
-    * and revision probes read only the buckets the increment's fps
-    * hash into (partition pruning on the bucket directory column).
-    * Buckets whose file count passes `maxFilesPerBucket` compact
-    * bucket-locally (read that bucket off a checkpoint, dynamic
-    * partition-overwrite of exactly that directory) — amortized
-    * O(bucket)/`maxFilesPerBucket` per drop. `StreamingSpec` pins
-    * bucketed ≡ localCheckpoint ≡ batch d12w; `IngestRehearsal`
-    * prices both modes on the same k-drop series.
+    * State advances by `localCheckpoint(eager)`: the fp set is
+    * re-checkpointed as (set ∪ novel) per merge, the full-set rewrite
+    * whose per-drop floor SCALE.md measures; the postings and the
+    * verdict log are buffers of checkpointed increments.
     *
     * Verdicts accumulate on the maintainer as an append-only LOG (the
     * d12w columns + a `rev` sequence; [[verdicts]] finishes
@@ -1184,63 +1094,20 @@ object CorpusStreams {
     * revision row carries identical values.
     */
   final class TrainFpMaintainer(standingDocs: DataFrame,
-      compactEvery: Int = 64,
-      bucketDir: Option[String] = None,
-      nBuckets: Int = 64,
-      maxFilesPerBucket: Int = 64) extends ReplayGuardedMerge {
+      compactEvery: Int = 64) extends ReplayGuardedMerge {
     private val spark = standingDocs.sparkSession
     private def ck(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    private def bucketed = bucketDir.isDefined
-    private def fpsPath = bucketDir.get + "/fps"
-    private def postingsPath = bucketDir.get + "/postings"
-    private def withBucket(df: DataFrame): DataFrame =
-      withFpBucket(df, nBuckets)
-    private def bucketsOf(withB: DataFrame): Seq[Int] = bucketsIn(withB)
 
-    // ---- fp-set + postings stores ----
-    private var fpsCk: DataFrame = _ // localCheckpoint mode only
-    private var postingsWritten = false
-    if (bucketed) {
-      clearDir(spark, bucketDir.get) // fresh store
-      withBucket(trainFpsOf(standingDocs))
-        .repartition(nBuckets, col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(fpsPath)
-    } else fpsCk = ck(trainFpsOf(standingDocs))
-
-    /** Compact directory-partitioned buckets whose file count passed
-      * [[maxFilesPerBucket]]: materialize those buckets OFF the files
-      * (localCheckpoint), then dynamic-partition-overwrite exactly
-      * those directories — never a whole-table rewrite.
-      */
-    private def compactBuckets(path: String, touched: Seq[Int]): Unit = {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-      val over = touched.filter { bkt =>
-        val d = new org.apache.hadoop.fs.Path(s"$path/bucket=$bkt")
-        fs.exists(d) && fs.listStatus(d)
-          .count(_.getPath.getName.startsWith("part-")) > maxFilesPerBucket
-      }
-      if (over.nonEmpty) {
-        val rows = ck(spark.read.parquet(path)
-          .filter(col("bucket").isin(over: _*)))
-        rows.repartition(over.size, col("bucket"))
-          .write.partitionBy("bucket")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(path)
-      }
-    }
+    private var fpsCk: DataFrame = ck(trainFpsOf(standingDocs))
 
     // judged-eval postings: the revision state — (doc_id, split, fp),
-    // one copy of each judged doc's selection rows. Append-only in both
-    // modes (localCheckpoint increments with bounded compaction, or the
-    // fp-bucketed parquet table); read only by the revision probe.
+    // one copy of each judged doc's selection rows. Append-only
+    // (localCheckpoint increments with bounded compaction); read only
+    // by the revision probe.
     private val postingsBatches =
       scala.collection.mutable.ArrayBuffer[DataFrame]()
     private def postingsAll: Option[DataFrame] =
-      if (bucketed) {
-        if (postingsWritten) Some(spark.read.parquet(postingsPath))
-        else None
-      } else if (postingsBatches.isEmpty) None
+      if (postingsBatches.isEmpty) None
       else Some(postingsBatches.reduce(_ unionByName _))
     // the small judged-doc-id set keying first-arrival-wins postings
     // dedup — O(judged docs), so the postings table itself is never
@@ -1266,19 +1133,14 @@ object CorpusStreams {
     /** The d12w verdict columns + the `rev` sequence for `sel` rows
       * (doc_id, split, fp) against the CURRENT post-merge set.
       */
-    private def judge(sel: DataFrame): DataFrame = {
-      val probeSide =
-        (if (bucketed) spark.read.parquet(fpsPath).select(col("fp"))
-         else fpsCk)
-          .withColumn("seen", lit(true))
-      sel.join(probeSide, Seq("fp"), "left")
+    private def judge(sel: DataFrame): DataFrame =
+      sel.join(fpsCk.withColumn("seen", lit(true)), Seq("fp"), "left")
         .groupBy(col("doc_id"), col("split"))
         .agg(count(lit(1)).as("n_sel"), count(col("seen")).as("n_in_train"))
         .select(col("doc_id"), col("split"), col("n_sel"),
           col("n_in_train"),
           round(col("n_in_train").cast("double") / col("n_sel"), 6)
             .as("overlap"), lit(seq).as("rev"))
-    }
 
     private def appendVerdicts(v: DataFrame): Unit = {
       val vc = ck(v)
@@ -1302,41 +1164,22 @@ object CorpusStreams {
         val (_, split) = TextDedup.splitCols
         val tagged = b.select(col("doc_id"), col("text"), split.as("split"))
         seq += 1
-        // 1. EXTEND — the ck on `novel` is load-bearing in bucketed
-        // mode: it materializes the anti-join against the PRE-extend
-        // file listing before the append below adds files. trainSel is
-        // ck'd there too: the bucket-distinct collect and the anti-join
-        // would otherwise each re-run the increment's kernel pass
-        val trainSel0 = trainFpsOf(b)
-        val trainSel = if (bucketed) ck(trainSel0) else trainSel0
-        val novel: DataFrame =
-          if (bucketed) {
-            val cand = withBucket(trainSel)
-            val touched = bucketsOf(cand)
-            val standingSub = spark.read.parquet(fpsPath)
-              .filter(col("bucket").isin(touched: _*)).select(col("fp"))
-            ck(cand.join(standingSub, Seq("fp"), "leftanti"))
-          } else ck(trainSel.join(fpsCk, Seq("fp"), "leftanti"))
+        // 1. EXTEND — `novel` is checkpointed because up to four
+        // actions consume it (the isEmpty below, the set's checkpoint,
+        // and the revision's isEmpty and verdict checkpoint); unpinned,
+        // each would re-run the increment's split + winnow kernel pass
+        // and the anti-join exchange against the set
+        val novel =
+          ck(trainFpsOf(b).join(fpsCk, Seq("fp"), "leftanti"))
         val hasNovel = !novel.isEmpty
-        val novelBuckets: Seq[Int] =
-          if (bucketed && hasNovel) bucketsOf(novel) else Nil
-        if (hasNovel) {
-          if (bucketed) {
-            novel.repartition(nBuckets, col("bucket"))
-              .write.partitionBy("bucket").mode("append").parquet(fpsPath)
-            compactBuckets(fpsPath, novelBuckets)
-          } else fpsCk = ck(fpsCk.unionByName(novel))
-        }
+        if (hasNovel) fpsCk = ck(fpsCk.unionByName(novel))
         // 2. REVISE — postings do not yet contain THIS batch's evals,
         // so only earlier-judged docs can be affected. Phase 1 (which
-        // judged docs hold a novel fp) is bucket-pruned in bucketed
-        // mode; phase 2 (their full selection rows) reads the postings
-        // table only when a revision actually fires.
+        // judged docs hold a novel fp) is a semi-join on the novel
+        // fps; phase 2 (their full selection rows) reads the postings
+        // only when a revision actually fires.
         if (hasNovel) postingsAll.foreach { p =>
-          val p1 = if (bucketed)
-              p.filter(col("bucket").isin(novelBuckets: _*))
-            else p
-          val affected = p1
+          val affected = p
             .join(novel.select(col("fp")), Seq("fp"), "leftsemi")
             .select(col("doc_id")).distinct()
           if (!affected.isEmpty) {
@@ -1356,20 +1199,12 @@ object CorpusStreams {
         val newIds = ck(evalSel.select(col("doc_id")).distinct()
           .join(judgedIds, Seq("doc_id"), "leftanti"))
         if (!newIds.isEmpty) {
-          val newPost = evalSel.join(newIds, Seq("doc_id"), "leftsemi")
-          if (bucketed) {
-            withBucket(newPost).repartition(nBuckets, col("bucket"))
-              .write.partitionBy("bucket").mode("append")
-              .parquet(postingsPath)
-            postingsWritten = true
-            compactBuckets(postingsPath, (0 until nBuckets))
-          } else {
-            postingsBatches += ck(newPost)
-            if (postingsBatches.length >= compactEvery) {
-              val all = postingsBatches.reduce(_ unionByName _)
-              postingsBatches.clear()
-              postingsBatches += ck(all)
-            }
+          postingsBatches +=
+            ck(evalSel.join(newIds, Seq("doc_id"), "leftsemi"))
+          if (postingsBatches.length >= compactEvery) {
+            val all = postingsBatches.reduce(_ unionByName _)
+            postingsBatches.clear()
+            postingsBatches += ck(all)
           }
           judgedIds = ck(judgedIds.unionByName(newIds))
         }
@@ -1377,9 +1212,7 @@ object CorpusStreams {
     }
 
     /** The live distinct train-fingerprint set after all merges. */
-    def currentFps: DataFrame = synchronized(
-      if (bucketed) spark.read.parquet(fpsPath).select(col("fp"))
-      else fpsCk)
+    def currentFps: DataFrame = synchronized(fpsCk)
 
     /** The buffered (undrained) verdict log — one row per judgment
       * event (first judgment or revision), the d12w columns + `rev`.

@@ -23,4 +23,22 @@ class MeasureSpec extends AnyFunSuite {
     assert(wide("spark.sql.shuffle.partitions") == "256")
     assert(wide("spark.io.compression.codec") == "zstd")
   }
+
+  test("rehearsal arguments: a list longer than the usage, or a " +
+      "non-integer numeric argument, fails before any session starts") {
+    // the old 8-argument LedgerRehearsal form, with the deleted store
+    // and bucket-count arguments before dropDocs
+    val stale = intercept[IllegalArgumentException](LedgerRehearsal.main(
+      Array("dataDir", "4", "out.json", "8", "1", "lc", "64", "120")))
+    assert(stale.getMessage.contains("usage: LedgerRehearsal dataDir k"),
+      stale.getMessage)
+    val badK = intercept[IllegalArgumentException](
+      IngestRehearsal.main(Array("dataDir", "four")))
+    assert(badK.getMessage.contains("k must be an integer, got 'four'"),
+      badK.getMessage)
+    val badDrop = intercept[IllegalArgumentException](LedgerRehearsal.main(
+      Array("dataDir", "4", "out.json", "8", "1", "lc")))
+    assert(badDrop.getMessage.contains("dropDocs must be an integer"),
+      badDrop.getMessage)
+  }
 }

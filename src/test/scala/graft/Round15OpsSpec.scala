@@ -45,5 +45,16 @@ class Round15OpsSpec extends AnyFunSuite {
     assert(merged.exists { case (id, comp) => id != comp },
       "no nontrivial component formed — the fixture lost its duplicates")
     assert(merged.size == docs.count())
+    // min-k of (previous min-k ∪ new) = min-k of the union: after the
+    // merges, under eviction, the capped postings are row-for-row the
+    // from-scratch capped index over every document
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val fromScratch = rows(TextDedup.winnowCapped(TextDedup
+      .winnowLocalSelect(docs, TextDedup.WinnowW, TextDedup.WinnowWideHex),
+      2))
+    assert(fromScratch.nonEmpty)
+    assert(rows(m.currentPostings) == fromScratch,
+      "maintained capped postings diverged from the from-scratch index")
   }
 }

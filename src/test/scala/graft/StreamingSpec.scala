@@ -1843,55 +1843,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(p34.nonEmpty)
   }
 
-  test("winnow-ledger maintainer: the fp-BUCKETED postings store " +
-      "maintains the same ledger and capped postings as the " +
-      "localCheckpoint mode through bucket-local rewrites " +
-      "(r16 verdict, directive 1, second act)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val standing = docs.filter(col("doc_id") % 5 =!= 0)
-    val incRows = docs.filter(col("doc_id") % 5 === 0)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val store = RunAssets.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft-ledgerstore-" +
-      java.util.UUID.randomUUID().toString)
-    val plain = new graft.streaming.CorpusStreams.WinnowLedgerMaintainer(
-      standing)
-    // few buckets so every merge rewrites several directories via the
-    // dynamic partition overwrite — a row lost, duplicated, or
-    // mis-ranked by the bucket-local min-k rewrite fails the postings
-    // equality below
-    val bucketed = new graft.streaming.CorpusStreams.WinnowLedgerMaintainer(
-      standing, bucketDir = Some(store), nBuckets = 8)
-    val shards = incRows.grouped(math.max(1, incRows.size / 3)).toSeq
-    shards.foreach { sh =>
-      plain.mergeBatch(sh.toDF("doc_id", "text"))
-      bucketed.mergeBatch(sh.toDF("doc_id", "text"))
-    }
-    // ledger label-for-label
-    val pl = plain.currentLedger.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bl = bucketed.currentLedger.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bl == pl, s"${bl.size} bucketed vs ${pl.size} plain labels; " +
-      s"diff=${(bl.toSet diff pl.toSet).take(5)}")
-    // capped postings row-for-row: the min-k maintenance must agree
-    // EXACTLY between the checkpointed rewrite and the bucket-local one
-    def post(m: graft.streaming.CorpusStreams.WinnowLedgerMaintainer) =
-      m.currentPostings.collect()
-        .map(r => (r.getLong(0), r.get(1).toString)).toSeq.sorted
-    val pp = post(plain)
-    assert(pp.nonEmpty)
-    assert(post(bucketed) == pp, "capped postings diverged between stores")
-    // and the bucketed ledger equals the gated batch query's labels
-    val batch = graft.queries.TextDedup
-      .d34wIncrementalWinnow(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bl == batch,
-      s"${bl.size} bucketed vs ${batch.size} batch labels")
-  }
-
   test("ingest contamination verdicts equal the batch d12w rows for " +
       "arrived eval docs; train arrivals emit nothing (r14 verdict, " +
       "directive 1)") {
@@ -2268,53 +2219,13 @@ class StreamingSpec extends AnyFunSuite {
     b.drainTo(sink)
     assert(rows(b.verdictLog).isEmpty)
     assert(rows(spark.read.parquet(sink)) == undrained)
-  }
-
-  test("train-fp maintainer: the fp-BUCKETED parquet store maintains " +
-      "the same set and verdicts as the localCheckpoint mode, through " +
-      "bucket-local appends and forced compactions (r16 verdict, " +
-      "directive 1)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-    val standing = docs.filter(col("doc_id") % 5 =!= 0)
-    val arrivals = docs.filter(col("doc_id") % 5 === 0)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val shards = arrivals.grouped(math.max(1, arrivals.size / 5)).toSeq
-    val store = RunAssets.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft-fpstore-" +
-      java.util.UUID.randomUUID().toString)
-    val plain = new graft.streaming.CorpusStreams.TrainFpMaintainer(standing)
-    // maxFilesPerBucket = 1 over few buckets forces the bucket-local
-    // dynamic-overwrite compaction on nearly every merge — a row lost
-    // or duplicated by compaction fails the set equality below
-    val bucketed = new graft.streaming.CorpusStreams.TrainFpMaintainer(
-      standing, bucketDir = Some(store), nBuckets = 8,
-      maxFilesPerBucket = 1)
-    shards.foreach { sh =>
-      plain.mergeBatch(sh.toDF("doc_id", "text"))
-      bucketed.mergeBatch(sh.toDF("doc_id", "text"))
-    }
-    // set equality, both directions
-    val pf = plain.currentFps
-    val bf = bucketed.currentFps
-    val setDiff = pf.join(bf, Seq("fp"), "leftanti")
-      .unionByName(bf.join(pf, Seq("fp"), "leftanti")).count()
-    assert(setDiff == 0L, s"$setDiff fps diverged between stores")
-    // and ≡ the from-scratch distinct set over standing ∪ arrived
+    // the maintained set ≡ the from-scratch distinct train-fp set over
+    // standing ∪ arrived, both directions
     val fresh = graft.streaming.CorpusStreams.trainFpsOf(
       standing.unionByName(arrivals.toDF("doc_id", "text")))
-    assert(bf.join(fresh, Seq("fp"), "leftanti")
-      .unionByName(fresh.join(bf, Seq("fp"), "leftanti")).count() == 0L)
-    // verdict surface: identical latest-per-doc rows
-    type Verdict = (Long, String, Long, Long, Double)
-    def v(m: graft.streaming.CorpusStreams.TrainFpMaintainer): Seq[Verdict] =
-      m.verdicts.collect().map(r => (r.getLong(0), r.getString(1),
-        r.getLong(2), r.getLong(3), r.getDouble(4))).toSeq.sorted
-    val pv = v(plain)
-    assert(pv.nonEmpty)
-    assert(v(bucketed) == pv, "bucketed verdicts diverged from plain")
+    assert(a.currentFps.join(fresh, Seq("fp"), "leftanti")
+      .unionByName(fresh.join(a.currentFps, Seq("fp"), "leftanti"))
+      .count() == 0L)
   }
 
   test("streamed gap facts finish to the batch gap histogram (e36 twin)") {
