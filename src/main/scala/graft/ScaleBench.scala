@@ -30,18 +30,18 @@ package graft
   */
 object ScaleBench {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ScaleBench dataDir namesCsv " +
-      "[passes] [outFile] [shufflePartitions] [assetsCsv]")
+    val a = new Measure.Args("ScaleBench dataDir namesCsv [passes] " +
+      "[outFile] [shufflePartitions] [assetsCsv]", args)
     val dataDir = args(0)
     val names = args(1).split(",").toSet
-    val passes = if (args.length > 2) args(2).toInt else 3
-    val spark = Measure.session(args.lift(4).map(_.toInt))
-
+    val passes = a.int(2).getOrElse(3)
+    val shufflePartitions = a.int(4)
     val missing = names -- SparkEntry.queries.keySet
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
+    val spark = Measure.session(shufflePartitions)
+
     val assetNames: Set[String] =
-      if (args.length > 5 && args(5).nonEmpty) args(5).split(",").toSet
-      else Set.empty
+      a.get(5).filter(_.nonEmpty).map(_.split(",").toSet).getOrElse(Set.empty)
     val assetRows = Assets.buildTimed(spark, dataDir, assetNames)
     val assetJson = Measure.obj(assetRows)
     val out = Bench.runBench(spark, dataDir,

@@ -254,13 +254,15 @@ object ScaleUp {
   }
 
   def main(args: Array[String]): Unit = {
+    val a = new Measure.Args("ScaleUp [srcDir] [outDir] [factor] " +
+      "[tablesCsv] [boilerPct]", args)
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1)
       else s"${System.getProperty("java.io.tmpdir")}/graft-sf1"
-    val factor = if (args.length > 2) args(2).toInt else 10
-    val tables = if (args.length > 3 && args(3) != "all")
-      args(3).split(",").toSet else AllTables
-    val boilerPct = if (args.length > 4) args(4).toInt else 0
+    val factor = a.int(2).getOrElse(10)
+    val tables = a.get(3).filter(_ != "all").map(_.split(",").toSet)
+      .getOrElse(AllTables)
+    val boilerPct = a.int(4).getOrElse(0)
     require((tables -- AllTables).isEmpty,
       s"unknown tables: ${(tables -- AllTables).mkString(",")}")
     val spark = Measure.session()

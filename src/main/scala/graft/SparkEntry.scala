@@ -18,8 +18,11 @@ object SparkEntry {
       graft.queries.Events.all ++ graft.multimodal.Multimodal.all ++
       graft.queries.Survival.all ++ graft.queries.Ingest.all
 
-  /** The UNSCOPED registry — building a frame never executes it, so
-    * plan-inspection specs (`BoundedWindowSpec`) can walk lazy plans.
+  /** The UNSCOPED registry — plan-inspection specs (`BoundedWindowSpec`)
+    * walk the plans it builds. Building a frame executes nothing, except
+    * that the survival cohort queries (v1, v3–v14) collect their cohort
+    * and return a local relation, and v12's reference plan runs its
+    * Newton steps when it is built.
     */
   private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
     Rel.raw ++ graft.queries.TextDedup.raw ++ graft.queries.Embeddings.raw ++

@@ -4,14 +4,20 @@ import graft.Tables
 import graft.queries.QueryScope.HoldOps
 import graft.io.SurvivalClean
 import graft.surv.{CIndex, Clinical}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** DataFrame-level exposure of the survival operators so the DuckDB gate
   * covers them too: the concordance index as a typed `Aggregator` (the
   * optional surface SURVEY §2.5 sketches) and the cleaning pipeline as a
-  * distributed relational op.
+  * distributed relational op. The queries over the customer cohort (v1,
+  * v3–v14) collect the cohort once and finish on the driver ([[Query]]);
+  * their distributed plans stay as the reference they are checked
+  * against.
   */
 object Survival {
 
@@ -65,12 +71,462 @@ object Survival {
       org.apache.spark.sql.Encoders.product[CIdxResult]
   }
 
+  /** One cohort row and the columns the plans derive from it. */
+  private[graft] final case class Subject(seg: String, key: Long,
+      nation: Long, acctbal: Double) {
+    def event: Boolean = key % 2 == 0
+    def time: Long = key % 97
+    def arm: Long = nation % 2
+    def cause: Long = key % 4 match { case 0 => 1L; case 2 => 2L; case _ => 0L }
+  }
+
+  /** A customer-cohort query. It runs ONE Spark job, [[cohort]]'s
+    * collect, and `finish` computes the answer from the collected rows in
+    * plain Scala; the result is a local DataFrame (a `LocalRelation`: no
+    * exchange, no further job, nothing to compile). `plan` is the
+    * query's distributed plan: it is not run by the query, and it stays
+    * as the reference the driver finish must match bit for bit
+    * (`SurvivalParitySpec`, and `PlanShapeSpec` for its shape). The
+    * plans cost about 10 jobs per query, each compiling its own
+    * whole-stage code (see SCALE.md on Spark's codegen cache).
+    */
+  final class Query private[Survival] (schema: StructType,
+      finish: Seq[Subject] => Seq[Row],
+      private[graft] val plan: (SparkSession, String) => DataFrame)
+      extends ((SparkSession, String) => DataFrame) {
+    def apply(spark: SparkSession, dir: String): DataFrame =
+      spark.createDataFrame(finish(cohort(spark, dir)).asJava, schema)
+  }
+
+  /** The cohort every [[Query]] reads: the customers with
+    * `c_custkey <= 2000`, projected to (segment, custkey, nationkey,
+    * acctbal) and collected. `c_custkey` is a key (TPC-H's; `ScaleUp`
+    * shifts it to stay one), so the cohort has at most 2,001 rows at any
+    * scale factor and the driver holds it whole. A null in these columns
+    * fails the query: the cohort queries are defined over a complete
+    * customer table.
+    */
+  private def cohort(spark: SparkSession, dir: String): Seq[Subject] =
+    Tables.customer(spark, dir)
+      .filter(col("c_custkey") <= 2000)
+      .select(col("c_mktsegment"), col("c_custkey").cast("long"),
+        col("c_nationkey").cast("long"), col("c_acctbal").cast("double"))
+      .collect().toSeq.map { r =>
+        if (r.anyNull) throw new IllegalArgumentException(
+          s"survival cohort row $r has a null; the cohort queries need " +
+            "c_mktsegment, c_custkey, c_nationkey and c_acctbal on every row")
+        Subject(r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))
+      }
+
+  /** The reporting constants v6, v8, v10 and v11 share with their plans. */
+  private val RmstHorizon = 97L
+  private val LifeTableBin = 10L
+  private val SurvivalHorizons = Seq(30L, 60L, 90L)
+  private val SurvivalLevels = Seq(0.75, 0.50, 0.25)
+
+  // ---- the 13 customer-cohort queries (v1, v3–v14) ----
+  //
+  // The driver finishes follow the plans expression for expression, so
+  // the two agree bit for bit:
+  //  - `exp` and `log` are `StrictMath`, as in Spark's `Exp` and `Log`;
+  //    `round(x, s)` is `halfUp`; a double-to-long cast truncates
+  //    (`longOf`);
+  //  - long `+ − ×` are the `Math.*Exact` forms, so overflow fails
+  //    loudly as under ANSI; `intDiv` is truncating `/`, and every long
+  //    divisor here is ≥ 1 (a cell holds at least one subject), so only
+  //    v14's DECIMAL divisor can be 0, where the answer is null as in
+  //    Spark;
+  //  - v14's moments are DECIMAL(38,0): exact, failing past 38 digits;
+  //  - rows come out in the plans' `orderBy` order (segments in Spark's
+  //    binary string order), under the plans' column names and types.
+
+  val v1CIndex = new Query(
+    StructType.fromDDL("seg STRING, n INT, cindex DOUBLE"),
+    c => segments(c)(_.seg).map { case (seg, ss) =>
+      val res = CIndexAggregator.finish(CBuf(ss.size,
+        ss.map(s => SurvRow(s.event, s.time.toDouble, s.acctbal)).toList))
+      Row(seg, res.n, halfUp(res.cindex, 6))
+    },
+    v1Plan)
+
+  val v3CumHazard = new Query(
+    StructType.fromDDL("seg STRING, time BIGINT, d BIGINT, n_risk BIGINT, " +
+      "h_micro BIGINT, cum_h_micro BIGINT, cum_hazard DOUBLE"),
+    c => nelsonAalen(c).map(p => Row(p.seg, p.time, p.d, p.nRisk, p.hMicro,
+      p.cumHMicro, halfUp(p.cumHMicro.toDouble / 1e6, 6))),
+    v3Plan)
+
+  val v4KaplanMeier = new Query(
+    StructType.fromDDL("seg STRING, time BIGINT, d BIGINT, n_risk BIGINT, " +
+      "cum_ln_micro BIGINT, survival DOUBLE"),
+    c => kaplanMeier(c).map(p =>
+      Row(p.seg, p.time, p.d, p.nRisk, p.cumLnMicro, p.survival)),
+    v4Plan)
+
+  val v5LogRank = new Query(
+    StructType.fromDDL("seg STRING, events_arm1 BIGINT, events_arm2 BIGINT, " +
+      "ome_micro BIGINT, var_micro BIGINT, chi2 DOUBLE"),
+    c => riskTable(c, _.time)(s => s.event && s.arm == 0,
+        s => s.event && s.arm == 1, _.arm == 0, _.arm == 1).flatMap { cells =>
+      val terms = cells.filter(x => add(x.n(0), x.n(1)) > 0)
+      Option.when(terms.nonEmpty) {
+        var (ome, variance) = (0L, 0L)
+        terms.foreach { x =>
+          val (d1, d2, n1, n2) = (x.n(0), x.n(1), x.atRisk(2), x.atRisk(3))
+          val (d, n) = (add(d1, d2), add(n1, n2))
+          val e1 = longOf(halfUp(d.toDouble * n1.toDouble / n.toDouble * 1e6, 0))
+          val v = if (n > 1) longOf(halfUp(d.toDouble * n1.toDouble *
+              n2.toDouble * sub(n, d).toDouble /
+              (n.toDouble * n.toDouble * sub(n, 1).toDouble) * 1e6, 0))
+            else 0L
+          ome = add(ome, sub(mul(d1, 1000000L), e1))
+          variance = add(variance, v)
+        }
+        val chi2 = if (variance > 0) halfUp((ome.toDouble / 1e6) *
+          (ome.toDouble / 1e6) / (variance.toDouble / 1e6), 6) else null
+        Row(terms.head.seg, total(terms.map(_.n(0))), total(terms.map(_.n(1))),
+          ome, variance, chi2)
+      }
+    },
+    v5Plan)
+
+  val v6Rmst = new Query(
+    StructType.fromDDL("seg STRING, first_event_time BIGINT, " +
+      "n_event_times BIGINT, horizon BIGINT, rmst DOUBLE"),
+    c => segments(kaplanMeier(c))(_.seg).map { case (seg, km) =>
+      val next = km.drop(1).map(_.time) :+ RmstHorizon
+      val auc = total(km.zip(next).map { case (p, t) =>
+        mul(longOf(halfUp(p.survival * 1e6, 0)), sub(t, p.time)) })
+      val first = km.map(_.time).min
+      Row(seg, first, km.size.toLong, RmstHorizon,
+        halfUp(add(mul(first, 1000000L), auc).toDouble / 1e6, 6))
+    },
+    v6Plan)
+
+  val v7GreenwoodCi = new Query(
+    StructType.fromDDL("seg STRING, time BIGINT, d BIGINT, n_risk BIGINT, " +
+      "survival DOUBLE, se DOUBLE, ci_lo DOUBLE, ci_hi DOUBLE"),
+    c => riskTable(c, _.time)(_.event, _ => true).flatMap { cells =>
+      val run = productLimit(cells.map(x => kmFactor(x.n(0), x.atRisk(1))))
+      val gw = running(cells.map(x => greenwoodNano(x.n(0), x.atRisk(1))))
+      cells.indices.filter(cells(_).n(0) > 0).map { i =>
+        val (x, (ln, gone)) = (cells(i), run(i))
+        val s = survival(ln, gone)
+        val se = if (gone) 0.0
+          else halfUp(s * StrictMath.sqrt(gw(i).toDouble / 1e9), 6)
+        val (lo, hi) = (s - 1.96 * se, s + 1.96 * se)
+        // greatest(lo, 0.0) and least(hi, 1.0), as Spark picks them
+        Row(x.seg, x.t, x.n(0), x.atRisk(1), s, se,
+          halfUp(if (0.0 > lo) 0.0 else lo, 6),
+          halfUp(if (1.0 < hi) 1.0 else hi, 6))
+      }
+    },
+    v7Plan)
+
+  val v8LifeTable = new Query(
+    StructType.fromDDL("seg STRING, bin BIGINT, t_start BIGINT, t_end BIGINT, " +
+      "n_enter BIGINT, d BIGINT, w BIGINT, q DOUBLE, survival DOUBLE"),
+    c => riskTable(c, _.time / LifeTableBin)(_.event, !_.event, _ => true)
+        .flatMap { cells =>
+      // n_eff = n_enter − w/2, carried doubled so it stays an integer
+      val qMicro = cells.map { x =>
+        val nEffX2 = sub(mul(x.atRisk(2), 2L), x.n(1))
+        add(mul(x.n(0), 2000000L), nEffX2 / 2) / nEffX2
+      }
+      val run = productLimit(qMicro.map { q =>
+        val p = sub(1000000L, q)
+        (if (p > 0) longOf(halfUp(StrictMath.log(p.toDouble / 1e6) * 1e6, 0))
+          else 0L, p == 0)
+      })
+      cells.indices.map { i =>
+        val (x, (ln, gone)) = (cells(i), run(i))
+        val start = mul(x.t, LifeTableBin)
+        Row(x.seg, x.t, start, add(start, LifeTableBin), x.atRisk(2),
+          x.n(0), x.n(1), halfUp(qMicro(i).toDouble / 1e6, 6),
+          survival(ln, gone))
+      }
+    },
+    v8Plan)
+
+  val v9CompetingRisks = new Query(
+    StructType.fromDDL("seg STRING, time BIGINT, d1 BIGINT, d2 BIGINT, " +
+      "n_risk BIGINT, cif_cause1 DOUBLE, cif_cause2 DOUBLE"),
+    c => riskTable(c, _.time)(_.cause == 1, _.cause == 2, _ => true)
+        .flatMap { cells =>
+      val run = productLimit(cells.map(x =>
+        kmFactor(add(x.n(0), x.n(1)), x.atRisk(2))))
+      // S(t−): the product before this time's own factor, not rounded
+      val before = (0L, false) +: run.dropRight(1)
+      val inc = cells.indices.map { i =>
+        val (x, (ln, gone)) = (cells(i), before(i))
+        val s = if (gone) 0.0 else StrictMath.exp(ln.toDouble / 1e6)
+        def part(d: Long) = longOf(halfUp(
+          s * d.toDouble / x.atRisk(2).toDouble * 1e6, 0))
+        (part(x.n(0)), part(x.n(1)))
+      }
+      val (cif1, cif2) = (running(inc.map(_._1)), running(inc.map(_._2)))
+      cells.indices.filter(i => add(cells(i).n(0), cells(i).n(1)) > 0)
+        .map { i =>
+          val x = cells(i)
+          Row(x.seg, x.t, x.n(0), x.n(1), x.atRisk(2),
+            halfUp(cif1(i).toDouble / 1e6, 6), halfUp(cif2(i).toDouble / 1e6, 6))
+        }
+    },
+    v9Plan)
+
+  val v10SurvivalAtTimes = new Query(
+    StructType.fromDDL(
+      "seg STRING, horizon BIGINT, last_event_time BIGINT, survival DOUBLE"),
+    c => segments(kaplanMeier(c))(_.seg).flatMap { case (seg, km) =>
+      SurvivalHorizons.map(h => km.filter(_.time <= h).lastOption match {
+        case Some(p) => Row(seg, h, p.time, p.survival)
+        case None => Row(seg, h, -1L, 1.0)
+      })
+    },
+    v10Plan)
+
+  val v11MedianSurvival = new Query(
+    StructType.fromDDL(
+      "seg STRING, q DOUBLE, cross_time BIGINT, survival_at DOUBLE"),
+    c => segments(kaplanMeier(c))(_.seg).flatMap { case (seg, km) =>
+      SurvivalLevels.map(q => km.find(_.survival <= q) match {
+        case Some(p) => Row(seg, q, p.time, p.survival)
+        case None => Row(seg, q, -1L, -1.0)
+      })
+    },
+    v11Plan)
+
+  val v12CoxHazardRatio = new Query(
+    StructType.fromDDL("seg STRING, n_events BIGINT, events_arm1 BIGINT, " +
+      "beta DOUBLE, hazard_ratio DOUBLE, se DOUBLE, ci_lo DOUBLE, ci_hi DOUBLE"),
+    c => riskTable(c, _.time)(s => s.event && s.arm == 1, _.event,
+        _.arm == 0, _.arm == 1).flatMap { cells =>
+      val terms = cells.filter(_.n(1) > 0)
+      Option.when(terms.nonEmpty) {
+        val (beta, info) = coxNewton(
+          terms.map(x => (x.n(1), x.n(0), x.atRisk(2), x.atRisk(3))))
+        val se = Option.when(info > 0)(
+          halfUp(1.0 / StrictMath.sqrt(info.toDouble / 1e6), 6))
+        val lo = se.map(s => halfUp(StrictMath.exp(beta - 1.96 * s), 6))
+        val hi = se.map(s => halfUp(StrictMath.exp(beta + 1.96 * s), 6))
+        Row(terms.head.seg, total(terms.map(_.n(1))), total(terms.map(_.n(0))),
+          beta, halfUp(StrictMath.exp(beta), 6), se.getOrElse(null),
+          lo.getOrElse(null), hi.getOrElse(null))
+      }
+    },
+    v12Plan)
+
+  val v13NelsonAalenCi = new Query(
+    StructType.fromDDL("seg STRING, time BIGINT, d BIGINT, n_risk BIGINT, " +
+      "cum_hazard DOUBLE, var_hazard DOUBLE, ci_lo DOUBLE, ci_hi DOUBLE"),
+    c => riskTable(c, _.time)(_.event, _ => true).flatMap { cells =>
+      val cumH = running(cells.map(x => hazardMicro(x.n(0), x.atRisk(1))))
+      val cumV = running(cells.map { x =>
+        val (d, n) = (x.n(0), x.atRisk(1))
+        val n3 = mul(mul(n, n), n)
+        add(mul(mul(d, sub(n, d)), 1000000000000L), n3 / 2) / n3
+      })
+      cells.indices.filter(cells(_).n(0) > 0).map { i =>
+        val x = cells(i)
+        val h = cumH(i).toDouble / 1e6
+        val se = StrictMath.sqrt(cumV(i).toDouble) / 1e6
+        Row(x.seg, x.t, x.n(0), x.atRisk(1), halfUp(h, 6),
+          halfUp(cumV(i).toDouble / 1e12, 6), halfUp(h - 1.96 * se, 6),
+          halfUp(h + 1.96 * se, 6))
+      }
+    },
+    v13Plan)
+
+  val v14WeibullFit = new Query(
+    StructType.fromDDL(
+      "seg STRING, n_fit BIGINT, shape DOUBLE, ln_h_intercept DOUBLE"),
+    c => segments(nelsonAalen(c).filter(_.time > 0))(_.seg).map {
+        case (seg, pts) =>
+      val xy = pts.map(p => (
+        BigInt(longOf(halfUp(StrictMath.log(p.time.toDouble) * 1e6, 0))),
+        BigInt(longOf(halfUp(
+          StrictMath.log(p.cumHMicro.toDouble / 1e6) * 1e6, 0)))))
+      def sumDec(f: ((BigInt, BigInt)) => BigInt) =
+        xy.foldLeft(BigInt(0))((acc, p) => dec(acc + f(p)))
+      val n = BigInt(pts.size)
+      val (sx, sy) = (sumDec(_._1), sumDec(_._2))
+      val sxy = sumDec { case (x, y) => dec(x * y) }
+      val sxx = sumDec { case (x, _) => dec(x * x) }
+      val den = dec(dec(n * sxx) - dec(sx * sx))
+      // intDiv(num + intDiv(den, 2), den): each intDiv yields a long
+      def fit(num: BigInt): Any =
+        if (den == 0) null
+        else (dec(num + (den / 2).longValue) / den).longValue.toDouble / 1e6
+      Row(seg, pts.size.toLong,
+        fit(dec(dec(dec(n * sxy) - dec(sx * sy)) * 1000000)),
+        fit(dec(dec(sxx * sy) - dec(sx * sxy))))
+    },
+    v14Plan)
+
+  /** The 13 cohort queries by registry name ([[raw]] adds v2). */
+  private[graft] val cohortQueries: Seq[(String, Query)] = Seq(
+    "v1_cindex" -> v1CIndex, "v3_cum_hazard" -> v3CumHazard,
+    "v4_kaplan_meier" -> v4KaplanMeier, "v5_logrank" -> v5LogRank,
+    "v6_rmst" -> v6Rmst, "v7_greenwood_ci" -> v7GreenwoodCi,
+    "v8_life_table" -> v8LifeTable, "v9_competing_risks" -> v9CompetingRisks,
+    "v10_survival_at_times" -> v10SurvivalAtTimes,
+    "v11_median_survival" -> v11MedianSurvival,
+    "v12_cox_hr" -> v12CoxHazardRatio, "v13_nelson_aalen_ci" -> v13NelsonAalenCi,
+    "v14_weibull_fit" -> v14WeibullFit)
+
+  // ---- the shared kernels ----
+
+  /** One (segment, time key) cell of the at-risk table: `n(j)` is the
+    * cell's count j, and `atRisk(j)` is the segment's total of count j
+    * minus its sum over the segment's earlier cells (the plans'
+    * `total − Σ over (unbounded preceding, −1)` window).
+    */
+  private final case class Cell(seg: String, t: Long, n: Array[Long],
+      atRisk: Array[Long])
+
+  /** Per segment (in segment order), its cells in key order; each count
+    * is the number of the cell's subjects that satisfy it.
+    */
+  private def riskTable(c: Seq[Subject], key: Subject => Long)(
+      counts: (Subject => Boolean)*): Seq[IndexedSeq[Cell]] =
+    segments(c)(_.seg).map { case (seg, ss) =>
+      val byKey = ss.groupBy(key).toIndexedSeq.sortBy(_._1).map {
+        case (t, g) => t -> counts.map(p => g.count(p).toLong).toArray }
+      val totals = counts.indices.map(j => total(byKey.map(_._2(j))))
+      val earlier = new Array[Long](counts.size)
+      byKey.map { case (t, n) =>
+        val atRisk = Array.tabulate(n.length)(j => sub(totals(j), earlier(j)))
+        n.indices.foreach(j => earlier(j) = add(earlier(j), n(j)))
+        Cell(seg, t, n, atRisk)
+      }
+    }
+
+  /** Rows grouped by segment, segments in Spark's string order
+    * (unsigned UTF-8 bytes), each group in its input order.
+    */
+  private def segments[A](rows: Seq[A])(seg: A => String): Seq[(String, Seq[A])] =
+    rows.groupBy(seg).toSeq.sortBy(_._1)(SegOrder)
+
+  private val SegOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
+      a.getBytes(UTF_8), b.getBytes(UTF_8))
+  }
+
+  /** One event time of a segment's Nelson–Aalen curve (v3, v14). */
+  private final case class HazardPoint(seg: String, time: Long, d: Long,
+      nRisk: Long, hMicro: Long, cumHMicro: Long)
+
+  /** One event time of a segment's Kaplan–Meier curve (v4, v6, v10, v11). */
+  private final case class KmPoint(seg: String, time: Long, d: Long,
+      nRisk: Long, cumLnMicro: Long, survival: Double)
+
+  private def nelsonAalen(c: Seq[Subject]): Seq[HazardPoint] =
+    riskTable(c, _.time)(_.event, _ => true).flatMap { cells =>
+      val h = cells.map(x => hazardMicro(x.n(0), x.atRisk(1)))
+      val cum = running(h)
+      cells.indices.filter(cells(_).n(0) > 0).map { i =>
+        val x = cells(i)
+        HazardPoint(x.seg, x.t, x.n(0), x.atRisk(1), h(i), cum(i))
+      }
+    }
+
+  private def kaplanMeier(c: Seq[Subject]): Seq[KmPoint] =
+    riskTable(c, _.time)(_.event, _ => true).flatMap { cells =>
+      val run = productLimit(cells.map(x => kmFactor(x.n(0), x.atRisk(1))))
+      cells.indices.filter(cells(_).n(0) > 0).map { i =>
+        val (x, (ln, gone)) = (cells(i), run(i))
+        KmPoint(x.seg, x.t, x.n(0), x.atRisk(1), ln, survival(ln, gone))
+      }
+    }
+
+  /** d/n in micro-units by half-up integral division (v3, v13). */
+  private def hazardMicro(d: Long, n: Long): Long =
+    add(mul(d, 1000000L), n / 2) / n
+
+  /** One product-limit factor: ln((n−d)/n) snapped to micro-nats, and
+    * whether the step empties the risk set (v4, v7, v9).
+    */
+  private def kmFactor(d: Long, n: Long): (Long, Boolean) =
+    (if (d < n) longOf(halfUp(
+      StrictMath.log(sub(n, d).toDouble / n.toDouble) * 1e6, 0)) else 0L,
+      d == n)
+
+  /** The product limit in log space: per step, the running sum of the
+    * factors and the sticky extinction flag, both inclusive.
+    */
+  private def productLimit(
+      steps: Seq[(Long, Boolean)]): IndexedSeq[(Long, Boolean)] =
+    steps.scanLeft((0L, false)) { case ((ln, gone), (f, dead)) =>
+      (add(ln, f), gone || dead) }.tail.toIndexedSeq
+
+  /** S(t) from the log-space product; exactly 0 after extinction. */
+  private def survival(cumLnMicro: Long, extinct: Boolean): Double =
+    if (extinct) 0.0 else halfUp(StrictMath.exp(cumLnMicro.toDouble / 1e6), 6)
+
+  /** Greenwood's d/(n(n−d)) in nano-units by half-up integral division (v7). */
+  private def greenwoodNano(d: Long, n: Long): Long =
+    if (d < n) {
+      val nn = mul(n, sub(n, d))
+      add(mul(d, 1000000000L), nn / 2) / nn
+    } else 0L
+
+  /** Three Newton steps from β = 0 on the two-arm Breslow partial
+    * likelihood over a segment's event-time terms (d, d1, n0, n1): β
+    * after the third step, and the information (Σ i_micro) of the third
+    * evaluation (v12).
+    */
+  private def coxNewton(terms: Seq[(Long, Long, Long, Long)]): (Double, Long) = {
+    var beta = 0.0
+    var info = 0L
+    for (_ <- 1 to 3) {
+      val e = StrictMath.exp(beta)
+      var score = 0L
+      info = 0L
+      terms.foreach { case (d, d1, n0, n1) =>
+        val p = (n1.toDouble * e) / (n0.toDouble + n1.toDouble * e)
+        score = add(score,
+          longOf(halfUp((d1.toDouble - d.toDouble * p) * 1e6, 0)))
+        info = add(info, longOf(halfUp(d.toDouble * p * (1.0 - p) * 1e6, 0)))
+      }
+      if (info > 0) beta = halfUp(beta + score.toDouble / info.toDouble, 6)
+    }
+    (beta, info)
+  }
+
+  private def running(xs: Seq[Long]): IndexedSeq[Long] =
+    xs.scanLeft(0L)(add).tail.toIndexedSeq
+  private def total(xs: Seq[Long]): Long = xs.foldLeft(0L)(add)
+
+  // ---- Spark's arithmetic, on the driver ----
+
+  private def add(a: Long, b: Long): Long = Math.addExact(a, b)
+  private def sub(a: Long, b: Long): Long = Math.subtractExact(a, b)
+  private def mul(a: Long, b: Long): Long = Math.multiplyExact(a, b)
+
+  /** `round(x, scale)` on a double, as Spark evaluates it. */
+  private def halfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** `cast(x as long)` under ANSI: truncation, failing where it overflows. */
+  private def longOf(x: Double): Long =
+    if (math.floor(x) <= Long.MaxValue.toDouble &&
+        math.ceil(x) >= Long.MinValue.toDouble) x.toLong
+    else throw new ArithmeticException(s"casting $x to long overflows")
+
+  private val Dec38 = BigInt(10).pow(38)
+  /** A DECIMAL(38,0) result under ANSI: exact, failing past 38 digits. */
+  private def dec(b: BigInt): BigInt =
+    if (b.abs < Dec38) b
+    else throw new ArithmeticException(s"$b overflows DECIMAL(38,0)")
+
   /** Per-segment C-index of "account balance as risk" against a synthetic
     * survival target over the first 2000 customers — exercises the
     * concordance Aggregator end-to-end against a pure-SQL pairwise
     * oracle (which stays cheap at this sample size).
     */
-  def v1CIndex(spark: SparkSession, dir: String): DataFrame = {
+  private def v1Plan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val c = Tables.customer(spark, dir)
       .filter(col("c_custkey") <= 2000)
@@ -151,7 +607,7 @@ object Survival {
         lit(0L)))
   }
 
-  def v3CumHazard(spark: SparkSession, dir: String): DataFrame = {
+  private def v3Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graftfn.GraftExpressions.intDiv
     val w = Window.partitionBy(col("seg")).orderBy(col("time"))
@@ -181,7 +637,7 @@ object Survival {
     * from that point on (ln is undefined there — handled by a sticky
     * flag, not a sentinel value). Same single-shuffle shape as v3.
     */
-  def v4KaplanMeier(spark: SparkSession, dir: String): DataFrame = {
+  private def v4Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("seg")).orderBy(col("time"))
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -212,7 +668,7 @@ object Survival {
     * sets ride the same prefix-sum window as v3/v4 — still one shuffle
     * on the segment key; the output is one row per segment.
     */
-  def v5LogRank(spark: SparkSession, dir: String): DataFrame = {
+  private def v5Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = Tables.customer(spark, dir)
       .filter(col("c_custkey") <= 2000)
@@ -282,7 +738,7 @@ object Survival {
     * Newton step is one partial-agg pass over the persisted event-time
     * terms — never the raw rows.
     */
-  def v12CoxHazardRatio(spark: SparkSession, dir: String): DataFrame = {
+  private def v12Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = Tables.customer(spark, dir)
       .filter(col("c_custkey") <= 2000)
@@ -354,11 +810,11 @@ object Survival {
     * integer days), accumulated with one lead() over the same
     * seg-keyed window — no new shuffle beyond v4's. One row per segment.
     */
-  def v6Rmst(spark: SparkSession, dir: String): DataFrame = {
+  private def v6Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val horizon = 97L
+    val horizon = RmstHorizon
     val w = Window.partitionBy(col("seg")).orderBy(col("time"))
-    v4KaplanMeier(spark, dir)
+    v4Plan(spark, dir)
       .withColumn("surv_micro", round(col("survival") * 1e6).cast("long"))
       .withColumn("next_time",
         coalesce(lead(col("time"), 1).over(w), lit(horizon)))
@@ -384,7 +840,7 @@ object Survival {
     * final se/band multiply through doubles. Extinction rows (S = 0)
     * carry a zero-width band. Same single seg-keyed shuffle as v3–v6.
     */
-  def v7GreenwoodCi(spark: SparkSession, dir: String): DataFrame = {
+  private def v7Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graftfn.GraftExpressions.intDiv
     val w = Window.partitionBy(col("seg")).orderBy(col("time"))
@@ -432,10 +888,10 @@ object Survival {
     * per-time rows ~10×, so the life table is CHEAPER than the curve
     * it summarizes.
     */
-  def v8LifeTable(spark: SparkSession, dir: String): DataFrame = {
+  private def v8Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graftfn.GraftExpressions.intDiv
-    val binW = 10L
+    val binW = LifeTableBin
     val s = Tables.customer(spark, dir)
       .filter(col("c_custkey") <= 2000)
       .select(col("c_mktsegment").as("seg"),
@@ -491,7 +947,7 @@ object Survival {
     * drift apart with aggregation order. Same single seg-keyed shuffle
     * as the rest of the v-family.
     */
-  def v9CompetingRisks(spark: SparkSession, dir: String): DataFrame = {
+  private def v9Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val s = Tables.customer(spark, dir)
       .filter(col("c_custkey") <= 2000)
@@ -548,11 +1004,11 @@ object Survival {
     * collapse keys on (seg, horizon), and segments without early events
     * re-enter via the left join — the v4 curve is computed once.
     */
-  def v10SurvivalAtTimes(spark: SparkSession, dir: String): DataFrame = {
+  private def v10Plan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val km = v4KaplanMeier(spark, dir)
+    val km = v4Plan(spark, dir)
       .select(col("seg"), col("time"), col("survival"))
-    val horizons = Seq(30L, 60L, 90L).toDF("horizon")
+    val horizons = SurvivalHorizons.toDF("horizon")
     val grid = km.select(col("seg")).distinct()
       .crossJoin(broadcast(horizons))
     val best = km.join(broadcast(horizons), col("time") <= col("horizon"))
@@ -578,11 +1034,11 @@ object Survival {
     * bit-stable across engines (log-micro product, gated), so comparing
     * them to exactly-representable quantile literals is deterministic.
     */
-  def v11MedianSurvival(spark: SparkSession, dir: String): DataFrame = {
+  private def v11Plan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val km = v4KaplanMeier(spark, dir)
+    val km = v4Plan(spark, dir)
       .select(col("seg"), col("time"), col("survival"))
-    val qs = Seq(0.75, 0.50, 0.25).toDF("q")
+    val qs = SurvivalLevels.toDF("q")
     val grid = km.select(col("seg")).distinct().crossJoin(broadcast(qs))
     val crossed = km.join(broadcast(qs), col("survival") <= col("q"))
       .groupBy(col("seg"), col("q"))
@@ -609,7 +1065,7 @@ object Survival {
     * Single shuffle on seg like v3; the band is a window cumsum, not a
     * second pass.
     */
-  def v13NelsonAalenCi(spark: SparkSession, dir: String): DataFrame = {
+  private def v13Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graftfn.GraftExpressions.intDiv
     val w = Window.partitionBy(col("seg")).orderBy(col("time"))
@@ -650,9 +1106,9 @@ object Survival {
     * Emitted in the (α, −α·ln λ) parameterization — deriving λ itself
     * would cross exp, which stays out of the gate.
     */
-  def v14WeibullFit(spark: SparkSession, dir: String): DataFrame = {
+  private def v14Plan(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graftfn.GraftExpressions.intDiv
-    val xy = v3CumHazard(spark, dir)
+    val xy = v3Plan(spark, dir)
       .filter(col("time") > 0)
       .select(col("seg"),
         round(log(col("time").cast("double")) * 1e6).cast("long").as("x"),
@@ -676,28 +1132,16 @@ object Survival {
       .orderBy(col("seg"))
   }
 
-  /** The UNSCOPED registry — plan-inspection specs read this so
-    * building a frame never executes it; every external surface goes
-    * through [[all]], whose entries run under [[QueryScope.scoped]]
-    * (held intermediates park at scope exit and die at the next gated
-    * call or [[QueryScope.releaseAll]] — r15 cache hygiene).
+  /** The UNSCOPED registry — plan-inspection specs read it to see the
+    * plans before any cache scope pins them. Building a cohort query
+    * runs its cohort collect. Every external surface goes through
+    * [[all]], whose entries run under [[QueryScope.scoped]] (held
+    * intermediates park at scope exit and die at the next gated call or
+    * [[QueryScope.releaseAll]] — r15 cache hygiene).
     */
-  private[graft] val raw: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "v14_weibull_fit" -> (v14WeibullFit _),
-    "v13_nelson_aalen_ci" -> (v13NelsonAalenCi _),
-    "v1_cindex" -> (v1CIndex _),
-    "v10_survival_at_times" -> (v10SurvivalAtTimes _),
-    "v11_median_survival" -> (v11MedianSurvival _),
-    "v2_clean_matrix" -> (v2CleanMatrix _),
-    "v3_cum_hazard" -> (v3CumHazard _),
-    "v4_kaplan_meier" -> (v4KaplanMeier _),
-    "v5_logrank" -> (v5LogRank _),
-    "v6_rmst" -> (v6Rmst _),
-    "v7_greenwood_ci" -> (v7GreenwoodCi _),
-    "v8_life_table" -> (v8LifeTable _),
-    "v9_competing_risks" -> (v9CompetingRisks _),
-    "v12_cox_hr" -> (v12CoxHazardRatio _),
-  )
+  private[graft] val raw: Map[String, (SparkSession, String) => DataFrame] =
+    cohortQueries.toMap[String, (SparkSession, String) => DataFrame] +
+      ("v2_clean_matrix" -> (v2CleanMatrix _))
 
   /** Every gated entry runs under a [[QueryScope.scoped]] cache
     * scope: held intermediates park at scope exit and die at the next

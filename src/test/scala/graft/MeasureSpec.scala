@@ -41,4 +41,28 @@ class MeasureSpec extends AnyFunSuite {
     assert(badDrop.getMessage.contains("dropDocs must be an integer"),
       badDrop.getMessage)
   }
+
+  test("ScaleBench and ScaleUp arguments: a stale extra argument or a " +
+      "non-integer passes, factor or boilerPct fails naming it") {
+    val badPasses = intercept[IllegalArgumentException](
+      ScaleBench.main(Array("dataDir", "no_such_query", "x")))
+    assert(badPasses.getMessage.contains("passes must be an integer, got 'x'"),
+      badPasses.getMessage)
+    val staleBench = intercept[IllegalArgumentException](ScaleBench.main(
+      Array("dataDir", "no_such_query", "3", "out.json", "8", "", "extra")))
+    assert(staleBench.getMessage.contains("usage: ScaleBench dataDir namesCsv"),
+      staleBench.getMessage)
+    val badFactor = intercept[IllegalArgumentException](
+      ScaleUp.main(Array("no_such_src", "no_such_out", "ten")))
+    assert(badFactor.getMessage.contains("factor must be an integer, got 'ten'"),
+      badFactor.getMessage)
+    val badBoiler = intercept[IllegalArgumentException](ScaleUp.main(
+      Array("no_such_src", "no_such_out", "10", "all", "5%")))
+    assert(badBoiler.getMessage.contains("boilerPct must be an integer"),
+      badBoiler.getMessage)
+    val staleUp = intercept[IllegalArgumentException](ScaleUp.main(
+      Array("no_such_src", "no_such_out", "10", "all", "0", "extra")))
+    assert(staleUp.getMessage.contains("usage: ScaleUp [srcDir]"),
+      staleUp.getMessage)
+  }
 }

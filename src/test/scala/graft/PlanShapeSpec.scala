@@ -725,9 +725,10 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      Seq(graft.queries.Survival.v3CumHazard(spark, dir),
-          graft.queries.Survival.v4KaplanMeier(spark, dir),
-          graft.queries.Survival.v5LogRank(spark, dir)).foreach { df =>
+      // the distributed plans: the queries themselves finish on the driver
+      Seq(graft.queries.Survival.v3CumHazard.plan(spark, dir),
+          graft.queries.Survival.v4KaplanMeier.plan(spark, dir),
+          graft.queries.Survival.v5LogRank.plan(spark, dir)).foreach { df =>
         val root = df.queryExecution.executedPlan
         val singles = root.collect {
           case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
@@ -944,9 +945,20 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("v12: Newton rounds truncate lineage like s23 — final plan is a checkpoint read") {
-    val p = plan(graft.queries.Survival.v12CoxHazardRatio(spark, dir))
+    val p = plan(graft.queries.Survival.v12CoxHazardRatio.plan(spark, dir))
     assert(p.contains("Scan ExistingRDD"), p.take(1200))
     assert(!p.contains("CartesianProduct"), p.take(1200))
+  }
+
+  test("v1, v3–v14: the cohort queries' plans are local relations — " +
+      "no exchange, no file scan") {
+    graft.queries.Survival.cohortQueries.foreach { case (name, q) =>
+      val df = q(spark, dir)
+      val p = plan(df)
+      assert(df.queryExecution.analyzed.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation], s"$name:\n$p")
+      assert(p.contains("LocalTableScan") && !p.contains("Exchange"), s"$name:\n$p")
+    }
   }
 
   test("t27: one gram-key shuffle serves all three orders; union is map-side") {
