@@ -1,13 +1,15 @@
 package graft
+import graft.app.Experiment.jsonValue
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","queries","sf"}.
   *
-  * Config mirrors the 100 TB posture scaled to one node: shuffle
-  * partitions = cores (not 200 — small local shuffles), AQE on (runtime
-  * coalescing + skew splitting), broadcast threshold left at default so
-  * the dimension joins in the queries plan as broadcasts.
+  * The session is [[Measure.session]]'s, the 100 TB posture scaled to
+  * one node: shuffle partitions = cores (not 200 — small local
+  * shuffles), AQE on (runtime coalescing + skew splitting), broadcast
+  * threshold left at default so the dimension joins in the queries plan
+  * as broadcasts.
   */
 object Bench {
 
@@ -116,22 +118,13 @@ object Bench {
     val sfShort = sfDir.replaceAll(".*sf", "") // "/root/testdata/sf0.1" → 0.1
     val sfJson =
       if (sfShort.matches("""\d+(\.\d+)?""")) sfShort else "\"" + sfDir + "\""
-    // JSON requires every char < 0x20 escaped; \s+ collapsing above only
-    // covers whitespace controls, so an exotic control char in an engine
-    // error message must not corrupt the one artifact that reports it
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // stdout carries short query ids + exception class only (same
     // budget discipline as objShort — full names and messages would
     // blow the 2000-char tail in a mass-failure round, clipping the
     // very JSON that reports the failure); everything goes to the file.
     def errObj(key: String => String, f: String => String): String =
       errors.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + key(k) + "\":" + jstr(f(v)) }
+        .map { case (k, v) => "\"" + key(k) + "\":" + jsonValue(f(v)) }
         .mkString("{", ",", "}")
     val errShort = if (errors.isEmpty) "" else {
       val short = errObj(k => if (collides(k)) k else shortKey(k),
@@ -182,17 +175,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    suppressBoundedWindowWarning()
+    val spark = Measure.session()
 
     val out = runBench(spark, sfDir, SparkEntry.queries)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")

@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session builder for the measurement mains ([[ScaleBench]],
-  * [[PlanDump]], [[ScaleUp]], [[IngestRehearsal]], [[LedgerRehearsal]])
-  * and their shared timing helpers. The session matches [[Bench]]'s:
+/** The one session builder for [[Bench]] and the measurement mains
+  * ([[ScaleBench]], [[PlanDump]], [[ScaleUp]], [[IngestRehearsal]],
+  * [[LedgerRehearsal]]), and their shared timing helpers. The session is
   * `local[cpus]` with `cpus` from `SPARK_GRAFT_CPUS` (default 32), AQE
   * with partition coalescing, UTC, no UI — so an sf1/sf10 rehearsal
-  * runs on the same core count as the bench it is compared to.
+  * runs on the same session as the bench it is compared to.
   *
   * `SPARK_GRAFT_CODEC` sets the spill/shuffle codec for disk-bound
   * rehearsals: the sf1000 pair-join shuffle is ~3.5B slim long rows —

@@ -1,6 +1,7 @@
 package graft.api
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.app.Experiment.jsonValue
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -153,14 +154,10 @@ object JobService {
     case other => JsonMethods.compact(JsonMethods.render(other))
   }
 
-  def jsonQuote(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .flatMap(c => if (c < ' ') f"\\u${c.toInt}%04x" else c.toString) + "\""
-
-  def errorJson(msg: String): String = s"""{"error": ${jsonQuote(msg)}}"""
+  def errorJson(msg: String): String = s"""{"error": ${jsonValue(msg)}}"""
 
   def jobJson(j: Job): String = {
-    def q(s: String) = jsonQuote(s)
+    def q(s: String) = jsonValue(s)
     val fin = j.finishedAt.map(t => q(t.toString)).getOrElse("null")
     val det = j.stateDetails.map(q).getOrElse("null")
     s"""{"id": ${q(j.id)}, "createdAt": ${q(j.createdAt.toString)}, """ +

@@ -116,6 +116,8 @@ object Experiment {
   // ---- minimal deterministic JSON writer (driver-side tiny payloads,
   //      SURVEY §1.1 row 5-6)
 
+  /** The JSON rendering of a value; its String case is the repo's one
+    * string escaper (quote, backslash, every control char < 0x20). */
   def jsonValue(v: Any): String = v match {
     case null => "null"
     case s: String => "\"" + s.flatMap {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -135,77 +135,13 @@ object EventStreams {
       .agg(approx_count_distinct(col("user_id"), 0.02).as("approx_users"),
         count(lit(1)).as("n_events"))
 
-  case class PairOut(user_id: Long, click_id: Long, view_id: Long,
-      gap_sec: Double)
-
   /** Streaming twin of Events.e9IntervalJoin: every (click, view) pair
-    * within the preceding 30 minutes, same user. Keyed state is the
-    * user's in-horizon view (id, µs) list — the pair-emitting sibling of
-    * [[rangeViewCounts]]'s counter; pruned against the newest timestamp
-    * per batch, AND garbage-collected for users that simply go quiet: an
-    * event-time timeout fires once the watermark passes the newest
-    * view's horizon, so idle keys don't retain their last views forever
-    * (with unbounded user cardinality that leak would grow state without
-    * bound even though each entry is small).
-    */
-  def intervalPairs(events: Dataset[RangeIn]): Dataset[PairOut] = {
-    import events.sparkSession.implicits._
-    val gapUs = 30L * 60 * 1000 * 1000
-    val gapMs = 30L * 60 * 1000
-    events.withWatermark("ts", "30 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RangePairState, PairOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[RangeIn], state: GroupState[RangePairState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed the horizon: nothing retained can pair
-            // with any future in-watermark click — drop the key
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-            var views = state.getOption.map(_.views).getOrElse(Nil)
-            val out = Seq.newBuilder[PairOut]
-            var newest = views.headOption.map(_._2).getOrElse(Long.MinValue)
-            sorted.foreach { e =>
-              val t = micros(e.ts)
-              newest = math.max(newest, t)
-              e.event_type match {
-                case "view" => views = (e.event_id, t) :: views
-                case "click" =>
-                  views.foreach { case (vid, vt) =>
-                    if (vt >= t - gapUs && vt < t)
-                      out += PairOut(userId, e.event_id, vid, (t - vt) / 1000000.0)
-                  }
-                case _ =>
-              }
-            }
-            views = views.filter(_._2 > newest - gapUs) // horizon prune
-            if (views.nonEmpty) {
-              state.update(RangePairState(views))
-              // clamp above the current watermark (API requirement) so an
-              // already-expired key still times out on the next batch
-              state.setTimeoutTimestamp(
-                math.max(newest / 1000 + gapMs, state.getCurrentWatermarkMs + 1))
-            } else state.remove()
-            out.result().iterator
-          }
-      }
-  }
-  case class RangePairState(views: List[(Long, Long)])
-
-  /** Native STREAM-STREAM join variant of [[intervalPairs]]: the same
-    * (click, view-within-30-min) pairs expressed as Spark's built-in
+    * within the preceding 30 minutes, same user, as Spark's built-in
     * watermarked stream-stream inner join with an event-time range
-    * condition, instead of hand-rolled `flatMapGroupsWithState`. The
-    * two formulations trade differently at scale: the native join
-    * shuffles BOTH streams on user_id and sizes its view-side state
-    * buffer from the watermark ± range bound automatically (state GC
-    * owned by the engine, skew handled by AQE-less streaming exchange),
-    * while [[intervalPairs]] owns its state layout (one pruned list per
-    * user) and can cut memory further than the join's generic buffer —
-    * the engine keeps both because the right choice is corpus-shaped.
-    * `StreamingSpec` pins both equal to the batch e9 pairs.
+    * condition. The engine shuffles both sides on user_id and sizes the
+    * view-side state buffer from the watermark and the range bound, so
+    * state GC is the engine's. `StreamingSpec` pins it equal to the
+    * batch e9 pairs.
     */
   def intervalPairsJoin(events: DataFrame): DataFrame = {
     val views = events.filter(col("event_type") === "view")
@@ -261,172 +197,188 @@ object EventStreams {
     events.withWatermark("ts", "2 hours")
       .dropDuplicates("event_id")
 
+  /** A row of one user's event stream: the key and the event time every
+    * keyed twin below reads. */
+  sealed trait Timed { def user_id: Long; def ts: java.sql.Timestamp }
+  /** A [[Timed]] row with the batch twins' tiebreak, `event_id`. */
+  sealed trait Stamped extends Timed { def event_id: Long }
+
   case class EventIn(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  case class SessionState(start: Long, last: Long, n: Int, sum: Double)
-  case class SessionOut(user_id: Long, n_events: Int, duration_sec: Double,
-      sum_value: Double)
+      extends Timed
+  /** The (user, event, type, time) row: the input of the twins that read
+    * only an event's type and time. */
+  case class TypeIn(user_id: Long, event_id: Long, event_type: String,
+      ts: java.sql.Timestamp) extends Stamped
 
-  /** Gap-based sessionization with explicit keyed state
-    * (`flatMapGroupsWithState`): a session closes after 30 min of
-    * inactivity in EVENT time — the timeout fires when the WATERMARK
-    * passes last+gap, not after pipeline wall-clock idleness, so
-    * replaying historical data (backfill, reprocessing, a two-burst
-    * catch-up) closes exactly the same sessions as live ingestion. A
-    * processing-time timeout provably breaks replay: trailing sessions
-    * would wait 30 wall-clock minutes (or never close under
-    * AvailableNow), and fast-forwarded history would close on pipeline
-    * speed, not data gaps. State per key = one running session — O(1),
-    * retired by the watermark. Batch twin: Events.e2Sessionize.
+  private def micros(ts: java.sql.Timestamp): Long =
+    ts.getTime * 1000 + (ts.getNanos / 1000) % 1000
+
+  /** One user's rows in the batch twins' window order, (µs, event_id). */
+  private def inOrder[R <: Stamped](rows: Iterator[R]): Seq[R] =
+    rows.toSeq.sortBy(r => (micros(r.ts), r.event_id))
+
+  /** `round(value * 100)` cast to long, HALF_UP like Spark's `round`:
+    * the batch twins' integer cents. */
+  private def cents(v: Double): Long =
+    BigDecimal(v * 100).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+
+  /** One open gap session: its first and last event time in µs plus the
+    * twin's accumulator. O(1) per user when the accumulator is. */
+  case class Session[A](start: Long, last: Long, acc: A)
+
+  /** The gap-session machine behind [[sessionize]] and
+    * [[sessionTypeFacts]]: a user's session extends while the next event
+    * is at most `gapMin` minutes after the last one, in µs like batch
+    * e2 (a new session starts when the µs gap is greater). `open` starts
+    * the accumulator from a session's first row, `extend` folds in each
+    * later row, and `close` turns a finished session into output rows.
+    *
+    * Sessions close in EVENT time: the timeout fires when the watermark
+    * passes last + gap, not after pipeline wall-clock idleness, so a
+    * replay of history (backfill, a two-burst catch-up) closes exactly
+    * the sessions live ingestion closes; a processing-time timeout would
+    * close on pipeline speed, or never under AvailableNow. Timeouts are
+    * in ms: the deadline is ⌊(last + gap) / 1000⌋ ms, and an event that
+    * still passes the late-data filter once the watermark W has passed
+    * it lies after (W + 1) ms > last + gap, so it can no longer extend
+    * the session. Rows sort by µs alone: equal-µs rows always share a
+    * session, so their order cannot change one.
     */
-  def sessionize(events: Dataset[EventIn], gapMin: Int = 30): Dataset[SessionOut] = {
+  private def sessions[R <: Timed : Encoder, A, U : Encoder](
+      events: Dataset[R], gapMin: Int)(open: R => A, extend: (A, R) => A,
+      close: (Long, Session[A]) => Iterator[U])(
+      implicit stateEnc: Encoder[Session[A]]): Dataset[U] = {
     import events.sparkSession.implicits._
-    val gapMs = gapMin * 60L * 1000
+    val gapUs = gapMin * 60L * 1000000
     events.withWatermark("ts", s"$gapMin minutes")
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
+      .flatMapGroupsWithState[Session[A], U](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[EventIn], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(userId, s.n, (s.last - s.start) / 1000.0, s.sum))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.last <= gapMs =>
-                  cur = Some(s.copy(last = t, n = s.n + 1, sum = s.sum + e.value))
-                case Some(s) =>
-                  closed ::= SessionOut(userId, s.n, (s.last - s.start) / 1000.0, s.sum)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              // close when the event-time watermark passes the gap
-              // horizon; clamp above the current watermark (API
-              // requirement) so an already-expired session still times
-              // out on the next batch
-              state.setTimeoutTimestamp(
-                math.max(s.last + gapMs, state.getCurrentWatermarkMs + 1))
-            }
-            closed.reverseIterator
-          }
-      }
-  }
-
-  case class SessTypeIn(user_id: Long, event_id: Long, event_type: String,
-      ts: java.sql.Timestamp)
-  /** One open session per user: bounds + the distinct types seen. The
-    * type set is bounded by |event types| (5 here) — O(1) state per key
-    * like [[SessionState]], not O(events).
-    */
-  case class SessTypeState(start: Long, last: Long, types: List[String])
-  case class SessTypeFact(user_id: Long, session_start_ms: Long,
-      event_type: String)
-
-  /** Streaming producer for the e25 session co-occurrence facts: the
-    * [[sessionize]] keyed-state machinery (event-time timeout — replay
-    * closes the same sessions as live ingestion), emitting on each
-    * session CLOSE one (user, session, type) fact per distinct type the
-    * session contained. The pair/lift finisher is the SHARED batch code
-    * ([[graft.queries.Events.sessionPairLiftOf]]) over these facts, so
-    * stream ≡ batch is a property of one code path, not two kept in
-    * sync by hand.
-    */
-  def sessionTypeFacts(events: Dataset[SessTypeIn],
-      gapMin: Int = 30): Dataset[SessTypeFact] = {
-    import events.sparkSession.implicits._
-    val gapMs = gapMin * 60L * 1000
-    def close(userId: Long, s: SessTypeState): Iterator[SessTypeFact] =
-      s.types.distinct.sorted.iterator
-        .map(t => SessTypeFact(userId, s.start, t))
-    events.withWatermark("ts", s"$gapMin minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessTypeState, SessTypeFact](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[SessTypeIn],
-            state: GroupState[SessTypeState]) =>
+        (userId: Long, rows: Iterator[R], state: GroupState[Session[A]]) =>
           if (state.hasTimedOut) {
             val s = state.get
             state.remove()
             close(userId, s)
           } else {
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            var closed = List.empty[SessTypeFact]
+            val closed = Seq.newBuilder[U]
             var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.last <= gapMs =>
-                  cur = Some(s.copy(last = t,
-                    types = if (s.types.contains(e.event_type)) s.types
-                            else e.event_type :: s.types))
-                case Some(s) =>
-                  closed = closed ++ close(userId, s).toList
-                  cur = Some(SessTypeState(t, t, e.event_type :: Nil))
-                case None =>
-                  cur = Some(SessTypeState(t, t, e.event_type :: Nil))
+            rows.toSeq.sortBy(r => micros(r.ts)).foreach { r =>
+              val t = micros(r.ts)
+              cur = cur match {
+                case Some(s) if t - s.last <= gapUs =>
+                  Some(Session(s.start, t, extend(s.acc, r)))
+                case prev =>
+                  prev.foreach(s => closed ++= close(userId, s))
+                  Some(Session(t, t, open(r)))
               }
             }
             cur.foreach { s =>
               state.update(s)
-              state.setTimeoutTimestamp(
-                math.max(s.last + gapMs, state.getCurrentWatermarkMs + 1))
+              // clamp above the current watermark (API requirement) so an
+              // already-expired session still times out on the next batch
+              state.setTimeoutTimestamp(math.max(
+                Math.floorDiv(s.last + gapUs, 1000L),
+                state.getCurrentWatermarkMs + 1))
             }
-            closed.iterator
+            closed.result().iterator
           }
       }
   }
 
-  case class AsofIn(user_id: Long, event_id: Long, event_type: String,
-      ts: java.sql.Timestamp)
+  /** A session's event count and value sum in integer cents. */
+  case class SessionSum(n: Int, cents: Long)
+  case class SessionOut(user_id: Long, n_events: Int, duration_sec: Double,
+      sum_value: Double)
+
+  /** Streaming twin of Events.e2Sessionize on the shared [[sessions]]
+    * machine: one closed session per row, with e2's arithmetic — the
+    * duration from µs bounds and the value sum in HALF_UP integer cents.
+    */
+  def sessionize(events: Dataset[EventIn], gapMin: Int = 30): Dataset[SessionOut] = {
+    import events.sparkSession.implicits._
+    sessions[EventIn, SessionSum, SessionOut](events, gapMin)(
+      e => SessionSum(1, cents(e.value)),
+      (a, e) => SessionSum(a.n + 1, a.cents + cents(e.value)),
+      (userId, s) => Iterator.single(SessionOut(userId, s.acc.n,
+        (s.last - s.start) / 1000000.0, s.acc.cents / 100.0)))
+  }
+
+  case class SessTypeFact(user_id: Long, session_start_ms: Long,
+      event_type: String)
+
+  /** Streaming producer for the e25 session co-occurrence facts, on the
+    * shared [[sessions]] machine: a session's accumulator is the set of
+    * distinct types it contained (bounded by |event types|, so O(1) per
+    * user), and each CLOSE emits one (user, session, type) fact per type.
+    * The pair/lift finisher is the SHARED batch code
+    * ([[graft.queries.Events.sessionPairLiftOf]]) over these facts, so
+    * stream ≡ batch is a property of one code path, not two kept in sync
+    * by hand.
+    */
+  def sessionTypeFacts(events: Dataset[TypeIn],
+      gapMin: Int = 30): Dataset[SessTypeFact] = {
+    import events.sparkSession.implicits._
+    sessions[TypeIn, List[String], SessTypeFact](events, gapMin)(
+      e => e.event_type :: Nil,
+      (types, e) =>
+        if (types.contains(e.event_type)) types else e.event_type :: types,
+      (userId, s) => s.acc.sorted.iterator.map(t =>
+        SessTypeFact(userId, Math.floorDiv(s.start, 1000L), t)))
+  }
+
+  /** The per-user carry builder behind the standing-state twins. Rows
+    * are keyed on user_id and folded in the batch twins' (µs, event_id)
+    * order through `step`, which reads the carry so far and returns the
+    * next carry plus at most one output row; `atEnd` may add one row
+    * from the trigger's final carry. The carry is written back after
+    * each trigger and never times out (Append, NoTimeout): it is one
+    * small record per user that must outlive any horizon, because the
+    * batch windows carry it unboundedly and a timeout would change the
+    * answer. Outputs agree with the batch twin exactly when the stream
+    * delivers each user's rows in order; Append mode cannot retract a
+    * row emitted before an older one arrives.
+    */
+  private def carry[R <: Stamped : Encoder, S : Encoder, U : Encoder](
+      events: Dataset[R])(step: (Long, Option[S], R) => (Option[S], Option[U]),
+      atEnd: (Long, S) => Option[U] = (_: Long, _: S) => None): Dataset[U] = {
+    import events.sparkSession.implicits._
+    events.groupByKey(_.user_id)
+      .flatMapGroupsWithState[S, U](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (userId: Long, rows: Iterator[R], state: GroupState[S]) =>
+          var cur = state.getOption
+          val out = Seq.newBuilder[U]
+          inOrder(rows).foreach { r =>
+            val (next, emit) = step(userId, cur, r)
+            cur = next
+            out ++= emit
+          }
+          cur.foreach(state.update)
+          (out.result() ++ cur.flatMap(atEnd(userId, _))).iterator
+      }
+  }
+
   /** Last view seen per user — the entire as-of state: O(1) per key. */
   case class AsofState(viewId: Long, viewUs: Long)
   case class AsofOut(user_id: Long, event_id: Long, view_id: Option[Long],
       lag_sec: Option[Double])
 
-  private def micros(ts: java.sql.Timestamp): Long =
-    ts.getTime * 1000 + (ts.getNanos / 1000) % 1000
-
-  /** Streaming as-of join — the twin of Events.e6AsofJoin: each purchase
-    * is matched to the user's most recent view at or before it. Keyed
-    * state carries just the latest view (id, µs) per user, so state is
-    * O(1)/key and never needs a watermark to stay bounded; within a batch
-    * rows are processed in the batch twin's (µs, event_id) order, so the
-    * outputs agree exactly when the stream delivers in order.
+  /** Streaming as-of join — the twin of Events.e6AsofJoin, on the
+    * [[carry]] builder: each purchase is matched to the user's most
+    * recent view at or before it, and the carry is that view's (id, µs).
     */
-  def asofViews(events: Dataset[AsofIn]): Dataset[AsofOut] = {
+  def asofViews(events: Dataset[TypeIn]): Dataset[AsofOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[AsofState, AsofOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[AsofIn], state: GroupState[AsofState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var last = state.getOption
-          val out = Seq.newBuilder[AsofOut]
-          sorted.foreach { e =>
-            val us = micros(e.ts)
-            e.event_type match {
-              case "view" => last = Some(AsofState(e.event_id, us))
-              case "purchase" =>
-                out += AsofOut(userId, e.event_id, last.map(_.viewId),
-                  last.map(s => (us - s.viewUs) / 1000000.0))
-              case _ => // other event types don't participate
-            }
-          }
-          last.foreach(state.update)
-          out.result().iterator
+    carry[TypeIn, AsofState, AsofOut](events) { (userId, last, e) =>
+      e.event_type match {
+        case "view" => (Some(AsofState(e.event_id, micros(e.ts))), None)
+        case "purchase" =>
+          (last, Some(AsofOut(userId, e.event_id, last.map(_.viewId),
+            last.map(s => (micros(e.ts) - s.viewUs) / 1000000.0))))
+        case _ => (last, None) // other event types don't participate
       }
+    }
   }
-
-  case class RangeIn(user_id: Long, event_id: Long, event_type: String,
-      ts: java.sql.Timestamp)
 
   case class FunnelVerdict(user_id: Long, viewed: Boolean,
       clicked_24h: Boolean, converted_72h: Boolean, ttc_sec: Option[Double])
@@ -456,7 +408,7 @@ object EventStreams {
     * parity is exact whenever per-user activity fits one horizon
     * (spec-pinned on the harness corpus and a two-burst replay).
     */
-  def timedFunnel(events: Dataset[RangeIn]): Dataset[FunnelVerdict] = {
+  def timedFunnel(events: Dataset[TypeIn]): Dataset[FunnelVerdict] = {
     import events.sparkSession.implicits._
     val clickGapUs = 24L * 3600 * 1000 * 1000
     val purchGapUs = 72L * 3600 * 1000 * 1000
@@ -464,7 +416,7 @@ object EventStreams {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[TimedFunnelState, FunnelVerdict](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[RangeIn],
+        (userId: Long, rows: Iterator[TypeIn],
             state: GroupState[TimedFunnelState]) =>
           if (state.hasTimedOut) {
             val s = state.get
@@ -528,11 +480,10 @@ object EventStreams {
     * state is the user's view timestamps within the horizon (a true
     * sliding range, so unlike the windowed aggregations it cannot be a
     * tumbling-window groupBy); state is pruned against the newest
-    * timestamp seen per key, and — like [[intervalPairs]] — idle keys
-    * are garbage-collected by an event-time timeout once the watermark
-    * passes their horizon.
+    * timestamp seen per key, and idle keys are garbage-collected by an
+    * event-time timeout once the watermark passes their horizon.
     */
-  def rangeViewCounts(events: Dataset[RangeIn]): Dataset[RangeOut] = {
+  def rangeViewCounts(events: Dataset[TypeIn]): Dataset[RangeOut] = {
     import events.sparkSession.implicits._
     val gapUs = 30L * 60 * 1000 * 1000
     val gapMs = 30L * 60 * 1000
@@ -540,16 +491,15 @@ object EventStreams {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[RangeState, RangeOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[RangeIn], state: GroupState[RangeState]) =>
+        (userId: Long, rows: Iterator[TypeIn], state: GroupState[RangeState]) =>
           if (state.hasTimedOut) {
             state.remove()
             Iterator.empty
           } else {
-            val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
             var views = state.getOption.map(_.viewUs).getOrElse(Nil)
             val out = Seq.newBuilder[RangeOut]
             var newest = views.headOption.getOrElse(Long.MinValue)
-            sorted.foreach { e =>
+            inOrder(rows).foreach { e =>
               val t = micros(e.ts)
               newest = math.max(newest, t)
               e.event_type match {
@@ -572,42 +522,29 @@ object EventStreams {
   }
 
   case class LocfIn(event_id: Long, user_id: Long, event_type: String,
-      ts: java.sql.Timestamp, value: Option[Double])
+      ts: java.sql.Timestamp, value: Option[Double]) extends Stamped
   /** The last purchase amount seen per user — the entire LOCF state. */
   case class LocfState(lastPurchase: Double)
   case class LocfOut(event_id: Long, user_id: Long, event_type: String,
       last_purchase: Option[Double])
 
-  /** Streaming twin of Events.e11GapFill: every event carries the
-    * user's most recent purchase amount forward (LOCF). Keyed state is
-    * ONE double per user — the semantic minimum: the batch window
-    * carries the observation forward unboundedly, so the carried value
-    * must outlive any horizon and a timeout would change the answer
-    * (same justification as [[asofViews]]'s NoTimeout). Within a batch
-    * rows are processed in the batch twin's (µs, event_id) order — a
-    * purchase updates the carry BEFORE emitting its own row, matching
-    * the window frame's `currentRow` upper bound — so the outputs agree
-    * exactly when the stream delivers in order.
+  /** Streaming twin of Events.e11GapFill on the [[carry]] builder: every
+    * event carries the user's most recent purchase amount forward
+    * (LOCF), and the carry is that one double. A purchase updates the
+    * carry BEFORE emitting its own row, matching the window frame's
+    * `currentRow` upper bound; null purchase amounts are skipped,
+    * matching the batch twin's last(..., ignoreNulls = true).
     */
   def locfStream(events: Dataset[LocfIn]): Dataset[LocfOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LocfState, LocfOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[LocfIn], state: GroupState[LocfState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var carry = state.getOption.map(_.lastPurchase)
-          val out = Seq.newBuilder[LocfOut]
-          sorted.foreach { e =>
-            // null purchase amounts are skipped, matching the batch
-            // twin's last(..., ignoreNulls = true)
-            if (e.event_type == "purchase" && e.value.isDefined)
-              carry = e.value
-            out += LocfOut(e.event_id, userId, e.event_type, carry)
-          }
-          carry.foreach(v => state.update(LocfState(v)))
-          out.result().iterator
-      }
+    carry[LocfIn, LocfState, LocfOut](events) { (userId, last, e) =>
+      val next =
+        if (e.event_type == "purchase" && e.value.isDefined)
+          e.value.map(LocfState)
+        else last
+      (next, Some(LocfOut(e.event_id, userId, e.event_type,
+        next.map(_.lastPurchase))))
+    }
   }
 
   case class RetIn(user_id: Long, ts: java.sql.Timestamp)
@@ -799,78 +736,51 @@ object EventStreams {
       value_cents: Option[Long], touch_event_id: Long, touch_type: String,
       lag_sec: Option[Double])
 
-  /** Streaming twin of Events.e18Attribution: the per-user last-touch
-    * carry as O(1) keyed state — a purchase is attributed the moment it
-    * arrives, against the touch state accumulated so far. Within a
-    * batch rows process in the batch twin's (µs, event_id) order, and a
-    * touch updates the carry BEFORE a later purchase reads it — exactly
-    * the −1-row window frame. Same standing-state NoTimeout trade and
-    * per-user in-order-arrival caveat as [[locfStream]]/[[asofViews]].
+  /** Streaming twin of Events.e18Attribution on the [[carry]] builder:
+    * the carry is the user's last touch, and a purchase is attributed
+    * the moment it arrives, against the touch carried so far. A touch
+    * updates the carry BEFORE a later purchase reads it — exactly the
+    * −1-row window frame.
     */
   def attributionStream(events: Dataset[LocfIn]): Dataset[AttrOut] = {
     import events.sparkSession.implicits._
     val dayUs = 24L * 3600 * 1000 * 1000
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrState, AttrOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[LocfIn], state: GroupState[AttrState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var touch = state.getOption
-          val out = Seq.newBuilder[AttrOut]
-          sorted.foreach { e =>
-            val us = micros(e.ts)
-            if (e.event_type == "purchase") {
-              val attributed = touch.exists(t => us - t.tUs <= dayUs)
-              // HALF_UP like the batch twin's round() expressions
-              out += AttrOut(e.event_id, userId,
-                e.value.map(v => BigDecimal(v * 100)
-                  .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong),
-                if (attributed) touch.get.tId else -1L,
-                if (attributed) touch.get.tType else "none",
-                if (attributed) Some(BigDecimal(
-                  (us - touch.get.tUs).toDouble / 1e6)
-                  .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-                else None)
-            } else if (e.event_type == "view" || e.event_type == "click")
-              touch = Some(AttrState(us, e.event_id, e.event_type))
-          }
-          touch.foreach(state.update)
-          out.result().iterator
+    carry[LocfIn, AttrState, AttrOut](events) { (userId, touch, e) =>
+      val us = micros(e.ts)
+      e.event_type match {
+        case "purchase" =>
+          val t = touch.filter(t => us - t.tUs <= dayUs)
+          // HALF_UP like the batch twin's round() expressions
+          (touch, Some(AttrOut(e.event_id, userId, e.value.map(cents),
+            t.fold(-1L)(_.tId), t.fold("none")(_.tType),
+            t.map(t => BigDecimal((us - t.tUs).toDouble / 1e6)
+              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))))
+        case "view" | "click" =>
+          (Some(AttrState(us, e.event_id, e.event_type)), None)
+        case _ => (touch, None)
       }
+    }
   }
 
   /** Last event type per user — the entire transition-mining state. */
   case class TransState(lastType: String)
   case class TransPair(prev_type: String, next_type: String)
 
-  /** Streaming twin of Events.e19TransitionMatrix's pair extraction:
-    * the per-user predecessor carry as O(1) keyed state — each arrival
-    * emits its (prev → next) pair fact against the type carried so far,
-    * then becomes the carry. Within a batch rows process in the batch
-    * twin's (µs, event_id) order, so a pair is emitted exactly once per
-    * event with a predecessor. The matrix itself is a read-time
-    * aggregation over the emitted pair stream
+  /** Streaming twin of Events.e19TransitionMatrix's pair extraction, on
+    * the [[carry]] builder: each arrival emits its (prev → next) pair
+    * against the type carried so far, then becomes the carry, so a pair
+    * is emitted exactly once per event with a predecessor. The matrix
+    * itself is a read-time aggregation over the emitted pair stream
     * ([[graft.queries.Events.matrixOfPairs]] — the retentionFacts →
     * retentionMatrix split), so raw events are never revisited as the
-    * matrix is re-read. Same standing-state NoTimeout trade and
-    * per-user in-order-arrival caveat as [[locfStream]].
+    * matrix is re-read.
     */
   def transitionPairs(events: Dataset[LocfIn]): Dataset[TransPair] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransState, TransPair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[LocfIn], state: GroupState[TransState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var last = state.getOption.map(_.lastType)
-          val out = Seq.newBuilder[TransPair]
-          sorted.foreach { e =>
-            last.foreach(p => out += TransPair(p, e.event_type))
-            last = Some(e.event_type)
-          }
-          last.foreach(t => state.update(TransState(t)))
-          out.result().iterator
-      }
+    carry[LocfIn, TransState, TransPair](events) { (_, last, e) =>
+      (Some(TransState(e.event_type)),
+        last.map(p => TransPair(p.lastType, e.event_type)))
+    }
   }
 
   /** Live (prev → next) transition COUNTS over the [[transitionPairs]]
@@ -898,15 +808,11 @@ object EventStreams {
   case class FullGapFact(user_id: Long, event_type: String, gap_us: Long)
 
   /** Streaming twin of Events.e23's gap extraction
-    * ([[graft.queries.Events.gapFrame]]): each arrival emits its
-    * inter-event gap against the user's carried last timestamp, then
-    * becomes the carry — O(1) keyed state, the [[transitionPairs]]
-    * shape with a timestamp instead of a type. The percentile read is
-    * a read-time finisher over the emitted gap facts
-    * ([[graft.queries.Events.gapPercentilesOf]] shared verbatim), so
-    * raw events are never revisited as the dashboard re-reads. Same
-    * standing-state NoTimeout trade and per-user in-order-arrival
-    * caveat as [[locfStream]].
+    * ([[graft.queries.Events.gapFrame]]): the (type, gap) projection of
+    * [[fullGapFacts]]. The percentile read is a read-time finisher over
+    * the emitted gap facts ([[graft.queries.Events.gapPercentilesOf]]
+    * shared verbatim), so raw events are never revisited as the
+    * dashboard re-reads.
     */
   def gapFacts(events: Dataset[LocfIn]): Dataset[GapFact] = {
     import events.sparkSession.implicits._
@@ -922,41 +828,36 @@ object EventStreams {
 
   /** Ingest-time bot-regularity verdicts — e26's TRUE streaming half
     * (the post-hoc half is [[fullGapFacts]] → `botRegularityOf`, which
-    * re-aggregates facts; this one never re-reads anything): each
-    * user's state carries the exact moment triple, each trigger emits
-    * the user's CURRENT verdict once they cross the ≥ 20-event
-    * threshold, and the verdict is the same integer
-    * cross-multiplication as batch — 4·(n·Σx² − S²) < S², in BigInt so
-    * a hot user cannot wrap (the DECIMAL(38,0) discipline,
-    * driver-side). The latest alert per user is always equal to what
-    * batch e26 would say over the same replay — StreamingSpec pins it.
+    * re-aggregates facts; this one never re-reads anything), on the
+    * [[carry]] builder: each user's carry is the exact moment triple,
+    * and each trigger emits the user's CURRENT verdict once they cross
+    * the ≥ 20-event threshold. The verdict is the same integer
+    * cross-multiplication as batch — 4·(n·Σx² − S²) < S², in BigInt.
+    * The moments accumulate with `Math.*Exact`, so a Σgap² past
+    * Long.MaxValue fails the stream where batch e26 fails its ANSI cast
+    * of the DECIMAL(38,0) sum, instead of emitting a wrapped sum and a
+    * garbage verdict (batch only casts users with ≥ 19 gaps; the stream
+    * fails on any user's overflow). The latest alert per user is always
+    * equal to what batch e26 would say over the same replay —
+    * StreamingSpec pins it.
     */
   def regularityAlerts(events: Dataset[LocfIn]): Dataset[RegularityAlert] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RegularityState, RegularityAlert](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[LocfIn],
-            state: GroupState[RegularityState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(RegularityState(Long.MinValue, 0L, 0L, 0L))
-          sorted.foreach { e =>
-            val us = micros(e.ts)
-            if (st.lastUs != Long.MinValue) {
-              val g = (us - st.lastUs) / 1000000L
-              st = RegularityState(us, st.n + 1, st.s + g, st.q + g * g)
-            } else st = st.copy(lastUs = us)
-          }
-          state.update(st)
-          if (st.n >= 19) {
-            // s = 0 over ≥19 gaps ⇒ all gaps sub-second — flagged
-            // directly, same rule as batch botRegularityOf
-            val regular = (st.s > 0 &&
-              4 * (BigInt(st.n) * st.q - BigInt(st.s) * st.s) <
-                BigInt(st.s) * st.s) || st.s == 0
-            Iterator(RegularityAlert(uid, st.n, st.s, st.q, regular))
-          } else Iterator.empty
-      }
+    carry[LocfIn, RegularityState, RegularityAlert](events)({ (_, st, e) =>
+      val us = micros(e.ts)
+      (Some(st.fold(RegularityState(us, 0L, 0L, 0L)) { s =>
+        val g = (us - s.lastUs) / 1000000L
+        RegularityState(us, s.n + 1, Math.addExact(s.s, g),
+          Math.addExact(s.q, Math.multiplyExact(g, g)))
+      }), None)
+    }, { (userId, st) =>
+      // s = 0 over ≥19 gaps ⇒ all gaps sub-second — flagged directly,
+      // same rule as batch botRegularityOf
+      if (st.n < 19) None
+      else Some(RegularityAlert(userId, st.n, st.s, st.q, (st.s > 0 &&
+        4 * (BigInt(st.n) * st.q - BigInt(st.s) * st.s) <
+          BigInt(st.s) * st.s) || st.s == 0))
+    })
   }
 
   /** Per-user event-type counts — e29's ingest state: bounded at
@@ -965,61 +866,46 @@ object EventStreams {
   case class TypeEntropyAlert(user_id: Long, n_events: Long, n_types: Long,
       type_entropy: Double)
 
-  /** Ingest-time behavioral-entropy verdicts — e29's streaming half:
-    * each user's state carries the per-type count map (O(|types|), the
-    * smallest sufficient statistic for the entropy), and every trigger
-    * emits the user's CURRENT entropy with EXACTLY the batch
-    * arithmetic — per-count ln snapped to micro-nats (half-up), exact
-    * long accumulation, one double subtract rounded at 6 — so the
-    * latest alert per user always equals batch e29 over the same
-    * replay (StreamingSpec pins it). Pairs with [[regularityAlerts]]
-    * as the two real-time legs of the e30 bot-triage conjunction.
+  /** Ingest-time behavioral-entropy verdicts — e29's streaming half, on
+    * the [[carry]] builder: each user's carry is the per-type count map
+    * (O(|types|), the smallest sufficient statistic for the entropy),
+    * and every trigger emits the user's CURRENT entropy with EXACTLY the
+    * batch arithmetic — per-count ln snapped to micro-nats (half-up),
+    * exact long accumulation, one double subtract rounded at 6 — so the
+    * latest alert per user always equals batch e29 over the same replay
+    * (StreamingSpec pins it). Pairs with [[regularityAlerts]] as the two
+    * real-time legs of the e30 bot-triage conjunction.
     */
   def typeEntropyAlerts(events: Dataset[LocfIn]): Dataset[TypeEntropyAlert] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TypeEntropyState, TypeEntropyAlert](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[LocfIn],
-            state: GroupState[TypeEntropyState]) =>
-          var counts = state.getOption.map(_.counts)
-            .getOrElse(Map.empty[String, Long])
-          rows.foreach { e =>
-            counts = counts.updated(e.event_type,
-              counts.getOrElse(e.event_type, 0L) + 1L)
-          }
-          state.update(TypeEntropyState(counts))
-          val n = counts.values.sum
-          val sclnc = counts.values
-            .map(c => c * math.round(math.log(c.toDouble) * 1e6)).sum
-          val entropy = BigDecimal(math.log(n.toDouble)
-              - sclnc.toDouble / (n * 1e6))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          Iterator(TypeEntropyAlert(uid, n, counts.size.toLong, entropy))
-      }
+    carry[LocfIn, TypeEntropyState, TypeEntropyAlert](events)({ (_, st, e) =>
+      val counts = st.fold(Map.empty[String, Long])(_.counts)
+      (Some(TypeEntropyState(counts.updated(e.event_type,
+        counts.getOrElse(e.event_type, 0L) + 1L))), None)
+    }, { (userId, st) =>
+      val n = st.counts.values.sum
+      val sclnc = st.counts.values
+        .map(c => c * math.round(math.log(c.toDouble) * 1e6)).sum
+      val entropy = BigDecimal(math.log(n.toDouble)
+          - sclnc.toDouble / (n * 1e6))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      Some(TypeEntropyAlert(userId, n, st.counts.size.toLong, entropy))
+    })
   }
 
-  /** The one gap-mining state machine, now emitting the FULL fact so
-    * e23 (per-type percentiles) and e26 (per-user regularity) share a
-    * single flatMapGroupsWithState instead of duplicating keyed state.
+  /** The one gap-mining state machine, on the [[carry]] builder: each
+    * arrival emits its inter-event gap against the user's carried last
+    * timestamp, then becomes the carry. It emits the FULL fact, so e23
+    * (per-type percentiles, via [[gapFacts]]) and e26 (per-user
+    * regularity) share one keyed state.
     */
   def fullGapFacts(events: Dataset[LocfIn]): Dataset[FullGapFact] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[GapState, FullGapFact](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[LocfIn], state: GroupState[GapState]) =>
-          val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var last = state.getOption.map(_.lastUs)
-          val out = Seq.newBuilder[FullGapFact]
-          sorted.foreach { e =>
-            val us = micros(e.ts)
-            last.foreach(p => out += FullGapFact(uid, e.event_type, us - p))
-            last = Some(us)
-          }
-          last.foreach(u => state.update(GapState(u)))
-          out.result().iterator
-      }
+    carry[LocfIn, GapState, FullGapFact](events) { (userId, last, e) =>
+      val us = micros(e.ts)
+      (Some(GapState(us)),
+        last.map(p => FullGapFact(userId, e.event_type, us - p.lastUs)))
+    }
   }
 
   /** e36's streaming twin (r12 verdict, directive 4): the power-of-two

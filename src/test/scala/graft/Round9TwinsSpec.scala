@@ -241,19 +241,25 @@ class Round9TwinsSpec extends AnyFunSuite {
     import sess.implicits._
     val base = 1700000000000L
     def ev(u: Long, id: Long, typ: String, offMin: Long) =
-      graft.streaming.EventStreams.SessTypeIn(u, id, typ,
+      graft.streaming.EventStreams.TypeIn(u, id, typ,
         new java.sql.Timestamp(base + offMin * 60000))
     // user 1: session A {view, click, view} (distinct {click,view}),
     //   40-min gap, session B {purchase}; user 2: one session {view};
-    //   user 99 pushes the watermark far past every other session
+    //   user 3: a view, then a click 30 min + 500 µs later — over the
+    //   µs gap, so two sessions and no pair (a ms clock would see
+    //   exactly 30 min and merge them); user 99 pushes the watermark
+    //   far past every other session
+    val overGap = ev(3, 8, "click", 30)
+    overGap.ts.setNanos(500000)
     val all = Seq(
       ev(1, 1, "view", 0), ev(1, 2, "click", 5), ev(1, 3, "view", 10),
       ev(2, 4, "view", 0),
       ev(1, 5, "purchase", 50),
+      ev(3, 7, "view", 0), overGap,
       ev(99, 6, "signup", 600))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[graft.streaming.EventStreams.SessTypeIn]
+      .MemoryStream[graft.streaming.EventStreams.TypeIn]
     val q = graft.streaming.EventStreams.sessionTypeFacts(mem.toDS())
       .writeStream.outputMode("append").format("memory")
       .queryName("sess_type_facts").start()

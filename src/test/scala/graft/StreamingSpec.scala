@@ -124,7 +124,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = EventStreams.timedFunnel(
         mem.toDS().toDF("user_id", "event_id", "event_type", "ts")
           .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
-          .as[EventStreams.RangeIn])
+          .as[EventStreams.TypeIn])
       .writeStream.outputMode("append").format("memory")
       .queryName("timed_funnel").start()
     try {
@@ -168,25 +168,6 @@ class StreamingSpec extends AnyFunSuite {
       .select($"user_id", $"viewed", $"clicked_after_view", $"full_funnel")
       .collect().map(_.toSeq).toSet
     val batch = Events.e5Funnel(spark, dir).collect().map(_.toSeq).toSet
-    assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
-    assert(streamed.nonEmpty)
-  }
-
-  test("streaming interval pairs equal the batch twin (e9)") {
-    import spark.implicits._
-    val stream = EventStreams.readEvents(spark, streamDir)
-      .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[EventStreams.RangeIn]
-    val q = EventStreams.intervalPairs(stream)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("interval_pairs")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val streamed = spark.table("interval_pairs")
-      .collect().map(_.toSeq).toSet
-    val batch = Events.e9IntervalJoin(spark, dir)
-      .collect().map(_.toSeq).toSet
     assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
     assert(streamed.nonEmpty)
   }
@@ -283,7 +264,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val stream = EventStreams.readEvents(spark, streamDir)
       .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[EventStreams.AsofIn]
+      .as[EventStreams.TypeIn]
     val q = EventStreams.asofViews(stream)
       .writeStream.outputMode("append").format("memory")
       .queryName("asof")
@@ -310,7 +291,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val stream = EventStreams.readEvents(spark, streamDir)
       .select($"user_id", $"event_id", $"event_type", $"ts")
-      .as[EventStreams.RangeIn]
+      .as[EventStreams.TypeIn]
     val q = EventStreams.rangeViewCounts(stream)
       .writeStream.outputMode("append").format("memory")
       .queryName("range_counts")
@@ -370,6 +351,33 @@ class StreamingSpec extends AnyFunSuite {
       Seq(all.take(3), all.drop(3)))
     assert(oneBurst == expected, s"one-burst got $oneBurst")
     assert(twoBursts == expected, s"two-burst got $twoBursts")
+  }
+
+  test("streamed sessions equal the batch e2 rows (sessionize twin)") {
+    import spark.implicits._
+    // the harness corpus plus one far-later sentinel user, whose event
+    // moves the watermark past every real session so all of them close
+    val events = Tables.events(spark, dir)
+      .select($"user_id", $"ts", $"value").as[EventStreams.EventIn]
+      .collect().toSeq
+    val sentinel = EventStreams.EventIn(-1L, new java.sql.Timestamp(
+      events.map(_.ts.getTime).max + 24L * 3600 * 1000), 0.0)
+    runSessions("sessions_e2", Seq(events :+ sentinel))
+    // a multiset: two sessions of a user can have equal rows
+    val streamed = spark.table("sessions_e2").as[EventStreams.SessionOut]
+      .collect().toSeq.filter(_.user_id != -1L)
+      .map(s => (s.user_id, s.n_events.toLong, s.duration_sec, s.sum_value))
+    val batch = Events.e2Sessionize(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3), r.getDouble(4)))
+      .toSeq
+    // e2 keeps its first 3000 rows by (user_id, session_seq): compare
+    // only the users whose sessions all fall inside that cut
+    val inCut: Long => Boolean =
+      if (batch.size < 3000) _ => true
+      else { val edge = batch.map(_._1).max; u => u < edge }
+    assert(streamed.filter(s => inCut(s._1)).sorted ==
+      batch.filter(s => inCut(s._1)).sorted)
+    assert(batch.count(s => inCut(s._1)) > 100)
   }
 
   test("streaming LOCF equals the batch twin (e11)") {
@@ -1659,6 +1667,31 @@ class StreamingSpec extends AnyFunSuite {
         r.getBoolean(4)))
     // 20 gaps of exactly 10 s: n=20, S=200, Q=2000; cv=0 → regular
     assert(rows.toSeq == Seq((1L, 20L, 200L, 2000L, true)), rows.toSeq)
+  }
+
+  test("regularity alerts fail on a Σgap² overflow, as batch e26 does") {
+    import spark.implicits._
+    // 20 events 23 years apart: 19 gaps of ~7.26e8 s, so Σgap² ≈ 1.0e19
+    // passes Long.MaxValue (≈ 9.22e18)
+    val yearS = 365L * 24 * 3600
+    val all = (0 until 20).map(i => EventStreams.LocfIn(i.toLong, 1L,
+      "tick", new java.sql.Timestamp(i * 23 * yearS * 1000), None))
+    val batch = intercept[Exception](Events.botRegularityCoreOf(
+      Events.userGapFrame(all.toDF())).collect())
+    assert(batch.getMessage.toUpperCase.contains("OVERFLOW"), batch)
+    implicit val sq = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[EventStreams.LocfIn]
+    val q = EventStreams.regularityAlerts(mem.toDS())
+      .writeStream.outputMode("append").format("memory")
+      .queryName("reg_overflow").start()
+    mem.addData(all: _*)
+    val err = try { intercept[Exception](q.processAllAvailable()) }
+      finally q.stop()
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), err)
+    assert(spark.table("reg_overflow").count() == 0,
+      "no wrapped alert may be emitted")
   }
 
   test("gap state carries the last timestamp across batch boundaries") {
