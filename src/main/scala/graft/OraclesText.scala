@@ -2493,14 +2493,15 @@ object OraclesText {
         |GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     // Events.e22NativeSessions: the native session_window merge rule
-    // replayed in SQL — a new session starts when the gap REACHES the
-    // 30-min duration (strict [ts, ts+gap) overlap ⇒ >=, where e2's
-    // hand-rolled form uses >); end = last member + gap.
+    // replayed in SQL — [ts, ts+gap) extents that overlap or touch
+    // merge, so a new session starts only when the gap EXCEEDS 30 min
+    // (>, e2's rule: an exact 30-min gap stays one session); end = last
+    // member + gap.
     "e22_native_sessions" ->
       """WITH x AS (SELECT user_id, event_id, value,
         |    epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |f AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL
-        |        OR us - lag(us) OVER w >= 1800000000 THEN 1 ELSE 0 END AS is_new
+        |        OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
         |      FROM x WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
         |s AS (SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id
         |        ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid

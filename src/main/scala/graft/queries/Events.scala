@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * gap-based sessionization, and JSON property extraction.
   *
   * Scale: all three group on (windowed-time, type) or user_id — natural
-  * high-cardinality shuffle keys; the sessionize window function
-  * partitions by user, so state per task is one user's events.
+  * high-cardinality shuffle keys; the session operator partitions by
+  * user, so state per task is one user's events.
   */
 object Events {
 
@@ -33,31 +33,51 @@ object Events {
           .as("sum_value"))
       .orderBy(col("hour"), col("event_type"))
 
-  /** Gap-based sessionization: a new session starts after >30 min of
-    * user inactivity. lag → flag → running sum (session index) → session
-    * aggregates; everything partitions by user_id.
+  /** Gap-based sessionization (e2): [[sessionStats]] per session,
+    * numbered per user in start order — session starts are distinct
+    * within a user, so `row_number` is the session index. Only the kept
+    * rows are numbered: the first 3000 sessions by (user, start) hold a
+    * prefix of each user's sessions, so their row numbers are the
+    * global ones, and the numbering sorts 3000 rows, not every session.
     */
   def e2Sessionize(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val gapUs = 30L * 60 * 1000 * 1000
-    val flagged = Tables.events(spark, dir)
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > gapUs, 1).otherwise(0))
-      .withColumn("session_seq",
-        sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    flagged.groupBy(col("user_id"), col("session_seq"))
-      .agg(count(lit(1)).as("n_events"),
-        ((max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
-          / lit(1000000.0)).as("duration_sec"),
-        (sum(round(col("value") * 100).cast("long")) / lit(100.0))
-          .as("sum_value"))
-      .orderBy(col("user_id"), col("session_seq"))
+    sessionStats(Tables.events(spark, dir))
+      .orderBy(col("user_id"), col("sw.start"))
       .limit(3000)
+      .select(col("user_id"),
+        row_number().over(Window.partitionBy(col("user_id"))
+          .orderBy(col("sw.start"))).cast("long").as("session_seq"),
+        col("n_events"), col("duration_sec"), col("sum_value"))
+      .orderBy(col("user_id"), col("session_seq"))
   }
+
+  /** The session rule, spelled once: a user's session continues while
+    * the next event is at most 30 minutes after the previous one. This
+    * is the engine's own `session_window`: each event spans [ts, ts +
+    * 30 min), and spans that overlap or touch merge, so an exact
+    * 30-minute gap stays one session and 30 min + 1 µs starts a new
+    * one. `sw` is the merged window (start = first event, end = last
+    * event + 30 min); `aggs` are the per-session aggregates. The rule
+    * needs no row order, so a stream twin that adds a watermark gets
+    * the batch sessions whatever order its rows arrive in within the
+    * watermark.
+    */
+  private[graft] def sessions(events: DataFrame, aggs: Column*): DataFrame =
+    events
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+      .agg(aggs.head, aggs.tail: _*)
+
+  /** e2's per-session figures on [[sessions]]: event count, duration
+    * from µs bounds, and the value sum in grid cents (order-insensitive).
+    * e2, e22 and the sessionize stream twin project it.
+    */
+  private[graft] def sessionStats(events: DataFrame): DataFrame =
+    sessions(events, count(lit(1)).as("n_events"),
+      ((max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
+        / lit(1000000.0)).as("duration_sec"),
+      (sum(round(col("value") * 100).cast("long")) / lit(100.0))
+        .as("sum_value"))
 
   /** JSON property extraction + aggregation: parse `props` (JSON string),
     * pull `$.k`, aggregate per event_type. JSON path evaluation stays in
@@ -956,34 +976,25 @@ object Events {
   def e21ActivityHeatmap(spark: SparkSession, dir: String): DataFrame =
     heatmapOfPartials(hourlyCountsFrame(Tables.events(spark, dir)))
 
-  /** Shared session frame of e22 and its streaming twin: Spark's NATIVE
-    * `session_window` operator — per user, events whose [ts, ts+30min)
-    * extents overlap merge into one session (a new session starts when
-    * the gap is ≥ the 30-minute duration, the operator's strict-overlap
-    * rule; e2's hand-rolled lag/prefix-sum form splits only on > — both
-    * semantics are pinned by their own oracles). Money stays in grid
-    * cents (order-insensitive), bounds come off the merged window
-    * struct: start = first event, end = last event + gap.
+  /** Shared session frame of e22 and its streaming twin: [[sessionStats]]
+    * with the merged window's bounds as columns (start = first event,
+    * end = last event + 30 min).
     */
   private[graft] def sessionFrame(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(round(col("value") * 100).cast("long")) / lit(100.0))
-          .as("sum_value"))
+    sessionStats(events)
       .select(col("user_id"),
         col("sw.start").cast("timestamp_ntz").as("session_start"),
         col("sw.end").cast("timestamp_ntz").as("session_end"),
         col("n_events"), col("sum_value"))
 
-  /** Native session windows (e22): e2's sessionization re-expressed on
-    * the engine's own session operator — the merging-session aggregation
-    * Spark plans with session-aware partial merges (UpdatingSessions +
-    * MergingSessions exec), no lag window or prefix sum in user code,
-    * and the SAME operator runs watermarked on the stream
+  /** Native session windows (e22): e2's sessions with their window
+    * bounds — the merging-session aggregation Spark plans for
+    * [[sessions]] (UpdatingSessions + MergingSessions exec), and the
+    * same operator runs watermarked on the stream
     * ([[graft.streaming.EventStreams.nativeSessions]]). The oracle
-    * replays the strict-overlap merge rule in SQL, so the native
-    * operator's session semantics are hash-gated against DuckDB.
+    * replays the merge rule (a new session at a gap over 30 min) in
+    * SQL, so the operator's session semantics are hash-gated against
+    * DuckDB.
     */
   def e22NativeSessions(spark: SparkSession, dir: String): DataFrame =
     sessionFrame(Tables.events(spark, dir))
@@ -1318,45 +1329,37 @@ object Events {
     * the only real shuffle keys on user_id for the session window.
     */
   def e25SessionPairs(spark: SparkSession, dir: String): DataFrame =
-    sessionPairLiftOf(sessionTypeFrame(Tables.events(spark, dir)))
+    pairLiftOfSets(sessionTypeSets(Tables.events(spark, dir)))
 
-  /** The e2 sessionization reduced to one DISTINCT (session, type) fact
-    * per session membership — the batch producer for
-    * [[sessionPairLiftOf]]; the streaming producer is
-    * [[graft.streaming.EventStreams.sessionTypeFacts]] (closed-session
-    * facts from keyed state), so replay ≡ batch is provable on the
+  /** Each e2 session's sorted DISTINCT event-type set, `types`, keyed on
+    * (user_id, sw) — what e25 scores. The streaming producer
+    * [[graft.streaming.EventStreams.sessionTypeFacts]] explodes the same
+    * frame into one fact per type, and [[sessionPairLiftOf]] collapses
+    * the facts back to sets, so replay ≡ batch is provable on the
     * shared finisher.
     */
-  private[graft] def sessionTypeFrame(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val gapUs = 30L * 60 * 1000 * 1000
-    events
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_us").isNull ||
-          unix_micros(col("ts")) - col("prev_us") > gapUs, 1).otherwise(0))
-      .withColumn("session_seq",
-        sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .select(struct(col("user_id"), col("session_seq")).as("skey"),
-        col("event_type"))
-  }
+  private[graft] def sessionTypeSets(events: DataFrame): DataFrame =
+    sessions(events, typeSet)
 
-  /** Pair-support + lift finisher over (skey, event_type) facts. */
-  private[graft] def sessionPairLiftOf(st: DataFrame): DataFrame = {
+  /** The pair/lift finisher over (skey, event_type) facts: one skey
+    * shuffle collapses each session to its sorted type set. */
+  private[graft] def sessionPairLiftOf(st: DataFrame): DataFrame =
+    pairLiftOfSets(st.groupBy(col("skey")).agg(typeSet))
+
+  private def typeSet: Column =
+    array_sort(collect_set(col("event_type"))).as("types")
+
+  /** Pair-support + lift over per-session sorted type sets (`types`). */
+  private[graft] def pairLiftOfSets(sessionSets: DataFrame): DataFrame = {
     import org.apache.spark.sql.graftfn.GraftExpressions.intDiv
-    // r18 (guide §2.3/§2.4 — the q32 pattern): one skey shuffle
-    // collapses each session to its sorted DISTINCT type set (bounded
-    // by the event-type vocabulary), pairs generate MAP-SIDE from the
-    // sorted array (ta < tb by construction — the old self-join
-    // condition), and n_sessions / per-type counts aggregate over the
-    // SAME collapsed frame — where the former spelling paid a
-    // (skey, type) distinct exchange, a skey self-join, and a second
-    // skey distinct for the session count.
-    val sets = st.groupBy(col("skey"))
-      .agg(array_sort(collect_set(col("event_type"))).as("types"))
-      .held()
+    // r18 (guide §2.3/§2.4 — the q32 pattern): each session is its
+    // sorted DISTINCT type set (bounded by the event-type vocabulary),
+    // pairs generate MAP-SIDE from the sorted array (ta < tb by
+    // construction — the old self-join condition), and n_sessions /
+    // per-type counts aggregate over the SAME held frame — where the
+    // former spelling paid a (skey, type) distinct exchange, a skey
+    // self-join, and a second skey distinct for the session count.
+    val sets = sessionSets.select(col("types")).held()
     sets.count() // share the sessionize pass across the three reads
     val totals = sets.agg(count(lit(1)).as("n_sessions"))
     val typeCounts = sets.select(explode(col("types")).as("event_type"))

@@ -10,10 +10,12 @@ import org.apache.spark.sql.types._
   * The reference is batch-only (SURVEY §2.8 — its single streaming-ish
   * element is the async job-state callback); this module extends the
   * engine with the standard streaming trio a large-scale event pipeline
-  * needs — watermarked tumbling-window aggregation, stateful
-  * sessionization via `flatMapGroupsWithState`, and streaming dedup —
+  * needs — watermarked tumbling-window aggregation, sessionization on
+  * the engine's own `session_window` (the batch builder
+  * [[graft.queries.Events.sessions]], watermarked), and streaming dedup —
   * written so the batch queries in [[graft.queries.Events]] are the exact
-  * batch twins of these plans.
+  * batch twins of these plans. The per-user keyed twins below keep their
+  * own state in `flatMapGroupsWithState`.
   *
   * Scale: state is keyed by user_id / event key — Spark partitions state
   * across executors by key hash; watermarks bound state size; parquet
@@ -100,18 +102,16 @@ object EventStreams {
         col("user_id"), col("n"))
 
   /** Streaming twin of Events.e22NativeSessions: the SAME native
-    * `session_window` aggregation ([[graft.queries.Events.sessionFrame]]
-    * shared verbatim) run watermarked — the engine merges a user's
-    * overlapping [ts, ts+gap) extents incrementally (UpdatingSessions +
+    * session aggregation ([[graft.queries.Events.sessionFrame]]
+    * shared verbatim) under a 2-hour watermark — the engine merges a
+    * user's [ts, ts+30min) extents incrementally (UpdatingSessions +
     * session-merging state store ops) and in append mode a session
     * emits exactly once, when the watermark passes its end and no
     * in-gap event can still extend it. State per user is the open
     * sessions' bounds + aggregates, O(open sessions), evicted on close.
     */
-  def nativeSessions(events: DataFrame,
-      watermarkDelay: String = "2 hours"): DataFrame =
-    graft.queries.Events.sessionFrame(
-      events.withWatermark("ts", watermarkDelay))
+  def nativeSessions(events: DataFrame): DataFrame =
+    graft.queries.Events.sessionFrame(events.withWatermark("ts", "2 hours"))
 
   /** Ranking half of the e4 twin: exact top-k users per (window, type)
     * over the streamed counts, via the same two-phase salted top-k the
@@ -197,14 +197,14 @@ object EventStreams {
     events.withWatermark("ts", "2 hours")
       .dropDuplicates("event_id")
 
-  /** A row of one user's event stream: the key and the event time every
-    * keyed twin below reads. */
-  sealed trait Timed { def user_id: Long; def ts: java.sql.Timestamp }
-  /** A [[Timed]] row with the batch twins' tiebreak, `event_id`. */
-  sealed trait Stamped extends Timed { def event_id: Long }
+  /** A row of one user's event stream: the key, the event time and the
+    * batch twins' tiebreak, `event_id`, that every keyed twin below
+    * reads. */
+  sealed trait Stamped {
+    def user_id: Long; def ts: java.sql.Timestamp; def event_id: Long
+  }
 
   case class EventIn(user_id: Long, ts: java.sql.Timestamp, value: Double)
-      extends Timed
   /** The (user, event, type, time) row: the input of the twins that read
     * only an event's type and time. */
   case class TypeIn(user_id: Long, event_id: Long, event_type: String,
@@ -222,108 +222,48 @@ object EventStreams {
   private def cents(v: Double): Long =
     BigDecimal(v * 100).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
-  /** One open gap session: its first and last event time in µs plus the
-    * twin's accumulator. O(1) per user when the accumulator is. */
-  case class Session[A](start: Long, last: Long, acc: A)
-
-  /** The gap-session machine behind [[sessionize]] and
-    * [[sessionTypeFacts]]: a user's session extends while the next event
-    * is at most `gapMin` minutes after the last one, in µs like batch
-    * e2 (a new session starts when the µs gap is greater). `open` starts
-    * the accumulator from a session's first row, `extend` folds in each
-    * later row, and `close` turns a finished session into output rows.
-    *
-    * Sessions close in EVENT time: the timeout fires when the watermark
-    * passes last + gap, not after pipeline wall-clock idleness, so a
-    * replay of history (backfill, a two-burst catch-up) closes exactly
-    * the sessions live ingestion closes; a processing-time timeout would
-    * close on pipeline speed, or never under AvailableNow. Timeouts are
-    * in ms: the deadline is ⌊(last + gap) / 1000⌋ ms, and an event that
-    * still passes the late-data filter once the watermark W has passed
-    * it lies after (W + 1) ms > last + gap, so it can no longer extend
-    * the session. Rows sort by µs alone: equal-µs rows always share a
-    * session, so their order cannot change one.
-    */
-  private def sessions[R <: Timed : Encoder, A, U : Encoder](
-      events: Dataset[R], gapMin: Int)(open: R => A, extend: (A, R) => A,
-      close: (Long, Session[A]) => Iterator[U])(
-      implicit stateEnc: Encoder[Session[A]]): Dataset[U] = {
-    import events.sparkSession.implicits._
-    val gapUs = gapMin * 60L * 1000000
-    events.withWatermark("ts", s"$gapMin minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Session[A], U](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[R], state: GroupState[Session[A]]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            close(userId, s)
-          } else {
-            val closed = Seq.newBuilder[U]
-            var cur = state.getOption
-            rows.toSeq.sortBy(r => micros(r.ts)).foreach { r =>
-              val t = micros(r.ts)
-              cur = cur match {
-                case Some(s) if t - s.last <= gapUs =>
-                  Some(Session(s.start, t, extend(s.acc, r)))
-                case prev =>
-                  prev.foreach(s => closed ++= close(userId, s))
-                  Some(Session(t, t, open(r)))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              // clamp above the current watermark (API requirement) so an
-              // already-expired session still times out on the next batch
-              state.setTimeoutTimestamp(math.max(
-                Math.floorDiv(s.last + gapUs, 1000L),
-                state.getCurrentWatermarkMs + 1))
-            }
-            closed.result().iterator
-          }
-      }
-  }
-
-  /** A session's event count and value sum in integer cents. */
-  case class SessionSum(n: Int, cents: Long)
-  case class SessionOut(user_id: Long, n_events: Int, duration_sec: Double,
+  case class SessionOut(user_id: Long, n_events: Long, duration_sec: Double,
       sum_value: Double)
 
-  /** Streaming twin of Events.e2Sessionize on the shared [[sessions]]
-    * machine: one closed session per row, with e2's arithmetic — the
-    * duration from µs bounds and the value sum in HALF_UP integer cents.
+  /** Streaming twin of Events.e2Sessionize: e2's per-session figures
+    * ([[graft.queries.Events.sessionStats]], shared verbatim) under a
+    * 30-minute watermark, one row per closed session. In append mode a
+    * session emits once, when the watermark passes its last event + 30
+    * min and no in-gap event can still extend it; rows may arrive in any
+    * order within the watermark, and older rows are dropped by the
+    * engine's late-data filter.
     */
-  def sessionize(events: Dataset[EventIn], gapMin: Int = 30): Dataset[SessionOut] = {
+  def sessionize(events: Dataset[EventIn]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    sessions[EventIn, SessionSum, SessionOut](events, gapMin)(
-      e => SessionSum(1, cents(e.value)),
-      (a, e) => SessionSum(a.n + 1, a.cents + cents(e.value)),
-      (userId, s) => Iterator.single(SessionOut(userId, s.acc.n,
-        (s.last - s.start) / 1000000.0, s.acc.cents / 100.0)))
+    graft.queries.Events.sessionStats(
+        events.toDF.withWatermark("ts", "30 minutes"))
+      .select(col("user_id"), col("n_events"), col("duration_sec"),
+        col("sum_value"))
+      .as[SessionOut]
   }
 
   case class SessTypeFact(user_id: Long, session_start_ms: Long,
       event_type: String)
 
-  /** Streaming producer for the e25 session co-occurrence facts, on the
-    * shared [[sessions]] machine: a session's accumulator is the set of
-    * distinct types it contained (bounded by |event types|, so O(1) per
-    * user), and each CLOSE emits one (user, session, type) fact per type.
-    * The pair/lift finisher is the SHARED batch code
+  /** Streaming producer for the e25 session co-occurrence facts: batch
+    * e25's per-session type sets ([[graft.queries.Events.sessionTypeSets]],
+    * shared verbatim) under a 30-minute watermark, exploded, so each
+    * closed session emits one (user, session start, type) fact per
+    * distinct type it contained, with the same arrival-order rule as
+    * [[sessionize]]. The pair/lift
+    * finisher is the SHARED batch code
     * ([[graft.queries.Events.sessionPairLiftOf]]) over these facts, so
     * stream ≡ batch is a property of one code path, not two kept in sync
     * by hand.
     */
-  def sessionTypeFacts(events: Dataset[TypeIn],
-      gapMin: Int = 30): Dataset[SessTypeFact] = {
+  def sessionTypeFacts(events: Dataset[TypeIn]): Dataset[SessTypeFact] = {
     import events.sparkSession.implicits._
-    sessions[TypeIn, List[String], SessTypeFact](events, gapMin)(
-      e => e.event_type :: Nil,
-      (types, e) =>
-        if (types.contains(e.event_type)) types else e.event_type :: types,
-      (userId, s) => s.acc.sorted.iterator.map(t =>
-        SessTypeFact(userId, Math.floorDiv(s.start, 1000L), t)))
+    graft.queries.Events.sessionTypeSets(
+        events.toDF.withWatermark("ts", "30 minutes"))
+      .select(col("user_id"),
+        unix_millis(col("sw.start")).as("session_start_ms"),
+        explode(col("types")).as("event_type"))
+      .as[SessTypeFact]
   }
 
   /** The per-user carry builder behind the standing-state twins. Rows

@@ -814,14 +814,27 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("e22: native session windows plan session-merging aggregation, one user exchange") {
-    val p = plan(graft.queries.Events.e22NativeSessions(spark, dir))
-    // the engine's session-merge operator, not a lag window + prefix sum
-    assert(p.contains("MergingSessions"), p.take(1200))
-    assert(!p.contains("RunningWindowFunction") && !p.contains(" lag("),
-      "no hand-rolled window sessionization in the native plan")
-    // sessions shuffle on the user key once (plus the presentation sort)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
-    assert(exchanges == 1, s"want 1 hash exchange, got $exchanges:\n${p.take(1200)}")
+    import graft.queries.Events
+    // e22, e2 and e25 all sessionize on the engine's session-merge
+    // operator, not a lag window + prefix sum
+    val plans = Seq("e22" -> Events.e22NativeSessions(spark, dir),
+        "e2" -> Events.e2Sessionize(spark, dir),
+        "e25" -> Events.e25SessionPairs(spark, dir))
+      .map { case (q, df) => q -> plan(df) }.toMap
+    plans.foreach { case (q, p) =>
+      assert(p.contains("MergingSessions"), s"$q:\n${p.take(3000)}")
+      assert(!p.contains("RunningWindowFunction") && !p.contains(" lag("),
+        s"$q: no hand-rolled window sessionization:\n${p.take(3000)}")
+    }
+    // e22 and e2 shuffle on the user key once (plus the presentation
+    // sort): e2 numbers only its 3000 kept rows, with no exchange
+    Seq("e22", "e2").foreach { q =>
+      val exchanges = "Exchange hashpartitioning\\(user_id".r
+        .findAllIn(plans(q)).length
+      val all = "Exchange hashpartitioning".r.findAllIn(plans(q)).length
+      assert(exchanges == 1 && all == 1,
+        s"$q: want 1 hash exchange on user_id, got $all:\n${plans(q).take(3000)}")
+    }
   }
 
   test("q31: scalar subqueries decorrelate to grouped aggregates; COUNT compensation in-plan") {

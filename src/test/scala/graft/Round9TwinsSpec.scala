@@ -247,46 +247,63 @@ class Round9TwinsSpec extends AnyFunSuite {
     //   40-min gap, session B {purchase}; user 2: one session {view};
     //   user 3: a view, then a click 30 min + 500 µs later — over the
     //   µs gap, so two sessions and no pair (a ms clock would see
-    //   exactly 30 min and merge them); user 99 pushes the watermark
-    //   far past every other session
+    //   exactly 30 min and merge them); user 4: view +0, click +20,
+    //   purchase +10, click +45 — one session, gaps ≤ 25 min in time
+    //   order whatever order the rows arrive in; user 99 pushes the
+    //   watermark far past every other session
     val overGap = ev(3, 8, "click", 30)
     overGap.ts.setNanos(500000)
+    val late = ev(4, 11, "purchase", 10)
     val all = Seq(
       ev(1, 1, "view", 0), ev(1, 2, "click", 5), ev(1, 3, "view", 10),
       ev(2, 4, "view", 0),
+      ev(3, 7, "view", 0), ev(4, 9, "view", 0), ev(4, 10, "click", 20),
+      late,
       ev(1, 5, "purchase", 50),
-      ev(3, 7, "view", 0), overGap,
+      overGap, ev(4, 12, "click", 45),
       ev(99, 6, "signup", 600))
+    val byId = all.map(e => e.event_id -> e).toMap
+    // one burst; the late-row replay (user 4's +10 after its +20); and a
+    // permutation that sends rows newest first within each user, every
+    // row still above the watermark when it arrives
+    val replays = Seq(
+      Seq(all),
+      Seq(all.takeWhile(_ ne late), all.dropWhile(_ ne late)),
+      Seq(Seq(10L, 3L, 2L), Seq(11L, 1L, 4L, 7L, 9L), Seq(12L, 8L), Seq(6L, 5L))
+        .map(_.map(byId)))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[graft.streaming.EventStreams.TypeIn]
-    val q = graft.streaming.EventStreams.sessionTypeFacts(mem.toDS())
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sess_type_facts").start()
-    try {
-      mem.addData(all: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val facts = spark.table("sess_type_facts")
-    // user 99's session never closes (nothing moves the watermark past
-    // it) — scope the comparison to the users whose sessions closed
-    val streamed = graft.queries.Events.sessionPairLiftOf(
-        facts.select(org.apache.spark.sql.functions.struct(
-          col("user_id"), col("session_start_ms")).as("skey"),
-          col("event_type")))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
+    def rows(lift: org.apache.spark.sql.DataFrame) =
+      lift.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
     val batchDf = all.filter(_.user_id != 99)
       .map(e => (e.user_id, e.ts, e.event_id, e.event_type))
       .toDF("user_id", "ts", "event_id", "event_type")
-    val batch = graft.queries.Events.sessionPairLiftOf(
-        graft.queries.Events.sessionTypeFrame(batchDf))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
-    assert(streamed == batch, s"stream=$streamed batch=$batch")
-    // the crafted data has exactly one co-occurring pair: (click, view)
-    assert(streamed.map(r => (r._1, r._2, r._3)) ==
-      Seq(("click", "view", 1L)))
+    val batch = rows(graft.queries.Events.pairLiftOfSets(
+      graft.queries.Events.sessionTypeSets(batchDf)))
+    replays.zipWithIndex.foreach { case (bursts, i) =>
+      val mem = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[graft.streaming.EventStreams.TypeIn]
+      val q = graft.streaming.EventStreams.sessionTypeFacts(mem.toDS())
+        .writeStream.outputMode("append").format("memory")
+        .queryName(s"sess_type_facts_$i").start()
+      try bursts.foreach { b =>
+        mem.addData(b: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      // user 99's session never closes (nothing moves the watermark past
+      // it) — the batch side holds the users whose sessions closed
+      val streamed = rows(graft.queries.Events.sessionPairLiftOf(
+        spark.table(s"sess_type_facts_$i")
+          .select(org.apache.spark.sql.functions.struct(
+            col("user_id"), col("session_start_ms")).as("skey"),
+            col("event_type"))))
+      assert(streamed == batch, s"replay $i: stream=$streamed batch=$batch")
+    }
+    // the crafted data's co-occurring pairs: user 1's session A and user
+    // 4's session hold (click, view); user 4's alone adds purchase
+    assert(batch.map(r => (r._1, r._2, r._3)) == Seq(
+      ("click", "purchase", 1L), ("click", "view", 2L),
+      ("purchase", "view", 1L)))
   }
 
   test("p20: unified savings ledger matches a driver-side rollup of the " +

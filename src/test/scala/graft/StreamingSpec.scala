@@ -307,10 +307,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** Runs sessionize over the given event bursts (one addData +
-    * processAllAvailable per burst) and returns the emitted session set.
+    * processAllAvailable per burst) and returns the emitted sessions as
+    * a sorted multiset: two equal sessions stay two rows.
     */
   private def runSessions(name: String,
-      bursts: Seq[Seq[EventStreams.EventIn]]): Set[EventStreams.SessionOut] = {
+      bursts: Seq[Seq[EventStreams.EventIn]]): Seq[EventStreams.SessionOut] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EventStreams.EventIn]
@@ -323,34 +324,77 @@ class StreamingSpec extends AnyFunSuite {
         q.processAllAvailable()
       }
     } finally q.stop()
-    spark.table(name).as[EventStreams.SessionOut].collect().toSet
+    spark.table(name).as[EventStreams.SessionOut].collect().toSeq
+      .sortBy(s => (s.user_id, s.n_events, s.duration_sec, s.sum_value))
   }
 
   test("event-time sessionization: sessions close on watermark passage, and a two-burst replay equals the single-burst run") {
+    import spark.implicits._
     val base = 1700000000000L
-    def ev(u: Long, offMin: Long, v: Double) =
-      EventStreams.EventIn(u, new java.sql.Timestamp(base + offMin * 60000), v)
+    def ev(u: Long, offMin: Long, v: Double, us: Int = 0) = {
+      val ts = new java.sql.Timestamp(base + offMin * 60000)
+      ts.setNanos(us * 1000)
+      EventStreams.EventIn(u, ts, v)
+    }
     // user 1: two sessions split by a 40-min gap; user 2: one session;
-    // user 99 is the watermark pusher (its own trailing session stays
-    // open — no later event ever moves the watermark past it)
+    // user 3: an exact 30-min gap, one session; user 4: 30 min + 1 µs,
+    // two equal one-event sessions; user 5: +0 and +20 min, then +10
+    // min, one 1200 s session; user 99 is the watermark pusher (its own
+    // trailing session stays open — no later event ever moves the
+    // watermark past it)
+    val late = ev(5, 10, 4.0)
     val all = Seq(
       ev(1, 0, 1.0), ev(1, 5, 2.0),   // session A: 2 events, 300 s, sum 3
       ev(2, 0, 4.0),                  // session C: 1 event
+      ev(3, 0, 1.0), ev(4, 0, 1.0), ev(5, 0, 1.0), ev(5, 20, 2.0),
+      late,
+      ev(3, 30, 2.0), ev(4, 30, 1.0, us = 1),
       ev(1, 45, 3.0),                 // session B: 1 event (40-min gap)
       ev(99, 600, 0.0))               // pushes watermark to +570 min
-    val expected = Set(
-      EventStreams.SessionOut(1, 2, 300.0, 3.0),
+    val expected = Seq(
       EventStreams.SessionOut(1, 1, 0.0, 3.0),
-      EventStreams.SessionOut(2, 1, 0.0, 4.0))
-    // replay as one burst and as two historical bursts: the session set
-    // must be identical — the event-time timeout fires on WATERMARK
-    // passage, not pipeline wall-clock (the processing-time form fails
-    // this: trailing sessions B and C would wait 30 wall-clock minutes)
-    val oneBurst = runSessions("sessions_one", Seq(all))
-    val twoBursts = runSessions("sessions_two",
-      Seq(all.take(3), all.drop(3)))
-    assert(oneBurst == expected, s"one-burst got $oneBurst")
-    assert(twoBursts == expected, s"two-burst got $twoBursts")
+      EventStreams.SessionOut(1, 2, 300.0, 3.0),
+      EventStreams.SessionOut(2, 1, 0.0, 4.0),
+      EventStreams.SessionOut(3, 2, 1800.0, 3.0),
+      EventStreams.SessionOut(4, 1, 0.0, 1.0),
+      EventStreams.SessionOut(4, 1, 0.0, 1.0),
+      EventStreams.SessionOut(5, 3, 1200.0, 7.0))
+    // replay as one burst and as historical bursts: the sessions must be
+    // identical — sessions close on WATERMARK passage, not pipeline
+    // wall-clock (a processing-time close fails this: trailing sessions
+    // would wait 30 wall-clock minutes). The late-row replay
+    // sends user 5's +10 after its +20; the permutation sends rows newest
+    // first within each user, every row still above the watermark.
+    val replays = Seq(
+      "one burst" -> Seq(all),
+      "two bursts" -> Seq(all.take(3), all.drop(3)),
+      "late row" -> Seq(all.takeWhile(_ ne late), all.dropWhile(_ ne late)),
+      "permuted" -> Seq(
+        Seq(ev(5, 20, 2.0), ev(1, 5, 2.0)),
+        Seq(late, ev(4, 0, 1.0), ev(3, 0, 1.0), ev(2, 0, 4.0), ev(1, 0, 1.0)),
+        Seq(ev(5, 0, 1.0), ev(4, 30, 1.0, us = 1), ev(3, 30, 2.0)),
+        Seq(ev(99, 600, 0.0), ev(1, 45, 3.0))))
+    replays.zipWithIndex.foreach { case ((label, bursts), i) =>
+      val got = runSessions(s"sessions_replay_$i", bursts)
+      assert(got == expected, s"$label got $got")
+    }
+    // the batch queries over the same rows: e2 gives the same sessions,
+    // and e22's operator keeps e2's > rule at the 30-minute boundary
+    val tmp = java.nio.file.Files.createTempDirectory("sessions_spec")
+    all.filter(_.user_id != 99).zipWithIndex
+      .map { case (e, i) => (i.toLong, e.ts, e.user_id, "view", e.value, "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$tmp/events.parquet")
+    val e2 = Events.e2Sessionize(spark, tmp.toString).collect()
+      .map(r => EventStreams.SessionOut(r.getLong(0), r.getLong(2),
+        r.getDouble(3), r.getDouble(4)))
+      .toSeq.sortBy(s => (s.user_id, s.n_events, s.duration_sec, s.sum_value))
+    assert(e2 == expected, s"batch e2 got $e2")
+    val e22 = Events.e22NativeSessions(spark, tmp.toString).collect()
+      .map(r => (r.getLong(0), r.getLong(3))).toSeq
+    assert(e22.filter(_._1 == 3) == Seq((3L, 2L)), s"exact 30 min: $e22")
+    assert(e22.filter(_._1 == 4) == Seq((4L, 1L), (4L, 1L)),
+      s"30 min + 1 µs: $e22")
   }
 
   test("streamed sessions equal the batch e2 rows (sessionize twin)") {
@@ -362,11 +406,9 @@ class StreamingSpec extends AnyFunSuite {
       .collect().toSeq
     val sentinel = EventStreams.EventIn(-1L, new java.sql.Timestamp(
       events.map(_.ts.getTime).max + 24L * 3600 * 1000), 0.0)
-    runSessions("sessions_e2", Seq(events :+ sentinel))
-    // a multiset: two sessions of a user can have equal rows
-    val streamed = spark.table("sessions_e2").as[EventStreams.SessionOut]
-      .collect().toSeq.filter(_.user_id != -1L)
-      .map(s => (s.user_id, s.n_events.toLong, s.duration_sec, s.sum_value))
+    val streamed = runSessions("sessions_e2", Seq(events :+ sentinel))
+      .filter(_.user_id != -1L)
+      .map(s => (s.user_id, s.n_events, s.duration_sec, s.sum_value))
     val batch = Events.e2Sessionize(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3), r.getDouble(4)))
       .toSeq
