@@ -82,7 +82,13 @@ object Fitness {
     */
   def maskColumns(x: Array[Array[Double]], mask: Array[Boolean]): Array[Array[Double]] = {
     val idx = mask.indices.filter(mask).toArray
-    x.map(row => idx.map(row))
+    // a primitive loop: `idx.map(row)` and `idx.map(j => row(j))` box every value
+    x.map { row =>
+      val sub = new Array[Double](idx.length)
+      var j = 0
+      while (j < idx.length) { sub(j) = row(idx(j)); j += 1 }
+      sub
+    }
   }
 
   /** Guard wrapper (`__fitness_function_with_checking`,
@@ -220,15 +226,17 @@ object Fitness {
     }
   }
 
-  private def hostname: String =
+  // resolved once per JVM: a slow resolver stalls one call, not every call
+  private lazy val hostname: String =
     try java.net.InetAddress.getLocalHost.getHostName
     catch { case _: Throwable => "unknown" }
 
+  private val timeFormat = java.time.format.DateTimeFormatter.ofPattern("HH:mm:ss")
+
   private def timeLapse(startNanos: Long): String = {
-    val fmt = java.time.format.DateTimeFormatter.ofPattern("HH:mm:ss")
     val startT = java.time.LocalTime.now()
       .minusNanos(System.nanoTime() - startNanos)
-    s"${startT.format(fmt)} - ${java.time.LocalTime.now().format(fmt)}"
+    s"${startT.format(timeFormat)} - ${java.time.LocalTime.now().format(timeFormat)}"
   }
 }
 

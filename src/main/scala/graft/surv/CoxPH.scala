@@ -142,6 +142,9 @@ object CoxPH {
     var s0 = 0.0
     val s1 = new Array[Double](p)
     val s2 = Array.ofDim[Double](p, p)
+    // tied-event moments, reused and zeroed for every block
+    val t1 = new Array[Double](p)
+    val t2 = Array.ofDim[Double](p, p)
     var k = n - 1
     var idx = n - 1
     while (idx >= 0) {
@@ -165,8 +168,8 @@ object CoxPH {
       // tied-event moments for this block
       var d = 0
       var t0 = 0.0
-      val t1 = new Array[Double](p)
-      val t2 = Array.ofDim[Double](p, p)
+      java.util.Arrays.fill(t1, 0.0)
+      t2.foreach(java.util.Arrays.fill(_, 0.0))
       var i = blockStart
       while (i <= idx) {
         val s = order(i)

@@ -43,24 +43,11 @@ object KMeansLocal {
     var inertia = 0.0
     var done = false
     while (iter < maxIter && !done) {
-      inertia = 0.0
-      var i = 0
-      while (i < n) { // assign
-        var bestC = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          val d = sqDist(x(i), centers(c))
-          if (d < bestD) { bestD = d; bestC = c }
-          c += 1
-        }
-        labels(i) = bestC
-        inertia += bestD
-        i += 1
-      }
+      inertia = assign(x, centers, labels)
       // update
       val sums = Array.ofDim[Double](k, dim)
       val counts = new Array[Int](k)
-      i = 0
+      var i = 0
       while (i < n) {
         val c = labels(i)
         counts(c) += 1
@@ -78,8 +65,51 @@ object KMeansLocal {
     }
     // final assignment so labels/inertia are consistent with the RETURNED
     // centers (the loop's labels refer to the pre-update centers)
-    inertia = 0.0
+    inertia = assign(x, centers, labels)
+    Result(labels, centers, inertia)
+  }
+
+  /** Labels each row with its nearest centre (the first on ties) and
+    * returns the inertia, summed in row order. Four rows share each pass
+    * over a centre's features, so the pass carries four independent sums
+    * instead of one serial chain; each sum is still added in feature
+    * order, so every distance is bit-identical to `sqDist`'s.
+    */
+  private def assign(x: Array[Array[Double]], centers: Array[Array[Double]],
+      labels: Array[Int]): Double = {
+    val n = x.length
+    val k = centers.length
+    val dim = x(0).length
+    var inertia = 0.0
     var i = 0
+    while (i + 4 <= n) {
+      val r0 = x(i); val r1 = x(i + 1); val r2 = x(i + 2); val r3 = x(i + 3)
+      var b0 = Double.MaxValue; var b1 = Double.MaxValue
+      var b2 = Double.MaxValue; var b3 = Double.MaxValue
+      var l0 = 0; var l1 = 0; var l2 = 0; var l3 = 0
+      var c = 0
+      while (c < k) {
+        val m = centers(c)
+        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+        var d = 0
+        while (d < dim) {
+          val md = m(d)
+          val e0 = r0(d) - md; s0 += e0 * e0
+          val e1 = r1(d) - md; s1 += e1 * e1
+          val e2 = r2(d) - md; s2 += e2 * e2
+          val e3 = r3(d) - md; s3 += e3 * e3
+          d += 1
+        }
+        if (s0 < b0) { b0 = s0; l0 = c }
+        if (s1 < b1) { b1 = s1; l1 = c }
+        if (s2 < b2) { b2 = s2; l2 = c }
+        if (s3 < b3) { b3 = s3; l3 = c }
+        c += 1
+      }
+      labels(i) = l0; labels(i + 1) = l1; labels(i + 2) = l2; labels(i + 3) = l3
+      inertia += b0; inertia += b1; inertia += b2; inertia += b3
+      i += 4
+    }
     while (i < n) {
       var bestC = 0; var bestD = Double.MaxValue
       var c = 0
@@ -92,11 +122,11 @@ object KMeansLocal {
       inertia += bestD
       i += 1
     }
-    Result(labels, centers, inertia)
+    inertia
   }
 
   /** k-means++ seeding (Arthur & Vassilvitskii 2007). */
-  private def plusPlusInit(x: Array[Array[Double]], k: Int,
+  private[graft] def plusPlusInit(x: Array[Array[Double]], k: Int,
       rng: Random): Array[Array[Double]] = {
     val n = x.length
     val centers = new Array[Array[Double]](k)

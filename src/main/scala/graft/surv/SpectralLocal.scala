@@ -17,7 +17,16 @@ object SpectralLocal {
   def fit(x: Array[Array[Double]], k: Int, seed: Long = 0L,
       gamma: Double = 1.0): Array[Int] = {
     val n = x.length
-    if (n <= k) return Array.tabulate(n)(identity)
+    if (n <= k) Array.tabulate(n)(identity)
+    else KMeansLocal.fit(embedding(x, k, gamma), k, seed = seed).labels
+  }
+
+  /** The rows' spectral embedding: the k smallest eigenvectors of the
+    * normalized Laplacian, each row L2-normalized.
+    */
+  private[graft] def embedding(x: Array[Array[Double]], k: Int,
+      gamma: Double): Array[Array[Double]] = {
+    val n = x.length
     // RBF affinity (sklearn default: gamma = 1.0)
     val w = DenseMatrix.tabulate(n, n) { (i, j) =>
       if (i == j) 0.0
@@ -38,12 +47,10 @@ object SpectralLocal {
       base - dInvSqrt(i) * w(i, j) * dInvSqrt(j)
     }
     val eig = eigSym(lSym) // eigenvalues ascending
-    // embedding: k smallest eigenvectors, rows L2-normalized
-    val emb = Array.tabulate(n) { i =>
+    Array.tabulate(n) { i =>
       val row = Array.tabulate(k)(c => eig.eigenvectors(i, c))
       val nrm = math.sqrt(row.map(v => v * v).sum)
       if (nrm > 0) row.map(_ / nrm) else row
     }
-    KMeansLocal.fit(emb, k, seed = seed).labels
   }
 }

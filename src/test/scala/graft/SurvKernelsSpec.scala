@@ -178,6 +178,39 @@ class KMeansLocalSpec extends AnyFunSuite {
     val r = KMeansLocal.fit(blobA ++ blobB, 2, seed = 1)
     assert(r.inertia < 1.0)
   }
+
+  /** Gaussian rows around `k` random centres, so Lloyd runs several rounds. */
+  private def blobs(n: Int, dim: Int, k: Int, seed: Long): Array[Array[Double]] = {
+    val rng = new scala.util.Random(seed)
+    val centres = Array.fill(k)(Array.fill(dim)(rng.nextGaussian() * 3))
+    Array.tabulate(n)(i => centres(i % k).map(_ + rng.nextGaussian()))
+  }
+
+  private def bits(r: KMeansLocal.Result): (Seq[Int], Seq[Long], Long) =
+    (r.labels.toSeq, r.centers.toSeq.flatMap(_.map(java.lang.Double.doubleToRawLongBits)),
+      java.lang.Double.doubleToRawLongBits(r.inertia))
+
+  test("four-row assignment is bit-identical to the one-row Lloyd loop") {
+    for (k <- Seq(1, 2, 3, 5); n <- Seq(3, 8, 33, 64, 193); dim <- Seq(1, 2, 7, 60)
+        if n > k) {
+      val x = blobs(n, dim, k, n * 100L + dim)
+      for (seed <- Seq(0L, 7L)) {
+        val (want, _) = KMeansReference.fit(x, k, seed = seed)
+        assert(bits(KMeansLocal.fit(x, k, seed = seed)) == bits(want), s"k=$k n=$n dim=$dim seed=$seed")
+      }
+    }
+  }
+
+  test("an empty-cluster reseed keeps bit parity") {
+    // nine equal rows and two equal outliers: k-means++ can place only two
+    // distinct centres, so the duplicate centres start empty and are reseeded
+    for (k <- Seq(3, 5); n <- Seq(11, 12)) {
+      val x = Array.tabulate(n)(i => if (i % 5 == 4) Array(1.0, 1.0) else Array(0.0, 0.0))
+      val (want, reseeds) = KMeansReference.fit(x, k, seed = 3)
+      assert(reseeds > 0, s"k=$k n=$n never reseeded")
+      assert(bits(KMeansLocal.fit(x, k, seed = 3)) == bits(want), s"k=$k n=$n")
+    }
+  }
 }
 
 class SpectralLocalSpec extends AnyFunSuite {
@@ -188,6 +221,15 @@ class SpectralLocalSpec extends AnyFunSuite {
     assert(labels.take(15).toSet.size == 1)
     assert(labels.drop(15).toSet.size == 1)
     assert(labels.take(15).head != labels.drop(15).head)
+  }
+
+  test("labels equal k-means of the embedding under the one-row Lloyd loop") {
+    val rng = new scala.util.Random(11)
+    for (k <- Seq(2, 3); n <- Seq(9, 30, 41)) {
+      val x = Array.fill(n)(Array.fill(4)(rng.nextGaussian()))
+      val want = KMeansReference.fit(SpectralLocal.embedding(x, k, 1.0), k, seed = 5)._1.labels
+      assert(SpectralLocal.fit(x, k, seed = 5).toSeq == want.toSeq, s"k=$k n=$n")
+    }
   }
 }
 
