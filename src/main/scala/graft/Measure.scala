@@ -33,9 +33,14 @@ object Measure {
       "spark.ui.enabled" -> "false") ++
       codec.map("spark.io.compression.codec" -> _)
 
+  /** `SPARK_GRAFT_CPUS`'s value (`None`: unset) as a core count. */
+  private[graft] def cpus(raw: Option[String]): Int =
+    raw.fold(32)(v => v.toIntOption.filter(_ >= 1).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$v'")))
+
   def session(shufflePartitions: Option[Int] = None): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = settings(cpus, shufflePartitions,
+    val spark = settings(cpus(sys.env.get("SPARK_GRAFT_CPUS")), shufflePartitions,
         sys.env.get("SPARK_GRAFT_CODEC"))
       .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()

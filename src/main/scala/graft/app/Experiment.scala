@@ -23,7 +23,12 @@ object Experiment {
       fitness: FitnessConfig = FitnessConfig(),
       bbha: Bbha.Config = Bbha.Config(),
       numberOfWorkers: Int = 0, // 0 = use defaultParallelism
-      algorithm: Int = 1) // 0 = blind search (exhaustive), 1 = BBHA
+      algorithm: Int = 1) { // 0 = blind search (exhaustive), 1 = BBHA
+    require(algorithm == 0 || algorithm == 1,
+      s"algorithm must be 0 (blind search) or 1 (BBHA), got $algorithm")
+    require(numberOfWorkers >= 0,
+      s"number-of-workers must be at least 0, got $numberOfWorkers")
+  }
 
   case class Result(
       dataset: String, improved: Int, model: String,

@@ -60,6 +60,17 @@ case class FitnessConfig(
     svmIsRegression: Boolean = true,
     randomState: Option[Long] = None,
     returnTrainScores: Boolean = false) {
+  // an unknown name or cluster count would only surface inside each
+  // fitness call, where it becomes the error sentinel
+  require(Set("clustering", "rf", "svm")(model),
+    s"model must be clustering, rf or svm, got '$model'")
+  require(Set("k_means", "spectral")(clusteringAlgorithm),
+    s"clustering-algorithm must be k_means or spectral, got '$clusteringAlgorithm'")
+  require(Set("log_likelihood", "concordance_index")(clusteringScoringMethod),
+    "clustering-scoring-method must be log_likelihood or concordance_index, " +
+      s"got '$clusteringScoringMethod'")
+  require(numberOfClusters >= 1,
+    s"number-of-clusters must be at least 1, got $numberOfClusters")
   // scikit-learn's KFold rejects fewer than 2 splits; with 1 or 0 every
   // fitness call would fail into the error sentinel
   require(model == "clustering" || cvFolds >= 2,

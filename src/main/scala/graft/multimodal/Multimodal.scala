@@ -23,8 +23,8 @@ object Multimodal {
 
   /** javax.imageio defaults to DISK-backed stream caches: every
     * `ImageIO.read`/`write`/`createImage{Input,Output}Stream` call on a
-    * plain Input/OutputStream creates (and deletes) a temp file under
-    * `java.io.tmpdir`. At 32 concurrent tasks × millions of rows that
+    * plain Input/OutputStream creates (and deletes) a temp file in the
+    * JVM temp dir. At 32 concurrent tasks × millions of rows that
     * filesystem churn made the decode kernel super-linear (measured
     * sf1→sf10 exponents 1.17–1.42 in SCALEBENCH_r10). Our payloads are
     * in-memory byte arrays — heap caches are strictly better. Idempotent
@@ -935,27 +935,7 @@ object Multimodal {
     * on arrival — the batch queries here read the same standing asset.
     */
   private[graft] def phashAsset(spark: SparkSession, dir: String): DataFrame =
-    runScopedAsset(spark, "phash", dir)(phashOf(syntheticMedia(spark, dir)))
-
-  /** Memoize a slim derived frame as a (JVM run, asset, sfDir)-scoped
-    * parquet file and serve every later consumer from the file — the
-    * scaffolding shared by [[mediaFeaturesAsset]] and [[phashAsset]] so
-    * a fix to the pattern (naming, write mode, cleanup) lands once.
-    * `build` is by-name: it runs only on the first touch.
-    */
-  private def runScopedAsset(spark: SparkSession, asset: String,
-      dir: String)(build: => DataFrame): DataFrame = {
-    val path = assetPaths.computeIfAbsent(s"$asset:$dir", _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-$asset-" +
-        s"$mediaRunId-${mediaSeq.getAndIncrement()}.parquet")
-      build.write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val assetPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    graft.RunAssets.asset(spark, "phash", dir)(phashOf(syntheticMedia(spark, dir)))
 
   /** (doc_id, phash) for the image rows of a media frame — the map-only
     * decode+hash pass shared by the batch clustering (m6) and the
@@ -1025,10 +1005,8 @@ object Multimodal {
     */
   private[graft] def mediaFeaturesAsset(spark: SparkSession,
       dir: String): DataFrame =
-    runScopedAsset(spark, "mediafeat", dir)(
+    graft.RunAssets.asset(spark, "mediafeat", dir)(
       m1FeaturesOf(syntheticMedia(spark, dir)))
-  private val mediaRunId = java.util.UUID.randomUUID().toString.take(8)
-  private val mediaSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def m7MediaManifest(spark: SparkSession, dir: String): DataFrame = {
     // Every decoded leg comes from a run-scoped asset (m1 features and

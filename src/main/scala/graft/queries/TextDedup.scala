@@ -160,23 +160,14 @@ object TextDedup {
     * [[d3MinhashLsh]] made real: at lake scale the signature table IS a
     * checkpointed asset, rebuilt when the corpus changes, not per query.
     */
-  def minhashSignatures(spark: SparkSession, dir: String): DataFrame = {
-    val path = sigAssetPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-minhash-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+  def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "minhash", dir) {
       val idx = shingleIndex(Tables.documents(spark, dir))
       val mins = (0 until MinhashK).map { i =>
         min(fastMd5(concat(lit(s"$i:"), col("shingle")))).as(s"mh$i")
       }
       idx.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val sigAssetPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** MinHash signatures as a query result (doc_id + k hash columns). */
   def d2MinhashSignature(spark: SparkSession, dir: String): DataFrame =
@@ -647,29 +638,10 @@ object TextDedup {
     * exactly as a 100 TB pipeline would never re-shingle the corpus four
     * times. d6/d6b/d9/d9b stay direct computations — they ARE the pair
     * pipeline under measurement; the memo only serves compositions.
-    * Keyed per JVM run (fresh UUID per process) so iterating on the code
-    * never reads a stale file; an in-flight compute blocks concurrent
-    * requesters on the map entry, so the pipeline runs at most once.
     */
-  private[graft] def dupPairs(spark: SparkSession, dir: String): DataFrame = {
-    // a per-dir counter, not dir.hashCode, names the file — hash
-    // collisions between two corpus dirs must not alias their pair tables
-    val path = dupPairPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-pairs-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
-      jaccardPairsUnordered(spark, dir, maxShingleDf = None)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val dupPairRunId = java.util.UUID.randomUUID().toString.take(8)
-  private val dupPairSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val dupPairPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val compLabelPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def dupPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "pairs", dir)(
+      jaccardPairsUnordered(spark, dir, maxShingleDf = None))
 
   private def jaccardPairsUnordered(spark: SparkSession, dir: String,
       maxShingleDf: Option[Long],
@@ -979,21 +951,12 @@ object TextDedup {
     * frame, ~2/(w+1) of postings, per-doc deduped before it moves).
     */
   private[graft] def winnowSelectionAsset(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = winnowSelectionPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-winnowsel-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+      dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "winnowsel", dir) {
       winnowCapped(
         winnowLocalSelect(Tables.documents(spark, dir), WinnowW,
           WinnowWideHex), WinnowSweepCap)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val winnowSelectionPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** The winnow selection rule over a hashed frame, parametric in the
     * window width w — width is the index-size/recall dial the d33
@@ -1074,22 +1037,13 @@ object TextDedup {
     * recall-traded pair space whose semantics are exactly gated, while
     * the dupPairs compositions remain the exact audit legs.
     */
-  private[graft] def winnowPairs(spark: SparkSession, dir: String): DataFrame = {
-    val path = winnowPairPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-winnowpairs-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+  private[graft] def winnowPairs(spark: SparkSession, dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "winnowpairs", dir) {
       // composes the shared selection asset (r13): the pair build is
       // the posting join only — the corpus hash pass happens once per
       // (run, dir) inside [[winnowSelectionAsset]]
       winnowPairsOf(winnowSelectionAsset(spark, dir))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val winnowPairPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Split-tagged winnow candidate pairs — the decontamination family's
     * shared pair asset (r15, round-14 verdict directive 3): the capped
@@ -1105,11 +1059,8 @@ object TextDedup {
     * consumers are pure parquet scans, which `PlanShapeSpec` pins.
     */
   private[graft] def winnowTaggedPairs(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = winnowTaggedPairPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-wtagpairs-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+      dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "wtagpairs", dir) {
       val (_, split) = splitCols
       val splits = Tables.documents(spark, dir)
         .select(col("doc_id"), split.as("split"))
@@ -1123,13 +1074,7 @@ object TextDedup {
           col("split").as("split_a")), Seq("id_a"))
         .join(splits.select(col("doc_id").as("id_b"),
           col("split").as("split_b")), Seq("id_b"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val winnowTaggedPairPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** d30's GATED contract since r13: winnow candidate pairs with their
     * shared-selection counts in the WIDE 36-bit, [[WinnowSweepCap]]-
@@ -1397,22 +1342,15 @@ object TextDedup {
     * whose fixpoint is already known.
     */
   private[graft] def componentLabels(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = compLabelPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-complabels-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+      dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "complabels", dir) {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id").as("id"))
       val pairs = dupPairs(spark, dir)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
       val (labels, _) = starContractComponents(docs, pairs)
       labels.select(col("id").as("doc_id"), col("component"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+    }
 
   // -------------------------------------------------------- text analysis
 
@@ -3176,19 +3114,10 @@ object TextDedup {
     * before bucketing), not something each dashboard recomputes.
     */
   private[graft] def unigramXentAsset(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = xentAssetPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-xent-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+      dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "xent", dir) {
       unigramXentOf(Tables.documents(spark, dir))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val xentAssetPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Run-scoped per-doc TERM-FREQUENCY asset (the minhash-signature /
     * xent discipline one layer lower): the corpus explode + (doc,
@@ -3199,22 +3128,13 @@ object TextDedup {
     * re-exploding the corpus. At lake scale this IS the tokenized
     * corpus snapshot every LM-scoring pipeline checkpoints first.
     */
-  private[graft] def termFreqAsset(spark: SparkSession, dir: String): DataFrame = {
-    val path = tfAssetPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-tf-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+  private[graft] def termFreqAsset(spark: SparkSession, dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "tf", dir) {
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), explode(toks).as("token"))
         .groupBy(col("doc_id"), col("source"), col("token"))
         .agg(count(lit(1)).as("m"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val tfAssetPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** t12's body over any documents frame — per-doc (doc_id, n_tokens,
     * xent), unordered and unlimited so rollups (p21's CCNet buckets)
@@ -3277,19 +3197,10 @@ object TextDedup {
     * LM pipeline checkpoints beside the tokenized snapshot.
     */
   private[graft] def bigramFreqAsset(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = bigramAssetPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-bigram-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+      dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "bigram", dir) {
       bigramFreqOf(Tables.documents(spark, dir))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val bigramAssetPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** The (doc_id, split, bigram, m) count table over any documents
     * frame — [[bigramFreqAsset]]'s body, frame-generic for specs and
@@ -3877,11 +3788,8 @@ object TextDedup {
     * (doc_id, component) table.
     */
   private[graft] def unifiedLabels(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = unifiedLabelPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-unified-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+      dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "unified", dir) {
       val textE = dupPairs(spark, dir).select(col("id_a"), col("id_b"))
       val imgE = graft.multimodal.Multimodal
         .phashPairsOf(graft.multimodal.Multimodal.phashAsset(spark, dir))
@@ -3893,13 +3801,7 @@ object TextDedup {
       val docs = Tables.documents(spark, dir).select(col("doc_id").as("id"))
       val (labels, _) = starContractComponents(docs, edges)
       labels.select(col("id").as("doc_id"), col("component"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val unifiedLabelPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Cross-modal dedup savings ledger (p20): the d23 closure rolled up
     * to the per-source token economics — what fraction of each
@@ -4676,23 +4578,14 @@ object TextDedup {
     * token count.
     */
   private[graft] def winnowLabels(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = winnowLabelPaths.computeIfAbsent(dir, _ => {
-      val p = graft.RunAssets.register(
-        s"${System.getProperty("java.io.tmpdir")}/graft-winnowlabels-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}.parquet")
+      dir: String): DataFrame =
+    graft.RunAssets.asset(spark, "winnowlabels", dir) {
       val ids = Tables.documents(spark, dir).select(col("doc_id").as("id"))
       val pairs = winnowPairs(spark, dir)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
       val (labels, _) = starContractComponents(ids, pairs)
       labels.select(col("id").as("doc_id"), col("component"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
-  private val winnowLabelPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   private def dedupEpochsOf(spark: SparkSession, dir: String,
       labels: DataFrame): DataFrame = {
@@ -5135,29 +5028,30 @@ object TextDedup {
     */
   private[graft] def d34StandingAssets(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val (pPath, lPath) = standingAssetPaths.computeIfAbsent(dir, _ => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft-standing-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}"
-      val pp = graft.RunAssets.register(s"$base-postings.parquet")
-      val lp = graft.RunAssets.register(s"$base-ledger.parquet")
-      val standing = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"))
-        .filter(col("doc_id") % 5 =!= 0)
+    // a def: a memo hit reads no documents footer
+    def standing = Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"))
+      .filter(col("doc_id") % 5 =!= 0)
+    def postings(idx: => DataFrame) =
+      graft.RunAssets.asset(spark, "standing-postings", dir)(idx)
+    // the ledger builds first, from a held index that its postings write
+    // reads too: a ledger built from the read-back postings asset (three
+    // scans of it) was slower at sf0.1 (SCALE.md, "Run-scoped assets:
+    // one memo")
+    val ledger = graft.RunAssets.asset(spark, "standing-ledger", dir) {
       val sIdx = shingleIndex(standing).held()
-      sIdx.count() // eager: index write + ledger build both read it
-      sIdx.write.mode("overwrite").parquet(pp)
+      postings(sIdx)
       val sSizes = sIdx.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val (sLabels, _) = starContractComponents(
         standing.select(col("doc_id").as("id")),
         jaccardEdgesBetween(sIdx, sSizes, sIdx, sSizes, strict = true))
-      sLabels.write.mode("overwrite").parquet(lp)
+      // the contraction checkpoints its edges on entry; the labels no
+      // longer read the index
       sIdx.unpersist()
-      (pp, lp)
-    })
-    (spark.read.parquet(pPath), spark.read.parquet(lPath))
+      sLabels
+    }
+    (postings(shingleIndex(standing)), ledger)
   }
-  private val standingAssetPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   def d34IncrementalComponents(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
@@ -5206,29 +5100,18 @@ object TextDedup {
     */
   private[graft] def d34wStandingAssets(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val (pPath, lPath) = winnowStandingPaths.computeIfAbsent(dir, _ => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft-wstanding-" +
-        s"$dupPairRunId-${dupPairSeq.getAndIncrement()}"
-      val pp = graft.RunAssets.register(s"$base-postings.parquet")
-      val lp = graft.RunAssets.register(s"$base-ledger.parquet")
-      val standing = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"))
-        .filter(col("doc_id") % 5 =!= 0)
+    def standing = Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"))
+      .filter(col("doc_id") % 5 =!= 0)
+    val post = graft.RunAssets.asset(spark, "wstanding-postings", dir)(
       winnowCapped(winnowLocalSelect(standing, WinnowW, WinnowWideHex),
-          WinnowSweepCap)
-        .write.mode("overwrite").parquet(pp)
-      val post = spark.read.parquet(pp)
-      val (sLabels, _) = starContractComponents(
-        standing.select(col("doc_id").as("id")),
+        WinnowSweepCap))
+    val ledger = graft.RunAssets.asset(spark, "wstanding-ledger", dir)(
+      starContractComponents(standing.select(col("doc_id").as("id")),
         winnowPairsOf(post)
-          .select(col("id_a").as("src"), col("id_b").as("dst")))
-      sLabels.write.mode("overwrite").parquet(lp)
-      (pp, lp)
-    })
-    (spark.read.parquet(pPath), spark.read.parquet(lPath))
+          .select(col("id_a").as("src"), col("id_b").as("dst")))._1)
+    (post, ledger)
   }
-  private val winnowStandingPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   /** d34 over the WINNOW-BOOTSTRAPPED standing ledger (d34w) — the
     * at-scale incremental-maintenance leg. The arriving shard

@@ -82,7 +82,11 @@ class BbhaSpec extends AnyFunSuite {
     for ((key, value, extra) <- Seq[(String, String, Map[String, String])](
         ("n-stars", "0", Map()), ("bbha-iterations", "-1", Map()),
         ("n-stars", "abc", Map()), ("random-state", "x", Map()),
-        ("cv-folds", "0", Map("model" -> "svm")))) {
+        ("cv-folds", "0", Map("model" -> "svm")), ("model", "foo", Map()),
+        ("clustering-algorithm", "dbscan", Map()),
+        ("clustering-scoring-method", "c_index", Map()),
+        ("number-of-clusters", "0", Map()), ("algorithm", "7", Map()),
+        ("number-of-workers", "-2", Map()))) {
       val e = intercept[IllegalArgumentException] {
         Main.buildConfig(required ++ extra + (key -> value))
       }

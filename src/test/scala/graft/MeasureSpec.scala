@@ -24,6 +24,17 @@ class MeasureSpec extends AnyFunSuite {
     assert(wide("spark.io.compression.codec") == "zstd")
   }
 
+  test("SPARK_GRAFT_CPUS: unset is 32; a non-integer or a count below 1 " +
+      "fails naming the variable") {
+    assert(Measure.cpus(None) == 32)
+    assert(Measure.cpus(Some("8")) == 8)
+    for (bad <- Seq("x", "0", "-4", "2.5")) {
+      val e = intercept[IllegalArgumentException](Measure.cpus(Some(bad)))
+      assert(e.getMessage.contains(s"SPARK_GRAFT_CPUS must be an integer >= 1, got '$bad'"),
+        e.getMessage)
+    }
+  }
+
   test("rehearsal arguments: a list longer than the usage, or a " +
       "non-integer numeric argument, fails before any session starts") {
     // the old 8-argument LedgerRehearsal form, with the deleted store

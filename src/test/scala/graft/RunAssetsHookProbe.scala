@@ -8,7 +8,8 @@ import java.nio.file.Files
   * asserts both trees are GONE afterwards, i.e. the hook actually runs
   * and actually deletes, which no in-JVM test can observe (the suite's
   * own hook fires only after the suite can no longer assert).
-  * RunAssets has no Spark dependency, so the probe JVM is cheap.
+  * The probe only registers paths and starts no Spark session, so the
+  * probe JVM is cheap.
   */
 object RunAssetsHookProbe {
   def main(args: Array[String]): Unit = {

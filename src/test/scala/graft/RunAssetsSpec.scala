@@ -10,6 +10,24 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RunAssetsSpec extends AnyFunSuite {
 
+  /** A fresh copy of the sf0.001 corpus, so no other suite has built
+    * (and memoized) an asset over it yet. */
+  private def mkCopy(tag: String): String = {
+    val src = Paths.get("/root/testdata/sf0.001/documents.parquet")
+    val d = Files.createTempDirectory(s"graft-order-$tag")
+    // the fixture is single-FILE parquet; keep directory support in
+    // case its layout ever changes
+    if (Files.isDirectory(src)) {
+      val tgt = Files.createDirectory(d.resolve("documents.parquet"))
+      Files.list(src).forEach(f =>
+        Files.copy(f, tgt.resolve(f.getFileName.toString)))
+    } else Files.copy(src, d.resolve("documents.parquet"))
+    d.toString
+  }
+
+  private def count(prefix: String): Int =
+    RunAssets.registered.count(_.contains(prefix))
+
   // NOTE: specs exercise the single-path `drop`, never the global
   // `cleanup()` — that drain belongs to the JVM shutdown hook alone,
   // because other suites' memoized asset paths must stay readable for
@@ -49,7 +67,7 @@ class RunAssetsSpec extends AnyFunSuite {
       "probe JVM (r12 verdict, directive 6)") {
     // in-JVM tests can only exercise drop(); whether the HOOK fires and
     // removes registered trees is observable only from outside. Launch
-    // a bare probe JVM (RunAssets has no Spark dependency), let it exit
+    // a bare probe JVM (it starts no Spark session), let it exit
     // normally, and assert its registered trees are gone.
     val java = s"${System.getProperty("java.home")}/bin/java"
     val p = new ProcessBuilder(java, "-cp",
@@ -73,18 +91,6 @@ class RunAssetsSpec extends AnyFunSuite {
     // assets forced in opposite orders, byte-identical query results.
     val spark = SparkTestSession.spark
     import graft.queries.TextDedup
-    val src = Paths.get("/root/testdata/sf0.001/documents.parquet")
-    def mkCopy(tag: String): String = {
-      val d = Files.createTempDirectory(s"graft-order-$tag")
-      // the driver writes single-FILE parquet; keep directory support
-      // in case the fixture layout ever changes
-      if (Files.isDirectory(src)) {
-        val tgt = Files.createDirectory(d.resolve("documents.parquet"))
-        Files.list(src).forEach(f =>
-          Files.copy(f, tgt.resolve(f.getFileName.toString)))
-      } else Files.copy(src, d.resolve("documents.parquet"))
-      d.toString
-    }
     val dirA = mkCopy("a")
     val dirB = mkCopy("b")
     def run(dir: String, names: Seq[String]): Map[String, Seq[String]] =
@@ -105,5 +111,47 @@ class RunAssetsSpec extends AnyFunSuite {
     order.foreach(n => assert(a(n) == b(n),
       s"$n drifts under reversed asset build order"))
     assert(a("pairs").nonEmpty && a("labels").nonEmpty)
+  }
+
+  test("two first touches of one asset at once build it once: one path, " +
+      "one registration") {
+    val spark = SparkTestSession.spark
+    val dir = mkCopy("race")
+    val before = count("graft-tf-")
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val legs = (1 to 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Set[String]] {
+          def call(): Set[String] = {
+            start.await()
+            graft.queries.TextDedup.termFreqAsset(spark, dir).inputFiles.toSet
+          }
+        }))
+      val Seq(a, b) = legs.map(_.get())
+      assert(a.nonEmpty && a == b)
+      assert(count("graft-tf-") == before + 1)
+      val path = RunAssets.registered.filter(_.contains("graft-tf-")).last
+      assert(a.forall(_.contains(path)), s"$a not under $path")
+    } finally pool.shutdown()
+  }
+
+  test("a build that throws records nothing: the next call builds and " +
+      "registers again") {
+    val spark = SparkTestSession.spark
+    val dir = mkCopy("retry")
+    val before = count("graft-spec-retry-")
+    val e = intercept[IllegalStateException](
+      RunAssets.asset(spark, "spec-retry", dir)(
+        throw new IllegalStateException("build failed")))
+    assert(e.getMessage == "build failed")
+    assert(count("graft-spec-retry-") == before + 1)
+    val df = RunAssets.asset(spark, "spec-retry", dir)(spark.range(3).toDF("id"))
+    assert(df.count() == 3)
+    assert(count("graft-spec-retry-") == before + 2)
+    // built once more, not again on a third touch
+    RunAssets.asset(spark, "spec-retry", dir)(
+      throw new IllegalStateException("rebuilt"))
+    assert(count("graft-spec-retry-") == before + 2)
   }
 }
